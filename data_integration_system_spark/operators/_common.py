@@ -16,8 +16,6 @@ hash aggregate with map-side partials.
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -104,96 +102,29 @@ def halve_trunc(x: int) -> int:
 
 
 def local_rows_df(spark, rows, schema):
-    """Small literal row-sets as an Arrow-backed LocalTableScan.
+    """Small literal row-sets (``schema``: DDL string or StructType) as a
+    JVM-only scan: a LocalTableScan under the Arrow local-relation
+    threshold, an Arrow-batch scan past it, never a pickled Python RDD
+    (a write over one spawns a Python worker per task: ~5.4 s for a
+    one-row parquet append vs 0.2 s, SCALE.md r13).  The rows go to the
+    JVM as a pyarrow Table, whatever the session's Arrow confs; no conf
+    is touched, so concurrent callers need no lock.  Naive datetimes
+    are read in the session time zone."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
 
-    ``spark.createDataFrame(list_of_tuples, schema)`` always builds a
-    pickled-Python-RDD scan (the Arrow fast path only applies to pandas
-    input), and a WRITE task whose lineage re-evaluates a Python RDD
-    spawns a fresh Python worker per write — measured ~5.4 s for a
-    single-row parquet append on this rig vs 0.2 s through a
-    LocalTableScan (SCALE.md r13; an ACTION on the same RDD is ~0.4 s —
-    the penalty is specific to the write path).  Routing literal rows
-    through pandas makes the plan a LocalTableScan: write tasks stay
-    JVM-only, and every metadata write (index meta/codebooks, job-log
-    status appends, checkpoint state rows) drops to disk-speed.
-
-    Falls back to the classic path for empty row-sets (no job runs on
-    an empty frame, so there is nothing to save).
-
-    CONTRACT — small literal row-sets only.  The LocalTableScan
-    guarantee rides on the Arrow createDataFrame fast path; with
-    ``spark.sql.execution.arrow.pyspark.fallback.enabled`` (default
-    true) an Arrow-unconvertible value, or a row-set past the Arrow
-    local-relation threshold
-    (``spark.sql.execution.arrow.maxRecordsPerBatch`` spill to an RDD
-    plan), silently rebuilds the pickled-RDD plan and quietly restores
-    the ~28x write tax this helper removes.  The guard below checks the
-    produced plan really is a LocalRelation for every call at or under
-    _LOCAL_ROWS_ASSERT_BOUND rows (all intended call sites are tiny
-    metadata row-sets).  On a miss it emits a LOUD warning and returns
-    the fallback frame — many call sites are durability paths
-    (streaming checkpoint/status writes) where slow beats outage — and
-    raises only under LOCAL_ROWS_STRICT (on in the test suite, so the
-    plan shape can't silently regress in CI).
-
-    Thread safety: the session conf is process-global, so the
-    set/convert/restore window is serialized under a module lock —
-    concurrent callers (multiple streaming queries' foreachBatch writes)
-    can no longer interleave a finally-restore into another thread's
-    conversion (the r14 ADVICE race)."""
-    if not rows:
-        return spark.createDataFrame([], schema)
-    import pandas as pd
-
-    names = spark.createDataFrame([], schema).columns
-    pdf = pd.DataFrame([tuple(r) for r in rows], columns=names)
-    # the Arrow fast path is what produces a LocalRelation, and
-    # spark.sql.execution.arrow.pyspark.enabled defaults to FALSE — on a
-    # plain session (the external driver's, notably) createDataFrame
-    # (pandas) would quietly take the pickled-RDD path and restore the
-    # write tax.  Enable it around the conversion (runtime-settable,
-    # restored after) so the plan shape is session-independent.
-    key = "spark.sql.execution.arrow.pyspark.enabled"
-    with _SESSION_CONF_LOCK:
-        prev = spark.conf.get(key)
-        try:
-            spark.conf.set(key, "true")
-            df = spark.createDataFrame(pdf, schema)
-        finally:
-            spark.conf.set(key, prev)
-    if len(rows) <= _LOCAL_ROWS_ASSERT_BOUND:
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-        if "LocalRelation" not in plan.split("\n", 1)[0]:
-            msg = (
-                "local_rows_df: Arrow fast path fell back to a pickled-RDD "
-                "plan (write tasks would spawn Python workers; ~28x write "
-                f"tax — see SCALE.md r13). Optimized plan head: "
-                f"{plan.splitlines()[0]!r}. An Arrow-unconvertible value in "
-                "the rows is the usual cause."
-            )
-            if LOCAL_ROWS_STRICT:
-                raise AssertionError(msg)
-            import warnings
-
-            warnings.warn(msg, RuntimeWarning, stacklevel=2)
-    return df
-
-
-#: local_rows_df plan-shape assertion bound: every intended call site is a
-#: handful of metadata rows; 4096 comfortably covers them while keeping the
-#: check off any hypothetical bulk path.
-_LOCAL_ROWS_ASSERT_BOUND = 4096
-
-#: Escalate the local_rows_df plan-shape check from loud-warning to hard
-#: failure.  Default off: metadata writes are durability paths and must
-#: degrade to slow, not crash, when a deployment's Arrow config
-#: legitimately falls back (lowered maxRecordsPerBatch, unconvertible
-#: value).  The test suite flips it on (tests/conftest.py) so a plan-shape
-#: regression still fails CI loudly.
-LOCAL_ROWS_STRICT = False
-
-#: Serializes session-conf set/restore windows (local_rows_df's Arrow
-#: toggle).  The conf is process-global; without the lock, two concurrent
-#: callers interleave so one thread's restore lands mid-conversion of the
-#: other (r14 ADVICE).
-_SESSION_CONF_LOCK = threading.Lock()
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema, timestamp_utc=False)
+    if rows:
+        table = pa.Table.from_arrays(
+            [
+                pa.array(col, type=f.type)
+                for col, f in zip(zip(*rows), arrow_schema)
+            ],
+            schema=arrow_schema,
+        )
+    else:
+        table = arrow_schema.empty_table()
+    return spark.createDataFrame(table, schema)

@@ -102,7 +102,8 @@ def pagerank_int(
     All BIGINT ops — associative, order-independent, engine-identical.
 
     Edge sets at or under ``_PR_LOCAL_EDGE_CAP`` take a bounded
-    driver-side fast path (r18): the weighted edge relation of a TYPE
+    driver-side fast path (r18), decided by ONE capped collect that is
+    also the path's input: the weighted edge relation of a TYPE
     graph is |types|² at most, so 8 distributed rounds (each one
     shuffle + an eager lineage cut) priced ~2.5 s of fixed job overhead
     at sf0.1 for microseconds of integer arithmetic.  The recurrence is
@@ -114,13 +115,14 @@ def pagerank_int(
     localCheckpoint cuts lineage like the crawl/CC loops.  Dangling
     mass is dropped on both engines identically (the standard
     simplification)."""
-    edges = edges.localCheckpoint()
-    if edges.count() <= _PR_LOCAL_EDGE_CAP:
+    head = edges.limit(_PR_LOCAL_EDGE_CAP + 1).collect()
+    if len(head) <= _PR_LOCAL_EDGE_CAP:
         node_type = edges.schema[0].dataType.simpleString()
-        edge_rows = [(r[0], r[1], int(r[2])) for r in edges.collect()]
+        edge_rows = [(r[0], r[1], int(r[2])) for r in head]
         return _pagerank_int_local(
             edge_rows, iters, node_type, edges.sparkSession
         )
+    edges = edges.localCheckpoint()
     out_w = edges.groupBy("src").agg(F.sum("n").alias("total"))
     nodes = (
         edges.select(F.col("src").alias("node"))

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from data_integration_system_spark.catalog import table
 from data_integration_system_spark.functions.vectors import cosine
+from data_integration_system_spark.pipeline.fsutil import exists
 from data_integration_system_spark.registry import query
 
 _N_QUERIES = 8
@@ -1761,7 +1762,7 @@ def append_ivfpq_index(
     from data_integration_system_spark.pipeline import index_manifest as im
 
     man = im.read_manifest(spark, index_path)
-    has_vectors = _fs_exists(spark, f"{index_path}/vectors")
+    has_vectors = exists(spark, f"{index_path}/vectors")
     if has_vectors:
         # an SQ8 vectors relation (store_vectors="sq8") must be appended
         # in its own encoding — detected from the manifest's stored
@@ -1835,9 +1836,9 @@ def _write_ivfpq_manifest(spark: SparkSession, index_path: str) -> None:
     # r14+: builds co-locate the raw vectors inside the index; a
     # pre-vectors index backfilled with a manifest simply lacks the
     # relation (queries fall back to caller-supplied vectors / pure ADC)
-    if _fs_exists(spark, f"{index_path}/vectors"):
+    if exists(spark, f"{index_path}/vectors"):
         relations["vectors"] = "cent_id"
-    if _fs_exists(spark, f"{index_path}/rotation"):  # OPQ builds (r15)
+    if exists(spark, f"{index_path}/rotation"):  # OPQ builds (r15)
         relations["rotation"] = None
     write_manifest(spark, index_path, relations, lockstep=_IVFPQ_LOCKSTEP)
 
@@ -1847,12 +1848,6 @@ def _write_ivfpq_manifest(spark: SparkSession, index_path: str) -> None:
 #: index-resident re-rank (inner join), so divergence refuses the commit
 #: (ManifestLockstepError) instead of being committed into the manifest.
 _IVFPQ_LOCKSTEP = [("codes", "vectors")]
-
-
-def _fs_exists(spark: SparkSession, path: str) -> bool:
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)
 
 
 def delete_from_ivfpq_index(spark: SparkSession, index_path: str, vec_ids) -> int:
@@ -2032,7 +2027,7 @@ def _index_resident_vectors(
         if "vq" in df.columns:
             return _sq8_decode(df)
         return df.select("vec_id", "embedding")
-    if not _fs_exists(spark, f"{index_path}/vectors"):
+    if not exists(spark, f"{index_path}/vectors"):
         return None
     df = spark.read.parquet(f"{index_path}/vectors").filter(
         F.col("cent_id").isin(probed)
@@ -3041,14 +3036,12 @@ class IvfPqIndexHandle:
 
     Thread safety: open once, share freely — `.query(...)` only READS
     handle state (manifest dict, numpy centroid matrix, codebook
-    broadcast), and the two session-global conf windows its reads pass
-    through (the manifest reader's discovery-threshold raise, the
-    metadata writer's Arrow toggle) are serialized under module locks
-    (index_manifest._DISCOVERY_CONF_LOCK, _common._SESSION_CONF_LOCK —
-    r15, closing the r14 ADVICE race).  The measured 16-thread ladder
-    (SCALE.md r14: 0.83/2.37/2.75 batches/s at 1/4/16 threads) is the
-    supported shape; `reopen()` is NOT safe concurrent with queries —
-    swap in a fresh handle instead (open-new-then-replace)."""
+    broadcast), and the one session-global conf window its reads pass
+    through (the manifest reader's discovery-threshold raise) is
+    serialized under index_manifest._DISCOVERY_CONF_LOCK.  The measured
+    16-thread ladder (SCALE.md r14: 0.83/2.37/2.75 batches/s at 1/4/16
+    threads) is the supported shape; `reopen()` is NOT safe concurrent
+    with queries — swap in a fresh handle instead (open-new-then-replace)."""
 
     def __init__(self, spark: SparkSession, index_path: str):
         self.spark = spark

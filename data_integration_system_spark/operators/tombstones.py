@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_integration_system_spark.pipeline.fsutil import exists
+
 #: below this count the delete set ships as a plain id list — consumers
 #: that filter inside an existing scan closure (numpy membership test)
 #: pay ZERO plan cost for it; above it, a localCheckpointed DataFrame
@@ -40,12 +42,6 @@ INSET_CAP = 100_000
 #: measured on the ivfpq shortlist, SCALE.md r16) — beyond it,
 #: ``exclude_ids`` switches to a broadcast anti-join.
 _ISIN_LITERAL_CAP = 256
-
-
-def _exists(spark: SparkSession, path: str) -> bool:
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)
 
 
 def append_tombstones(
@@ -62,7 +58,7 @@ def append_tombstones(
         )
     fresh = ids.select(F.col(id_col).cast("long")).distinct()
     path = f"{index_path}/tombstones"
-    if _exists(spark, path):
+    if exists(spark, path):
         fresh = fresh.join(spark.read.parquet(path), id_col, "left_anti")
     # tiny relation: coalesce(1) keeps file count = delete batches
     fresh = fresh.coalesce(1).localCheckpoint()  # freeze before any write
@@ -77,7 +73,7 @@ def load_tombstones(spark: SparkSession, index_path: str, id_col: str):
     deletes), a plain id list (≤ INSET_CAP), or a localCheckpointed
     DataFrame (pathological sizes)."""
     path = f"{index_path}/tombstones"
-    if not _exists(spark, path):
+    if not exists(spark, path):
         return None
     df = spark.read.parquet(path)
     rows = df.limit(INSET_CAP + 1).collect()
@@ -123,7 +119,7 @@ def drop_tombstones_for(
     the rewrite leaves the id hidden until the at-least-once redelivery
     re-runs the append."""
     path = f"{index_path}/tombstones"
-    if not _exists(spark, path):
+    if not exists(spark, path):
         return
     tomb = spark.read.parquet(path)
     kept = tomb.join(

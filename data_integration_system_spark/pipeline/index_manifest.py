@@ -53,6 +53,8 @@ import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
+from data_integration_system_spark.pipeline.fsutil import hadoop_path
+
 MANIFEST_NAME = "_manifest.json"
 
 #: Serializes the parallelPartitionDiscovery.threshold set/restore window
@@ -64,14 +66,6 @@ MANIFEST_NAME = "_manifest.json"
 #: is driver-side relation resolution only (microseconds per file) — query
 #: EXECUTION is outside the lock.
 _DISCOVERY_CONF_LOCK = threading.Lock()
-
-
-def _jpath(spark: SparkSession, path: str):
-    return spark._jvm.org.apache.hadoop.fs.Path(path)
-
-
-def _fs(spark: SparkSession, path: str):
-    return _jpath(spark, path).getFileSystem(spark._jsc.hadoopConfiguration())
 
 
 def _local_path(uri: str) -> str | None:
@@ -118,8 +112,7 @@ def _list_data_files(spark: SparkSession, root: str) -> list[tuple[str, int]]:
         out.sort()
         return out
 
-    fs = _fs(spark, root)
-    jroot = _jpath(spark, root)
+    jroot, fs = hadoop_path(spark, root)
     if not fs.exists(jroot):
         return []
     root_uri = fs.makeQualified(jroot).toString().rstrip("/")
@@ -146,8 +139,8 @@ def _local_root(spark: SparkSession, root: str) -> str | None:
     partitions because every footer read created a fresh JVM Path +
     FileSystem through py4j; hoisting the qualification removes every
     per-file JVM round-trip."""
-    fs = _fs(spark, root)
-    qualified = fs.makeQualified(_jpath(spark, root)).toString()
+    jroot, fs = hadoop_path(spark, root)
+    qualified = fs.makeQualified(jroot).toString()
     return _local_path(qualified)
 
 
@@ -513,9 +506,8 @@ def _commit(spark: SparkSession, index_path: str, manifest: dict) -> None:
             os.fsync(fh.fileno())
         os.replace(tmp_path, f"{lroot}/{MANIFEST_NAME}")
         return
-    fs = _fs(spark, index_path)
-    final = _jpath(spark, f"{index_path}/{MANIFEST_NAME}")
-    tmp = _jpath(spark, f"{index_path}/.{MANIFEST_NAME}.tmp")
+    final, fs = hadoop_path(spark, f"{index_path}/{MANIFEST_NAME}")
+    tmp, _ = hadoop_path(spark, f"{index_path}/.{MANIFEST_NAME}.tmp")
     stream = fs.create(tmp, True)
     try:
         stream.write(data)
@@ -529,8 +521,7 @@ def _commit(spark: SparkSession, index_path: str, manifest: dict) -> None:
 
 def read_manifest(spark: SparkSession, index_path: str) -> dict | None:
     """The committed manifest, or None (pre-manifest index / first build)."""
-    fs = _fs(spark, index_path)
-    final = _jpath(spark, f"{index_path}/{MANIFEST_NAME}")
+    final, fs = hadoop_path(spark, f"{index_path}/{MANIFEST_NAME}")
     if not fs.exists(final):
         return None
     stream = fs.open(final)

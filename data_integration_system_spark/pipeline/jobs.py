@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import dataclasses
 import datetime as _dt
+import gc
 import json
 import uuid
 from typing import Any
@@ -430,6 +431,14 @@ def run_job(
     try:
         cfg = config_from_job(job)
         pages = crawl(spark, list(job.get("start_urls", [])), cfg, fetch_fn)
+        # The BFS rounds' plans (and earlier jobs') pin their broadcast
+        # relations (a whole memory page each: 64 MB under the default
+        # local heap) until the context cleaner sees the plan go, and
+        # py4j handles sit in reference cycles (JavaObject <-> its cached
+        # JavaMembers), so only Python's cycle collector lets them go.
+        # Collecting here frees them while the write below runs, not
+        # whenever the collector next gets to them.
+        gc.collect()
         n = pages.count()
         # per-domain page counts for the report, via the salted two-phase
         # aggregation: a crawl's domain distribution is maximally skewed

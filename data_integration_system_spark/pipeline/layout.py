@@ -32,6 +32,7 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from data_integration_system_spark.pipeline.fsutil import copy_tree, hadoop_path
 from data_integration_system_spark.pipeline.snapshots import (
@@ -679,18 +680,19 @@ def _copy_trees(
     from concurrent.futures import ThreadPoolExecutor
 
     sp, sfs = hadoop_path(spark, src_root)
-    if sfs.getScheme() == "file":
+    dp, dfs = hadoop_path(spark, dst_root)
+    if sfs.getScheme() == "file" and dfs.getScheme() == "file":
         # local-filesystem fast path (r18): each Hadoop copy_tree is ~4
         # py4j round-trips + FileUtil setup — ~78 ms/partition even
-        # pooled, 9.7 s of the re-priced 2,000-site purge.  On file://
-        # the same byte copy (data + .crc sidecars verbatim) is plain
-        # shutil, no gateway traffic.  Non-local schemes (HDFS, s3a)
-        # keep the Hadoop path below.
+        # pooled, 9.7 s of the re-priced 2,000-site purge.  With BOTH
+        # ends on file:// the same byte copy (data + .crc sidecars
+        # verbatim) is plain shutil, no gateway traffic.  Any other
+        # scheme on either end (HDFS, s3a) keeps the Hadoop path below.
         import os as _os
         import shutil as _shutil
 
         src_base = sp.toUri().getPath()
-        dst_base = hadoop_path(spark, dst_root)[0].toUri().getPath()
+        dst_base = dp.toUri().getPath()
         _os.makedirs(dst_base, exist_ok=True)
         with ThreadPoolExecutor(max_workers=min(32, len(names))) as pool:
             list(
@@ -822,30 +824,26 @@ def purge_snapshot(
     ]
     if any(v not in by_value for v in hit_values):
         # inference-LOSSY dir strings (a dir '01' is type-inferred to 1,
-        # which formats back as '1'): re-locate through a plain
-        # directory read with partition type inference disabled, so the
-        # scanned values ARE the unescaped dir strings.  Rare path —
-        # only taken when the fast typed scan cannot match a dir — and
-        # the loud failure below still guards anything left over.
-        from data_integration_system_spark.operators._common import (
-            _SESSION_CONF_LOCK,
+        # which formats back as '1'): re-locate through a directory read
+        # whose schema declares the partition column as string, so the
+        # scanned values ARE the unescaped dir strings.  A per-read
+        # schema, not a session conf toggle: concurrent partitioned
+        # reads keep their inferred types.  Rare path — only taken when
+        # the fast typed scan cannot match a dir — and the loud failure
+        # below still guards anything left over.
+        raw_schema = StructType(
+            [f for f in cur.schema.fields if f.name != part_col]
+            + [StructField(part_col, StringType())]
         )
-
-        _INF = "spark.sql.sources.partitionColumnTypeInference.enabled"
-        with _SESSION_CONF_LOCK:
-            prev_inf = spark.conf.get(_INF)
-            try:
-                spark.conf.set(_INF, "false")
-                hit_values = [
-                    r[0]
-                    for r in spark.read.parquet(f"{root}/{version}")
-                    .join(ids_df, key_col, "left_semi")
-                    .select(F.col(part_col).cast("string"))
-                    .distinct()
-                    .collect()
-                ]
-            finally:
-                spark.conf.set(_INF, prev_inf)
+        hit_values = [
+            r[0]
+            for r in spark.read.schema(raw_schema)
+            .parquet(f"{root}/{version}")
+            .join(ids_df, key_col, "left_semi")
+            .select(part_col)
+            .distinct()
+            .collect()
+        ]
     affected: list[str] = []  # hive-escaped dir-value strings
     for raw in hit_values:
         key = raw  # Spark-formatted string (or None), never re-formatted

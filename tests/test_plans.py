@@ -771,32 +771,20 @@ def test_local_rows_df_concurrent_threads_keep_conf(spark):
     assert spark.conf.get(key) == before
 
 
-def test_local_rows_df_fallback_warns_by_default_raises_under_strict(spark):
-    """A legitimate Arrow fallback (forced here by zeroing the Arrow
-    local-relation threshold) must DEGRADE on durability paths: loud
-    RuntimeWarning + a working (slow) frame by default, hard failure
-    only under LOCAL_ROWS_STRICT (CI's setting, so the plan shape can't
-    silently regress)."""
-    import warnings
-
-    import pytest
-
-    from data_integration_system_spark.operators import _common
+def test_local_rows_df_past_local_relation_threshold_stays_jvm(spark):
+    """Past the Arrow local-relation threshold (forced here by zeroing
+    it) the frame is an Arrow-batch RDD scan instead of a LocalRelation
+    — still JVM-only: the rows round-trip and the lineage holds no
+    PythonRDD, so a write over it spawns no Python worker."""
     from data_integration_system_spark.operators._common import local_rows_df
 
     key = "spark.sql.execution.arrow.localRelationThreshold"
     prev = spark.conf.get(key)
-    prev_strict = _common.LOCAL_ROWS_STRICT
     try:
         spark.conf.set(key, "0")
-        with pytest.raises(AssertionError, match="pickled-RDD"):
-            local_rows_df(spark, [(1, "a")], "n long, s string")
-        _common.LOCAL_ROWS_STRICT = False
-        with warnings.catch_warnings(record=True) as caught:
-            warnings.simplefilter("always")
-            df = local_rows_df(spark, [(1, "a")], "n long, s string")
-        assert any("pickled-RDD" in str(w.message) for w in caught)
-        assert [(r.n, r.s) for r in df.collect()] == [(1, "a")]
+        df = local_rows_df(spark, [(1, "a"), (2, None)], "n long, s string")
+        lineage = df._jdf.queryExecution().toRdd().toDebugString()
+        assert "PythonRDD" not in lineage, lineage
+        assert sorted((r.n, r.s) for r in df.collect()) == [(1, "a"), (2, None)]
     finally:
-        _common.LOCAL_ROWS_STRICT = prev_strict
         spark.conf.set(key, prev)
