@@ -22,10 +22,10 @@ from pyspark.sql import functions as F
 from data_integration_system_spark.catalog import table
 from data_integration_system_spark.functions.hashing import content_hash, normalize_ws
 from data_integration_system_spark.operators._common import (
-    cluster_for_partitioned_write,
     drop_hot_keys,
     local_rows_df,
 )
+from data_integration_system_spark.pipeline import bucket_index
 from data_integration_system_spark.registry import query
 
 
@@ -365,6 +365,16 @@ def lsh_candidate_pairs(bands: DataFrame, max_bucket: int | None = _MAX_BUCKET) 
 _INDEX_BUCKETS = 256
 
 
+def _batch_bands(docs, text_col, id_col, shingles_df, bands_df):
+    """(shingle sets, band rows) of a document batch — the caller's
+    shared copies when given (the derivations are deterministic)."""
+    if shingles_df is None:
+        shingles_df = shingle_sets(docs, text_col, id_col)
+    if bands_df is None:
+        bands_df = minhash_bands(docs, text_col, id_col, shingles_df=shingles_df)
+    return shingles_df, bands_df
+
+
 def build_minhash_index(
     spark: SparkSession,
     sf_dir: str,
@@ -372,17 +382,17 @@ def build_minhash_index(
     n_buckets: int = _INDEX_BUCKETS,
     max_bucket: int | None = _MAX_BUCKET,
 ) -> None:
-    """Materialize the LSH bands relation as a partitioned table:
-    ``{index}/bands`` partitioned by ``bucket = pmod(band_hash,
-    n_buckets)``, rows ``(band_id, band_hash, doc_id, shingles)``.
+    """Materialize the LSH bands relation as the bucketed table
+    ``{index}/bands`` keyed on band_hash (pipeline/bucket_index owns the
+    layout, meta and tombstone lifecycle), rows ``(band_id, band_hash,
+    doc_id, shingles)``.
 
     Shingle sets ride along DENORMALIZED (one copy per band row): a
     lookup then needs exactly one pruned scan — candidates arrive with
     the corpus shingles attached, no second join against a full shingle
     table.  Hot (boilerplate) buckets are dropped at WRITE time, same cap
     as lsh_candidate_pairs, so the stored index can never hand back a
-    quadratic bucket.  ``{index}/meta`` records n_buckets so build and
-    query can't silently disagree on the partitioning."""
+    quadratic bucket."""
     docs = table(spark, sf_dir, "documents")
     # spread=True: the 32-lane signature pass over the full corpus is
     # the build's CPU bill — worth the one small-input repartition
@@ -390,37 +400,10 @@ def build_minhash_index(
     bands = minhash_bands(docs, shingles_df=sh)
     if max_bucket is not None:
         bands = drop_hot_keys(bands, ["band_id", "band_hash"], max_bucket)
-    from data_integration_system_spark.operators._common import (
-        cluster_for_partitioned_write,
+    bucket_index.build(
+        spark, index_path, "bands", bands.join(sh, "doc_id"), "band_hash",
+        n_buckets,
     )
-
-    (
-        # cluster by the partition column before the partitioned write:
-        # without it every upstream task writes a sliver into every
-        # bucket dir (tasks × buckets files) and probe latency pays the
-        # file-count tax — one bucket-keyed shuffle buys 1 file/bucket,
-        # with an explicit task count so AQE can't serialize the write
-        cluster_for_partitioned_write(
-            bands.join(sh, "doc_id").withColumn(
-                "bucket", F.pmod(F.col("band_hash"), F.lit(n_buckets)).cast("int")
-            ),
-            "bucket",
-            n_buckets,
-        )
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{index_path}/bands")
-    )
-    local_rows_df(spark, [(int(n_buckets),)], "n_buckets int").coalesce(
-        1
-    ).write.mode("overwrite").parquet(f"{index_path}/meta")
-    # a rebuild compacts deletes: clear the previous generation's
-    # tombstones (operators/tombstones lifecycle)
-    from data_integration_system_spark.operators.tombstones import (
-        clear_tombstones,
-    )
-
-    clear_tombstones(spark, index_path)
 
 
 def append_minhash_index(
@@ -449,59 +432,17 @@ def append_minhash_index(
     only its own batch, so a globally-hot bucket is a REBUILD concern —
     run build_minhash_index periodically (the compaction analog) to
     re-apply the cap over the full corpus."""
-    from data_integration_system_spark.pipeline.fsutil import exists
-
-    if exists(spark, f"{index_path}/meta"):
-        n_buckets = spark.read.parquet(f"{index_path}/meta").head()["n_buckets"]
-    else:
-        local_rows_df(spark, [(int(n_buckets),)], "n_buckets int").coalesce(
-            1
-        ).write.mode("overwrite").parquet(f"{index_path}/meta")
-    sh = shingles_df if shingles_df is not None else shingle_sets(
-        new_docs, text_col, id_col
-    )
-    bands = (
-        bands_df
-        if bands_df is not None
-        else minhash_bands(new_docs, text_col, id_col, shingles_df=sh)
-    )
-    joined = bands.join(sh, "doc_id").withColumn(
-        "bucket", F.pmod(F.col("band_hash"), F.lit(n_buckets)).cast("int")
-    )
-    # bucket-clustered write, like build_minhash_index: the batch
-    # arrives in 1-2 partitions (a localCheckpointed micro-batch), so a
-    # bare partitionBy write is ONE task serially creating up to
-    # n_buckets files — measured 13-30 s vs 4-11 s clustered per sf0.1
-    # trigger (r17); clustering also keeps it at 1 file/bucket/batch
-    cluster_for_partitioned_write(joined, "bucket", n_buckets).write.mode(
-        "append"
-    ).partitionBy("bucket").parquet(f"{index_path}/bands")
-    # un-delete (upsert): a re-appended doc serves again — its fresh
-    # band rows just landed (operators/tombstones lifecycle)
-    from data_integration_system_spark.operators.tombstones import (
-        drop_tombstones_for,
-    )
-
-    drop_tombstones_for(
-        spark, index_path, new_docs.select(F.col(id_col).alias("doc_id")), "doc_id"
+    sh, bands = _batch_bands(new_docs, text_col, id_col, shingles_df, bands_df)
+    bucket_index.append(
+        spark, index_path, "bands", bands.join(sh, "doc_id"), "band_hash",
+        n_buckets, new_docs.select(F.col(id_col).alias("doc_id")),
     )
 
 
-def delete_from_minhash_index(spark: SparkSession, index_path: str, doc_ids) -> int:
-    """Logical DELETE from the minhash near-dup index (r16): tombstoned
-    docs stop appearing as MATCHES on the next query — the document
-    takedown path for the 24/7 near-dup surface (near_dup_sink keeps
-    matching new batches against everything else).  Same lifecycle as
-    the IVF-PQ tier (operators/tombstones): idempotent under
-    redelivery, re-append un-deletes with fresh band rows, the
-    scheduled build_minhash_index rebuild clears the relation and
-    compacts physically.  ``doc_ids`` is a DataFrame with ``doc_id`` or
-    an iterable of ints; returns the count of NEW tombstones."""
-    from data_integration_system_spark.operators.tombstones import (
-        append_tombstones,
-    )
-
-    return append_tombstones(spark, index_path, doc_ids, "doc_id")
+#: Logical DELETE (pipeline/bucket_index.delete): tombstoned docs stop
+#: appearing as near-dup MATCHES on the next query — the takedown path
+#: for the 24/7 near_dup_sink surface.
+delete_from_minhash_index = bucket_index.delete
 
 
 def query_minhash_index(
@@ -518,58 +459,21 @@ def query_minhash_index(
     every indexed document sharing an LSH bucket with a query document,
     verified by exact Jaccard.
 
-    The probe protocol mirrors query_ivf_index: the query docs' band
-    buckets are collected (q×8 ints) and become LITERAL partition
-    filters on the bands scan — a lookup reads <= 8/n_buckets of the
-    index, which is what makes this an index rather than a filtered full
-    scan.  Querying the corpus against itself reproduces
-    dedup_minhash_near exactly (pinned in tests).
+    The bucket probe (pipeline/bucket_index.probe) reads <= 8/n_buckets
+    of the index — what makes this an index rather than a filtered full
+    scan — and drops tombstoned candidates before the verify.  Querying
+    the corpus against itself reproduces dedup_minhash_near exactly
+    (pinned in tests).
 
     ``shingles_df``/``bands_df``: share the deterministic derivations
     with an append over the SAME batch (see append_minhash_index)."""
-    n_buckets = spark.read.parquet(f"{index_path}/meta").head()["n_buckets"]
-    qsh = shingles_df if shingles_df is not None else shingle_sets(
-        query_docs, text_col, id_col
+    qsh, qbands = _batch_bands(
+        query_docs, text_col, id_col, shingles_df, bands_df
     )
-    qbands = (
-        (
-            bands_df
-            if bands_df is not None
-            else minhash_bands(query_docs, text_col, id_col, shingles_df=qsh)
-        )
-        .withColumn("bucket", F.pmod(F.col("band_hash"), F.lit(n_buckets)).cast("int"))
-        .localCheckpoint()  # tiny; freezes the probe list for the collect
-    )
-    probe = sorted(r["bucket"] for r in qbands.select("bucket").distinct().collect())
-    idx = spark.read.parquet(f"{index_path}/bands").filter(
-        F.col("bucket").isin(probe)  # literal -> PartitionFilters
-    )
-    cand = (
-        qbands.select(
-            F.col("doc_id").alias("q_id"), "bucket", "band_id", "band_hash"
-        )
-        .join(
-            idx.select(
-                "bucket", "band_id", "band_hash",
-                F.col("doc_id").alias("c_id"), F.col("shingles").alias("c_sh"),
-            ),
-            ["bucket", "band_id", "band_hash"],
-        )
-        .filter(F.col("q_id") != F.col("c_id"))
-        # a pair colliding in several bands must verify once, not 8×
-        .dropDuplicates(["q_id", "c_id"])
-    )
-    # deleted docs must not surface as matches: drop them from the
-    # candidate pairs BEFORE the exact-Jaccard verify (also saves the
-    # verify work) — operators/tombstones lifecycle
-    from data_integration_system_spark.operators.tombstones import (
-        exclude_tombstoned,
-        load_tombstones,
-    )
-
-    cand = exclude_tombstoned(
-        cand, load_tombstones(spark, index_path, "doc_id"), "c_id"
-    )
+    cand = bucket_index.probe(
+        spark, index_path, "bands", qbands, "band_hash", on=("band_id",),
+        carry=(F.col("shingles").alias("c_sh"),),
+    ).dropDuplicates(["q_id", "c_id"])  # multi-band collisions verify once
     qs = qsh.select(F.col("doc_id").alias("q_id"), F.col("shingles").alias("q_sh"))
     inter = F.size(F.array_intersect("q_sh", "c_sh")).cast("double")
     uni = (F.size("q_sh") + F.size("c_sh")).cast("double") - inter

@@ -1364,45 +1364,101 @@ def _finish_topk(
 _IVFPQ_NPROBE = 3
 
 
-def _probe_sets(qdf: DataFrame, cent: DataFrame, nprobe: int) -> dict:
+def _probe_sets(q_rows: list, cent_rows: list, nprobe: int) -> dict:
     """Per-query probe assignment: ``{q_id: {cent_id, ...}}`` for the
-    ``nprobe`` nearest centroids (cosine, ties to lowest cent_id).  The
-    collect is |q|·nprobe rows — the index-probe protocol's driver-side
-    step that turns probe choices into literal partition filters."""
-    probe_w = Window.partitionBy("q_id").orderBy(F.col("d").desc(), "cent_id")
-    rows = (
-        qdf.crossJoin(F.broadcast(cent))
-        .select("q_id", "cent_id", cosine("qe", "centroid").alias("d"))
-        .withColumn("rn", F.row_number().over(probe_w))
-        .filter(F.col("rn") <= nprobe)
-        .select("q_id", "cent_id")
-        .collect()
-    )
-    sets: dict[int, set] = {}
-    for r in rows:
-        sets.setdefault(int(r.q_id), set()).add(int(r.cent_id))
-    return sets
+    ``nprobe`` nearest centroids by ``functions.vectors.cosine``, best
+    first, ties to the lowest cent_id.  Driver-side numpy over
+    ``(q_id, embedding)`` query rows and the k centroid rows: every
+    serving path already collects its queries for pq_shortlist, so
+    probe selection needs no Spark job of its own.
+
+    The sums are left-to-right folds over the dimensions (one loop over
+    them for the whole batch), the JVM cosine's order, so a similarity
+    is bit-identical to the Spark expression's and equal centroids tie
+    exactly (a BLAS dot may sum two equal rows in different orders and
+    break the tie either way); a zero-norm pair ranks last, where the
+    NULL cosine sorts."""
+    import numpy as np
+
+    cent_rows = sorted(cent_rows, key=lambda r: int(r.cent_id))
+    ids = np.asarray([int(r.cent_id) for r in cent_rows])
+    cmat = np.asarray([list(r.centroid) for r in cent_rows], dtype=np.float64)
+    qmat = np.asarray([list(qe) for _, qe in q_rows], dtype=np.float64)
+    qmat = qmat.reshape(len(q_rows), cmat.shape[1])
+    dots = np.zeros((len(q_rows), len(ids)))
+    qsq, csq = np.zeros(len(q_rows)), np.zeros(len(ids))
+    for j in range(cmat.shape[1]):
+        dots = dots + qmat[:, j, None] * cmat[:, j]
+        qsq = qsq + qmat[:, j] * qmat[:, j]
+        csq = csq + cmat[:, j] * cmat[:, j]
+    n = np.sqrt(qsq)[:, None] * np.sqrt(csq)
+    sims = np.where(n > 0, dots / np.where(n > 0, n, 1.0), -np.inf)
+    order = np.argsort(-sims, axis=1, kind="stable")[:, :nprobe]
+    return {
+        int(q_id): {int(c) for c in ids[row]}
+        for (q_id, _), row in zip(q_rows, order)
+    }
 
 
-def _meta_residual(meta) -> bool:
-    """Backward-compatible residual flag: pre-r13 meta rows have no
-    ``residual`` column — those indexes are flat by construction."""
-    d = meta.asDict()
-    return bool(d.get("residual", False))
+def _index_relation(
+    spark: SparkSession,
+    index_path: str,
+    rel: str,
+    manifest: dict | None,
+    probed: list | None = None,
+) -> DataFrame:
+    """One relation of an IVF-PQ index, restricted to the ``probed``
+    cent_id partitions when given: through the manifest's file list and
+    stored schema when the committed manifest lists it (no inference or
+    listing job, unprobed dirs untouched), else a directory read with
+    literal PartitionFilters — a manifest-less index, or the non-local
+    delete+rename commit window."""
+    if manifest is not None and rel in manifest.get("relations", {}):
+        from data_integration_system_spark.pipeline import index_manifest as im
+
+        return im.read_relation(
+            spark, index_path, rel, manifest=manifest, partitions=probed
+        )
+    df = spark.read.parquet(f"{index_path}/{rel}")
+    return df if probed is None else df.filter(F.col("cent_id").isin(probed))
 
 
-def _read_rotation(spark: SparkSession, index_path: str, meta) -> list | None:
+def _read_rotation(
+    spark: SparkSession, index_path: str, meta, manifest: dict | None = None
+) -> list | None:
     """The stored OPQ rotation (row-ordered nested list), or None for
     non-OPQ indexes — pre-r15 meta rows have no ``opq`` column, so
     those indexes are unrotated by construction."""
     if not bool(meta.asDict().get("opq", False)):
         return None
-    rows = spark.read.parquet(f"{index_path}/rotation").collect()
+    rows = _index_relation(spark, index_path, "rotation", manifest).collect()
     return [list(r.row) for r in sorted(rows, key=lambda r: int(r.i))]
 
 
 def _centroid_map(cent_rows: list) -> dict:
     return {int(r.cent_id): list(r.centroid) for r in cent_rows}
+
+
+def _load_frozen_state(
+    spark: SparkSession, index_path: str, manifest: dict | None
+) -> tuple:
+    """An IVF-PQ index's frozen state — ``(cent, cent_rows, books,
+    residual_centroids, rotation)`` from the centroids, meta, codebooks
+    and rotation relations — the one loader behind append_ivfpq_index
+    and IvfPqIndexHandle."""
+    cent = _index_relation(spark, index_path, "centroids", manifest)
+    cent_rows = cent.collect()
+    meta = _index_relation(spark, index_path, "meta", manifest).head()
+    books = _codebooks_from_rows(
+        _index_relation(spark, index_path, "codebooks", manifest).collect(),
+        meta["m"],
+    )
+    # pre-r13 meta rows have no ``residual`` column: flat by construction
+    residual = bool(meta.asDict().get("residual", False))
+    cmap = _centroid_map(cent_rows) if residual else None
+    return cent, cent_rows, books, cmap, _read_rotation(
+        spark, index_path, meta, manifest
+    )
 
 
 #: residual="auto" decision thresholds — the executable form of the
@@ -1732,22 +1788,20 @@ def append_ivfpq_index(
         cluster_for_partitioned_write,
     )
 
-    # ONE read + ONE collect of the tiny centroid relation feeds the
-    # assignment dispatch, the residual map, and k (r18 — was a
-    # localCheckpoint job + a second collect + a count job per append)
-    cent = spark.read.parquet(f"{index_path}/centroids")
-    cent_rows = cent.collect()
-    meta = spark.read.parquet(f"{index_path}/meta").head()
-    books = _codebooks_from_rows(
-        spark.read.parquet(f"{index_path}/codebooks").collect(), meta["m"]
+    from data_integration_system_spark.pipeline import index_manifest as im
+
+    man = im.read_manifest(spark, index_path)
+    # ONE collect of the tiny centroid relation feeds the assignment
+    # dispatch, the residual map, and k
+    cent, cent_rows, books, cmap, rotation = _load_frozen_state(
+        spark, index_path, man
     )
     assigned = nearest_centroid(
         new_vectors.select("vec_id", "embedding"), cent, rows=cent_rows
     ).localCheckpoint()  # one assignment feeds both writes + touched set
-    cmap = _centroid_map(cent_rows) if _meta_residual(meta) else None
     codes = pq_encode(
         assigned, books, carry=("cent_id",), residual_centroids=cmap,
-        rotation=_read_rotation(spark, index_path, meta),
+        rotation=rotation,
     )
     k = len(cent_rows)
     # vectors relation stays in lockstep with codes — but ONLY if the
@@ -1759,23 +1813,16 @@ def append_ivfpq_index(
     # CODES whose re-rank join silently dropped those candidates forever
     # (r14 ADVICE).  The manifest lockstep check below makes any
     # surviving divergence fail loudly at commit time.
-    from data_integration_system_spark.pipeline import index_manifest as im
-
-    man = im.read_manifest(spark, index_path)
     has_vectors = exists(spark, f"{index_path}/vectors")
     if has_vectors:
         # an SQ8 vectors relation (store_vectors="sq8") must be appended
-        # in its own encoding — detected from the manifest's stored
-        # schema (zero jobs) with a reader-schema fallback for
-        # pre-manifest indexes
-        vec_schema = None
-        if man is not None and "vectors" in man.get("relations", {}):
-            vec_schema = im._stored_schema(man["relations"]["vectors"])
-        if vec_schema is None:
-            vec_schema = spark.read.parquet(f"{index_path}/vectors").schema
+        # in its own encoding — detected from the relation's schema,
+        # read with no partition probed (the manifest's stored schema:
+        # zero jobs)
+        vec_cols = _index_relation(spark, index_path, "vectors", man, []).columns
         payload = (
             sq8_encode(assigned, carry=("cent_id",))
-            if "vq" in vec_schema.fieldNames()
+            if "vq" in vec_cols
             else assigned
         )
         cluster_for_partitioned_write(payload, "cent_id", k).write.mode(
@@ -1889,32 +1936,6 @@ def delete_from_ivfpq_index(spark: SparkSession, index_path: str, vec_ids) -> in
     return append_tombstones(spark, index_path, vec_ids, "vec_id")
 
 
-def _load_tombstones(spark: SparkSession, index_path: str):
-    """The delete set in its cheapest applicable form (see
-    operators/tombstones.load_tombstones): None, an id list — the form
-    pq_shortlist takes into its scan closure for a ZERO-plan-cost
-    np.isin mask — or a DataFrame for pathological sizes."""
-    from data_integration_system_spark.operators.tombstones import (
-        load_tombstones,
-    )
-
-    return load_tombstones(spark, index_path, "vec_id")
-
-
-def _apply_tombstones(short: DataFrame, tombstones) -> DataFrame:
-    """Filter deleted ids out of a shortlist BEFORE the top-k window —
-    deleted candidates must not consume result slots.  ``tombstones``
-    is _load_tombstones' value (the handle passes its open-time
-    snapshot — staleness contract; the inline path loads fresh).  The
-    list form normally never reaches here (pq_shortlist masks it
-    inside the scan); this is the DataFrame fallback."""
-    from data_integration_system_spark.operators.tombstones import (
-        exclude_tombstoned,
-    )
-
-    return exclude_tombstoned(short, tombstones, "vec_id")
-
-
 def sq8_encode(vectors_df: DataFrame, carry: tuple = ()) -> DataFrame:
     """Per-vector affine uint8 scalar quantization (SQ8) of the
     L2-NORMALIZED vector — the refine-tier compression rung below
@@ -2019,19 +2040,9 @@ def _index_resident_vectors(
     if manifest is not None:
         if "vectors" not in manifest.get("relations", {}):
             return None
-        from data_integration_system_spark.pipeline import index_manifest as im
-
-        df = im.read_relation(
-            spark, index_path, "vectors", manifest=manifest, partitions=probed
-        )
-        if "vq" in df.columns:
-            return _sq8_decode(df)
-        return df.select("vec_id", "embedding")
-    if not exists(spark, f"{index_path}/vectors"):
+    elif not exists(spark, f"{index_path}/vectors"):
         return None
-    df = spark.read.parquet(f"{index_path}/vectors").filter(
-        F.col("cent_id").isin(probed)
-    )
+    df = _index_relation(spark, index_path, "vectors", manifest, probed)
     if "vq" in df.columns:
         return _sq8_decode(df)
     return df.select("vec_id", "embedding")
@@ -2057,79 +2068,12 @@ def _probed_candidates(manifest: dict | None, sets: dict) -> int | None:
 
 
 def query_ivfpq_index(
-    spark: SparkSession,
-    index_path: str,
-    queries: DataFrame,
-    vectors: DataFrame | None = None,
-    top_k: int = _TOP_K,
-    nprobe: int = _IVFPQ_NPROBE,
-    shortlist_x: int | None = None,
-    allowed: DataFrame | None = None,
+    spark: SparkSession, index_path: str, queries: DataFrame, **kw
 ) -> DataFrame:
-    """Serve top-k from the composed index: probe selection on the tiny
-    centroids table -> the probed cent_ids prune the codes scan; the
-    per-query probe mask inside pq_shortlist keeps each query's
-    candidates to its OWN probes; the shortlist re-ranks exactly against
-    ``vectors`` when supplied — and when it is None, against the
-    INDEX-RESIDENT vectors relation (r14+ builds co-locate the raw
-    vectors with their codes), which reads only the probed partitions:
-    the re-rank I/O is nprobe/k of the corpus, not a full-corpus join.
-    Pre-vectors indexes with ``vectors=None`` keep pure-ADC ranking.
-    ``queries`` is (q_id, qe).
-
-    With a committed manifest (every build/append/rebuild writes one)
-    the codes scan is built from the manifest's explicit file list —
-    a COLD query schedules no partition-discovery job and never touches
-    unprobed dirs — and the shortlist defaults to the candidate-aware
-    size (candidate_aware_shortlist) using the manifest's probed row
-    counts.  Pre-manifest indexes keep the directory scan with literal
-    PartitionFilters and the fixed x-floor shortlist."""
-    cent = spark.read.parquet(f"{index_path}/centroids")
-    meta = spark.read.parquet(f"{index_path}/meta").head()
-    books = _codebooks_from_rows(
-        spark.read.parquet(f"{index_path}/codebooks").collect(), meta["m"]
-    )
-    qdf = queries.toDF("q_id", "qe")
-    sets = _probe_sets(qdf, cent, nprobe)
-    probed = sorted({c for s in sets.values() for c in s})
-    from data_integration_system_spark.pipeline import index_manifest as im
-
-    man = im.read_manifest(spark, index_path)
-    if man is not None and "codes" in man.get("relations", {}):
-        codes = im.read_relation(
-            spark, index_path, "codes", manifest=man, partitions=probed
-        )
-    else:
-        codes = spark.read.parquet(f"{index_path}/codes").filter(
-            F.col("cent_id").isin(probed)  # literal -> PartitionFilters
-        )
-    if allowed is not None:
-        # pre-filter: only allowed ids compete for shortlist slots
-        codes = codes.join(
-            allowed.select("vec_id").distinct(), "vec_id", "left_semi"
-        )
-    if vectors is None:
-        vectors = _index_resident_vectors(spark, index_path, man, probed)
-    q_rows = [(r[0], list(r[1])) for r in queries.collect()]
-    cmap = (
-        _centroid_map(cent.collect()) if _meta_residual(meta) else None
-    )
-    tomb = _load_tombstones(spark, index_path)
-    short = pq_shortlist(
-        codes,
-        q_rows,
-        books,
-        candidate_aware_shortlist(
-            top_k, _probed_candidates(man, sets), shortlist_x
-        ),
-        probe_sets=sets,
-        residual_centroids=cmap,
-        rotation=_read_rotation(spark, index_path, meta),
-        exclude_ids=tomb if isinstance(tomb, list) else None,
-    )
-    if tomb is not None and not isinstance(tomb, list):
-        short = _apply_tombstones(short, tomb)  # pathological set size
-    return _finish_topk(short, queries, vectors, top_k)
+    """One-shot serving: open the index and run one query batch through
+    the handle — ``IvfPqIndexHandle(spark, index_path).query(queries,
+    **kw)`` (see IvfPqIndexHandle.query for the keywords)."""
+    return IvfPqIndexHandle(spark, index_path).query(queries, **kw)
 
 
 @query("similarity_ivfpq_topk", oracle=None)
@@ -2156,16 +2100,19 @@ def similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = parallelize_scan(table(spark, sf_dir, "embeddings"))
     corpus = emb.filter(F.col("vec_id") >= _N_QUERIES)
     cent = fit_ivf_centroids(spark, sf_dir)
+    cent_rows = cent.collect()
     books = fit_pq_codebooks(corpus)
-    assigned = nearest_centroid(corpus.select("vec_id", "embedding"), cent)
+    assigned = nearest_centroid(
+        corpus.select("vec_id", "embedding"), cent, rows=cent_rows
+    )
     codes = pq_encode(assigned, books, carry=("cent_id",))
     qdf = emb.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe")
     )
-    sets = _probe_sets(qdf, cent, _IVFPQ_NPROBE)
+    q_rows = [(r.q_id, list(r.qe)) for r in qdf.collect()]
+    sets = _probe_sets(q_rows, cent_rows, _IVFPQ_NPROBE)
     probed = sorted({c for s in sets.values() for c in s})
     codes = codes.filter(F.col("cent_id").isin(probed))
-    q_rows = [(r.q_id, list(r.qe)) for r in qdf.collect()]
     short = pq_shortlist(
         codes, q_rows, books, _PQ_SHORTLIST_X * _TOP_K, probe_sets=sets
     )
@@ -3015,17 +2962,20 @@ def similarity_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 class IvfPqIndexHandle:
-    """An OPENED composed index — the serving-process pattern the d3c
-    campaign motivated (SCALE.md r13): a cold `query_ivfpq_index` once
-    paid a distributed file-LISTING job over every partition dir (1,414
-    tasks ≈ 4 s at d3c — the ADC scan of the pruned files is
-    milliseconds).  The handle reads each small relation ONCE
-    (centroids/books/meta to the driver) plus the committed manifest,
-    and every `.query(...)` is pruning + ADC + re-rank only — the codes
-    scan is built per query from the manifest's explicit probed-file
-    list, so no listing job exists to cache.  Pre-manifest indexes keep
-    the r13 shape: one held full-codes read whose InMemoryFileIndex
-    caches the listing (the open pays it once).
+    """An OPENED composed index — the one serving path: a one-shot
+    `query_ivfpq_index` is open + one `.query(...)`, and a serving
+    process opens once and queries many times (SCALE.md r13: a cold
+    read of a partitioned codes relation once paid a distributed
+    file-LISTING job over every partition dir, 1,414 tasks ≈ 4 s at
+    d3c, while the ADC scan of the pruned files was milliseconds).  The
+    open reads the committed manifest, the frozen state (centroids,
+    meta, codebooks, rotation — through the manifest's file lists when
+    it has them) and the tombstone set; every `.query(...)` is probe
+    selection + pruning + ADC + re-rank only — the codes scan is built
+    per query from the manifest's explicit probed-file list, so no
+    listing job exists to cache.  Pre-manifest indexes keep the r13
+    shape: one held full-codes read whose InMemoryFileIndex caches the
+    listing (the open pays it once).
 
     Staleness contract (the standard serving cadence): rows appended
     to the index AFTER open are invisible through the open-time
@@ -3035,8 +2985,8 @@ class IvfPqIndexHandle:
     it IS the cache.
 
     Thread safety: open once, share freely — `.query(...)` only READS
-    handle state (manifest dict, numpy centroid matrix, codebook
-    broadcast), and the one session-global conf window its reads pass
+    handle state (manifest dict, centroid rows, codebooks), and the
+    one session-global conf window its reads pass
     through (the manifest reader's discovery-threshold raise) is
     serialized under index_manifest._DISCOVERY_CONF_LOCK.  The measured
     16-thread ladder (SCALE.md r14: 0.83/2.37/2.75 batches/s at 1/4/16
@@ -3049,38 +2999,17 @@ class IvfPqIndexHandle:
         self._open()
 
     def _open(self) -> None:
-        spark, index_path = self.spark, self.index_path
-        self.cent = spark.read.parquet(f"{index_path}/centroids").localCheckpoint()
-        meta = spark.read.parquet(f"{index_path}/meta").head()
-        self.books = _codebooks_from_rows(
-            spark.read.parquet(f"{index_path}/codebooks").collect(), meta["m"]
+        from data_integration_system_spark.operators.tombstones import (
+            load_tombstones,
         )
-        cent_rows = self.cent.collect()
-        self.residual_centroids = (
-            _centroid_map(cent_rows) if _meta_residual(meta) else None
-        )
-        self.rotation = _read_rotation(spark, index_path, meta)
-        # centroid matrix for driver-side probe selection: the handle
-        # already holds every centroid, so serving-sized query batches
-        # pick their nprobe probes with one numpy matmul instead of a
-        # Spark crossJoin job (the one-shot path keeps the distributed
-        # probe selection for corpus-sized query sets)
-        import numpy as np
-
-        cent_rows = sorted(cent_rows, key=lambda r: int(r.cent_id))
-        self._cent_ids = np.asarray([int(r.cent_id) for r in cent_rows])
-        cmat = np.asarray([list(r.centroid) for r in cent_rows], dtype=np.float64)
-        norms = np.linalg.norm(cmat, axis=1, keepdims=True)
-        self._cent_mat = cmat / np.where(norms == 0, 1.0, norms)
-        # the committed manifest owns the file listing: per-query scans
-        # are built from its explicit (probed-partition) file lists, so
-        # even the FIRST query after open schedules no discovery job.
-        # Pre-manifest indexes fall back to one held full read whose
-        # InMemoryFileIndex caches the dir listing (pays the listing
-        # job once at open).
         from data_integration_system_spark.pipeline import index_manifest as im
 
+        spark, index_path = self.spark, self.index_path
         self.manifest = im.read_manifest(spark, index_path)
+        (
+            _, self.cent_rows, self.books, self.residual_centroids,
+            self.rotation,
+        ) = _load_frozen_state(spark, index_path, self.manifest)
         if self.manifest is not None and "codes" in self.manifest.get(
             "relations", {}
         ):
@@ -3090,7 +3019,7 @@ class IvfPqIndexHandle:
         # open-time tombstone snapshot (same staleness contract as the
         # manifest: deletes landed after open become visible on reopen);
         # small sets snapshot as a plain id list — the InSet fast path
-        self.tombstones = _load_tombstones(spark, index_path)
+        self.tombstones = load_tombstones(spark, index_path, "vec_id")
 
     def reopen(self) -> "IvfPqIndexHandle":
         """Refresh the cached listing (after appends/rebuilds)."""
@@ -3106,38 +3035,32 @@ class IvfPqIndexHandle:
         shortlist_x: int | None = None,
         allowed: DataFrame | None = None,
     ) -> DataFrame:
-        import numpy as np
+        """Serve top-k for ``queries`` (q_id, qe): each query's
+        ``nprobe`` nearest centroids prune the codes scan; the
+        per-query probe mask inside pq_shortlist keeps each query's
+        candidates to its OWN probes; the shortlist re-ranks exactly
+        against ``vectors`` when supplied — and when it is None,
+        against the INDEX-RESIDENT vectors relation (r14+ builds
+        co-locate the raw vectors with their codes), which reads only
+        the probed partitions.  Pre-vectors indexes with
+        ``vectors=None`` keep pure-ADC ranking.  ``allowed`` is a true
+        pre-filter: only its vec_ids compete for shortlist slots.
 
+        With a committed manifest the shortlist defaults to the
+        candidate-aware size (candidate_aware_shortlist) from the
+        manifest's probed row counts; pre-manifest indexes keep the
+        literal PartitionFilters and the fixed x-floor shortlist.
+        Tombstoned ids are masked before the top-k cut."""
         q_rows = [(r[0], list(r[1])) for r in queries.collect()]
-        # driver-side probe selection (same ordering contract as
-        # _probe_sets: best cosine first, ties to lowest cent_id — the
-        # cent_id-sorted argsort on (-sim) gives exactly that)
-        sets: dict[int, set] = {}
-        for q_id, qe in q_rows:
-            q = np.asarray(qe, dtype=np.float64)
-            qn = np.linalg.norm(q)
-            q = q / (qn if qn else 1.0)
-            sims = self._cent_mat @ q
-            order = np.argsort(-sims, kind="stable")[:nprobe]
-            sets[int(q_id)] = {int(c) for c in self._cent_ids[order]}
+        sets = _probe_sets(q_rows, self.cent_rows, nprobe)
         probed = sorted({c for s in sets.values() for c in s})
         if self.codes is None:
-            from data_integration_system_spark.pipeline import (
-                index_manifest as im,
-            )
-
-            codes = im.read_relation(
-                self.spark,
-                self.index_path,
-                "codes",
-                manifest=self.manifest,
-                partitions=probed,
+            codes = _index_relation(
+                self.spark, self.index_path, "codes", self.manifest, probed
             )
         else:
             codes = self.codes.filter(F.col("cent_id").isin(probed))
         if allowed is not None:
-            # filtered ANN (r16): same true pre-filter as the inline
-            # path — allowed ids only, before shortlisting
             codes = codes.join(
                 allowed.select("vec_id").distinct(), "vec_id", "left_semi"
             )
@@ -3145,6 +3068,7 @@ class IvfPqIndexHandle:
             vectors = _index_resident_vectors(
                 self.spark, self.index_path, self.manifest, probed
             )
+        tomb = self.tombstones
         short = pq_shortlist(
             codes,
             q_rows,
@@ -3155,17 +3079,19 @@ class IvfPqIndexHandle:
             probe_sets=sets,
             residual_centroids=self.residual_centroids,
             rotation=self.rotation,
-            exclude_ids=self.tombstones
-            if isinstance(self.tombstones, list)
-            else None,
+            exclude_ids=tomb if isinstance(tomb, list) else None,
         )
-        if self.tombstones is not None and not isinstance(self.tombstones, list):
-            short = _apply_tombstones(short, self.tombstones)
+        if tomb is not None and not isinstance(tomb, list):
+            from data_integration_system_spark.operators.tombstones import (
+                exclude_tombstoned,
+            )
+
+            short = exclude_tombstoned(short, tomb, "vec_id")  # huge sets
         return _finish_topk(short, queries, vectors, top_k)
 
 
 def open_ivfpq_index(spark: SparkSession, index_path: str) -> IvfPqIndexHandle:
     """Open a built IVF-PQ index for repeated serving (see
-    IvfPqIndexHandle; `query_ivfpq_index` remains the one-shot form —
-    identical results, pinned in tests)."""
+    IvfPqIndexHandle).  ``query_ivfpq_index`` is this open followed by
+    one ``.query(...)``, so the two forms cannot diverge."""
     return IvfPqIndexHandle(spark, index_path)

@@ -17,7 +17,7 @@ from data_integration_system_spark.catalog import table
 from data_integration_system_spark.functions.hashing import normalize_ws
 from data_integration_system_spark.operators._common import drop_hot_keys
 from data_integration_system_spark.registry import query
-from data_integration_system_spark.operators._common import local_rows_df
+from data_integration_system_spark.pipeline import bucket_index
 
 STOPWORDS = ("the", "a", "and", "of", "to", "in", "is", "on", "for", "it")
 _STOP_SQL = "('" + "','".join(STOPWORDS) + "')"
@@ -370,12 +370,12 @@ def build_fingerprint_index(
     n_buckets: int = _FP_INDEX_BUCKETS,
     stop_docs: int | None = _FP_STOP_DOCS,
 ) -> None:
-    """Materialize the winnowing inverted index: ``{index}/fps``
-    partitioned by ``bucket = pmod(fp_hash, n_buckets)``, rows
-    ``(fp_hash, doc_id)``.  Stop-hashes (boilerplate fingerprints in >
-    stop_docs documents) are dropped at WRITE time — the stored index can
-    never hand back a quadratic posting list.  ``{index}/meta`` records
-    n_buckets so build and query can't silently disagree.
+    """Materialize the winnowing inverted index: the bucketed table
+    ``{index}/fps`` keyed on fp_hash (pipeline/bucket_index owns the
+    layout, meta and tombstone lifecycle), rows ``(fp_hash, doc_id)``.
+    Stop-hashes (boilerplate fingerprints in > stop_docs documents) are
+    dropped at WRITE time — the stored index can never hand back a
+    quadratic posting list.
 
     The winnowing relation is checkpointed BEFORE the stop-hash prune:
     drop_hot_keys consumes its input twice (hot-key aggregation + the
@@ -385,34 +385,7 @@ def build_fingerprint_index(
     fp = doc_fingerprints_unordered(spark, sf_dir).localCheckpoint()
     if stop_docs is not None:
         fp = drop_hot_keys(fp, ["fp_hash"], stop_docs)
-    from data_integration_system_spark.operators._common import (
-        cluster_for_partitioned_write,
-    )
-
-    (
-        # cluster by the partition column first: 1 file per bucket, not
-        # tasks × buckets slivers (the probe-side file-count tax), with
-        # an explicit task count so AQE can't serialize the write
-        cluster_for_partitioned_write(
-            fp.withColumn(
-                "bucket", F.pmod(F.col("fp_hash"), F.lit(n_buckets)).cast("int")
-            ),
-            "bucket",
-            n_buckets,
-        )
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{index_path}/fps")
-    )
-    local_rows_df(spark, [(int(n_buckets),)], "n_buckets int").coalesce(
-        1
-    ).write.mode("overwrite").parquet(f"{index_path}/meta")
-    # a rebuild compacts deletes (operators/tombstones lifecycle)
-    from data_integration_system_spark.operators.tombstones import (
-        clear_tombstones,
-    )
-
-    clear_tombstones(spark, index_path)
+    bucket_index.build(spark, index_path, "fps", fp, "fp_hash", n_buckets)
 
 
 def append_fingerprint_index(
@@ -438,58 +411,21 @@ def append_fingerprint_index(
     Stop-hash pruning is deliberately NOT applied per append: a batch
     can't see global document frequencies — rebuild periodically (the
     compaction analog) to re-apply the prune over the full corpus."""
-    from data_integration_system_spark.pipeline.fsutil import exists
-
-    if exists(spark, f"{index_path}/meta"):
-        n_buckets = spark.read.parquet(f"{index_path}/meta").head()["n_buckets"]
-    else:
-        local_rows_df(spark, [(int(n_buckets),)], "n_buckets int").coalesce(
-            1
-        ).write.mode("overwrite").parquet(f"{index_path}/meta")
     fp = (
         fps_df
         if fps_df is not None
         else winnow_fingerprints(new_docs, text_col, id_col, spread=False)
-    ).withColumn("bucket", F.pmod(F.col("fp_hash"), F.lit(n_buckets)).cast("int"))
-    # bucket-clustered write, like build_fingerprint_index: a micro-batch
-    # arrives in 1-2 partitions, so a bare partitionBy write is ONE task
-    # serially creating up to n_buckets files (same measured 3-7x tax as
-    # append_minhash_index, r17); clustering writes whole buckets in
-    # parallel, 1 file/bucket/batch
-    from data_integration_system_spark.operators._common import (
-        cluster_for_partitioned_write,
     )
-
-    cluster_for_partitioned_write(fp, "bucket", n_buckets).write.mode(
-        "append"
-    ).partitionBy("bucket").parquet(f"{index_path}/fps")
-    # un-delete (upsert): a re-appended doc serves again
-    # (operators/tombstones lifecycle)
-    from data_integration_system_spark.operators.tombstones import (
-        drop_tombstones_for,
-    )
-
-    drop_tombstones_for(
-        spark, index_path, new_docs.select(F.col(id_col).alias("doc_id")), "doc_id"
+    bucket_index.append(
+        spark, index_path, "fps", fp, "fp_hash", n_buckets,
+        new_docs.select(F.col(id_col).alias("doc_id")),
     )
 
 
-def delete_from_fingerprint_index(
-    spark: SparkSession, index_path: str, doc_ids
-) -> int:
-    """Logical DELETE from the winnowing fingerprint index (r16):
-    tombstoned docs stop appearing as overlap MATCHES on the next
-    query — the takedown path for the fingerprint_overlap_sink
-    surface.  Same lifecycle as the other index tiers
-    (operators/tombstones): idempotent under redelivery, re-append
-    un-deletes, the scheduled build_fingerprint_index rebuild clears
-    and compacts.  ``doc_ids`` is a DataFrame with ``doc_id`` or an
-    iterable of ints; returns the count of NEW tombstones."""
-    from data_integration_system_spark.operators.tombstones import (
-        append_tombstones,
-    )
-
-    return append_tombstones(spark, index_path, doc_ids, "doc_id")
+#: Logical DELETE (pipeline/bucket_index.delete): tombstoned docs stop
+#: appearing as overlap MATCHES on the next query — the takedown path
+#: for the fingerprint_overlap_sink surface.
+delete_from_fingerprint_index = bucket_index.delete
 
 
 def query_fingerprint_index(
@@ -507,49 +443,24 @@ def query_fingerprint_index(
     deterministic fingerprint derivation with an append over the SAME
     batch (see append_fingerprint_index).
 
-    Probe protocol: the query docs' fingerprint buckets are collected as
-    literals -> PartitionFilters on the index scan; a lookup reads only
-    the probed posting-list partitions.  Querying the corpus against
-    itself reproduces fingerprint_overlap_pairs exactly (pinned in
-    tests).
+    The bucket probe (pipeline/bucket_index.probe) reads only the probed
+    posting-list partitions and drops tombstoned candidates before the
+    per-pair aggregation.  Querying the corpus against itself
+    reproduces fingerprint_overlap_pairs exactly (pinned in tests).
 
     shared_fps counts DISTINCT fp_hash per pair: winnow_fingerprints
     already emits distinct (doc_id, fp_hash), so on a clean index this
     equals count(*), but an index holding redelivered rows (the
     streaming sink's at-least-once appends) would otherwise inflate the
     count and push sub-threshold pairs over min_shared."""
-    n_buckets = spark.read.parquet(f"{index_path}/meta").head()["n_buckets"]
     qfp = (
-        (
-            fps_df
-            if fps_df is not None
-            else winnow_fingerprints(query_docs, text_col, id_col, spread=False)
-        )
-        .withColumn("bucket", F.pmod(F.col("fp_hash"), F.lit(n_buckets)).cast("int"))
-        .localCheckpoint()  # freezes the probe list for the collect
-    )
-    probe = sorted(r["bucket"] for r in qfp.select("bucket").distinct().collect())
-    idx = spark.read.parquet(f"{index_path}/fps").filter(
-        F.col("bucket").isin(probe)  # literal -> PartitionFilters
-    )
-    from data_integration_system_spark.operators.tombstones import (
-        exclude_tombstoned,
-        load_tombstones,
-    )
-
-    pairs = (
-        qfp.select(F.col("doc_id").alias("q_id"), "bucket", "fp_hash")
-        .join(idx.select("bucket", "fp_hash", F.col("doc_id").alias("c_id")),
-              ["bucket", "fp_hash"])
-        .filter(F.col("q_id") != F.col("c_id"))
-    )
-    # deleted docs must not surface as matches (tombstones lifecycle);
-    # filtered BEFORE the per-pair aggregation, so they cost nothing
-    pairs = exclude_tombstoned(
-        pairs, load_tombstones(spark, index_path, "doc_id"), "c_id"
+        fps_df
+        if fps_df is not None
+        else winnow_fingerprints(query_docs, text_col, id_col, spread=False)
     )
     return (
-        pairs.groupBy("q_id", "c_id")
+        bucket_index.probe(spark, index_path, "fps", qfp, "fp_hash")
+        .groupBy("q_id", "c_id")
         .agg(F.count_distinct("fp_hash").cast("long").alias("shared_fps"))
         .filter(F.col("shared_fps") >= min_shared)
     )

@@ -283,13 +283,7 @@ def write_manifest(
     ManifestLockstepError BEFORE the commit, so a torn append fails
     loudly instead of being committed into the manifest."""
     prev = read_manifest(spark, index_path)
-    if expected_version is not None or prev is not None:
-        on_disk = prev["version"] if prev else None
-        if expected_version is not None and on_disk != expected_version:
-            raise ManifestConflict(
-                f"{index_path}: manifest at version {on_disk}, writer "
-                f"expected {expected_version} — re-read and retry"
-            )
+    _check_version(index_path, prev["version"] if prev else None, expected_version)
     manifest: dict = {
         "version": (prev["version"] + 1) if prev else 1,
         "relations": {},
@@ -299,35 +293,21 @@ def write_manifest(
         files = _list_data_files(spark, root)
         lroot = _local_root(spark, root) if files else None
         entry: dict = {"n_files": len(files)}
-        total_rows: int | None = 0
         if part_col is None:
-            recs = []
-            for rel_path, size in files:
-                rows = _footer_rows(spark, root, rel_path, lroot)
-                total_rows = (
-                    None if (rows is None or total_rows is None) else total_rows + rows
-                )
-                recs.append({"path": rel_path, "size": size, "rows": rows})
-            entry["files"] = recs
+            recs = _files_entry(spark, root, lroot, files)
+            entry["files"] = recs["files"]
+            total_rows = recs["rows"]
         else:
             entry["partition_col"] = part_col
-            parts: dict[str, dict] = {}
+            groups: dict[str, list] = {}
             for rel_path, size in files:
-                val = _partition_value(rel_path, part_col)
-                if val is None:  # stray unpartitioned file — keep it visible
-                    val = ""
-                rows = _footer_rows(spark, root, rel_path, lroot)
-                p = parts.setdefault(val, {"files": [], "rows": 0})
-                p["files"].append({"path": rel_path, "size": size, "rows": rows})
-                p["rows"] = (
-                    None if (rows is None or p["rows"] is None) else p["rows"] + rows
-                )
-            for p in parts.values():
-                total_rows = (
-                    None
-                    if (p["rows"] is None or total_rows is None)
-                    else total_rows + p["rows"]
-                )
+                # a stray unpartitioned file keeps visible under ""
+                val = _partition_value(rel_path, part_col) or ""
+                groups.setdefault(val, []).append((rel_path, size))
+            parts = {
+                v: _files_entry(spark, root, lroot, fs) for v, fs in groups.items()
+            }
+            total_rows = _sum_rows(p["rows"] for p in parts.values())
             entry["partitions"] = parts
         entry["total_rows"] = total_rows
         # capture the relation schema ONCE, here at build time — readers
@@ -344,10 +324,53 @@ def write_manifest(
                 entry["schema_json"] = prev_entry["schema_json"]
         manifest["relations"][rel] = entry
 
-    if lockstep:
-        assert_lockstep(manifest, lockstep, index_path)
-    _commit(spark, index_path, manifest)
+    _commit(spark, index_path, manifest, lockstep)
     return manifest
+
+
+def _sum_rows(counts) -> int | None:
+    """Sum of row counts; None once any count is unavailable."""
+    total = 0
+    for n in counts:
+        if n is None:
+            return None
+        total += n
+    return total
+
+
+def _files_entry(spark: SparkSession, root: str, lroot: str | None,
+                 files: list) -> dict:
+    """``{"files": [{path, size, rows}], "rows": total}`` for
+    ``(relative_path, size)`` data files under ``root``."""
+    recs = [
+        {"path": path, "size": size,
+         "rows": _footer_rows(spark, root, path, lroot)}
+        for path, size in files
+    ]
+    return {"files": recs, "rows": _sum_rows(r["rows"] for r in recs)}
+
+
+def _relist_partitions(
+    spark: SparkSession, index_path: str, rel: str, entry: dict, values
+) -> None:
+    """Re-walk partitions ``values`` of relation ``rel`` at ``index_path``
+    into its manifest ``entry`` in place — a vacated partition is
+    dropped — and recompute the entry's ``total_rows``/``n_files``."""
+    parts = entry["partitions"]
+    root = _rel_root(index_path, rel)
+    lroot = _local_root(spark, root)
+    for v in values:
+        sub = f"{entry['partition_col']}={v}"
+        files = [
+            (f"{sub}/{path}", size)
+            for path, size in _list_data_files(spark, f"{root}/{sub}")
+        ]
+        if files:
+            parts[str(v)] = _files_entry(spark, root, lroot, files)
+        else:
+            parts.pop(str(v), None)
+    entry["total_rows"] = _sum_rows(p["rows"] for p in parts.values())
+    entry["n_files"] = sum(len(p["files"]) for p in parts.values())
 
 
 def update_manifest_partitions(
@@ -373,49 +396,11 @@ def update_manifest_partitions(
             f"no {MANIFEST_NAME} under {index_path} — incremental update "
             "needs a committed base; run write_manifest first"
         )
-    if expected_version is not None and man["version"] != expected_version:
-        raise ManifestConflict(
-            f"{index_path}: manifest at version {man['version']}, writer "
-            f"expected {expected_version} — re-read and retry"
-        )
+    _check_version(index_path, man["version"], expected_version)
     for rel, values in updates.items():
-        entry = man["relations"][rel]
-        part_col = entry["partition_col"]
-        parts = entry["partitions"]
-        root = _rel_root(index_path, rel)
-        lroot = _local_root(spark, root)
-        for v in values:
-            sub = f"{part_col}={v}"
-            files = _list_data_files(spark, f"{root}/{sub}")
-            if not files:
-                parts.pop(str(v), None)
-                continue
-            p: dict = {"files": [], "rows": 0}
-            for rel_path, size in files:
-                full_rel = f"{sub}/{rel_path}"
-                rows = _footer_rows(spark, root, full_rel, lroot)
-                p["files"].append(
-                    {"path": full_rel, "size": size, "rows": rows}
-                )
-                p["rows"] = (
-                    None
-                    if (rows is None or p["rows"] is None)
-                    else p["rows"] + rows
-                )
-            parts[str(v)] = p
-        total: int | None = 0
-        n_files = 0
-        for p in parts.values():
-            n_files += len(p["files"])
-            total = (
-                None if (p["rows"] is None or total is None) else total + p["rows"]
-            )
-        entry["total_rows"] = total
-        entry["n_files"] = n_files
+        _relist_partitions(spark, index_path, rel, man["relations"][rel], values)
     man["version"] += 1
-    if lockstep:
-        assert_lockstep(man, lockstep, index_path)
-    _commit(spark, index_path, man)
+    _commit(spark, index_path, man, lockstep)
     return man
 
 
@@ -446,45 +431,29 @@ def splice_manifest_from(
     for rel, entry in base.get("relations", {}).items():
         manifest["relations"][rel] = copy.deepcopy(entry)
     for rel, values in relisted.items():
-        entry = manifest["relations"][rel]
-        part_col = entry["partition_col"]
-        parts = entry["partitions"]
-        root = _rel_root(index_path, rel)
-        lroot = _local_root(spark, root)
-        for v in values:
-            sub = f"{part_col}={v}"
-            files = _list_data_files(spark, f"{root}/{sub}")
-            if not files:
-                parts.pop(str(v), None)
-                continue
-            p: dict = {"files": [], "rows": 0}
-            for rel_path, size in files:
-                full_rel = f"{sub}/{rel_path}"
-                rows = _footer_rows(spark, root, full_rel, lroot)
-                p["files"].append({"path": full_rel, "size": size, "rows": rows})
-                p["rows"] = (
-                    None
-                    if (rows is None or p["rows"] is None)
-                    else p["rows"] + rows
-                )
-            parts[str(v)] = p
-        total: int | None = 0
-        n_files = 0
-        for p in parts.values():
-            n_files += len(p["files"])
-            total = (
-                None if (p["rows"] is None or total is None) else total + p["rows"]
-            )
-        entry["total_rows"] = total
-        entry["n_files"] = n_files
-    if lockstep:
-        assert_lockstep(manifest, lockstep, index_path)
-    _commit(spark, index_path, manifest)
+        _relist_partitions(
+            spark, index_path, rel, manifest["relations"][rel], values
+        )
+    _commit(spark, index_path, manifest, lockstep)
     return manifest
 
 
-def _commit(spark: SparkSession, index_path: str, manifest: dict) -> None:
-    """Publish the manifest.  On local filesystems ``os.replace`` is an
+def _check_version(index_path: str, on_disk: int | None,
+                   expected: int | None) -> None:
+    """Optimistic-concurrency check: raise ManifestConflict unless the
+    committed version is ``expected`` (None = no expectation)."""
+    if expected is not None and on_disk != expected:
+        raise ManifestConflict(
+            f"{index_path}: manifest at version {on_disk}, writer "
+            f"expected {expected} — re-read and retry"
+        )
+
+
+def _commit(spark: SparkSession, index_path: str, manifest: dict,
+            lockstep: list[tuple[str, str]] | None = None) -> None:
+    """Publish the manifest, after the ``lockstep`` pairs pass
+    assert_lockstep (a violation publishes nothing).  On local
+    filesystems ``os.replace`` is an
     atomic OVERWRITING rename — a reader sees the old or the new
     manifest, never a torn one and never a missing one.  On non-local
     Hadoop filesystems, plain rename won't clobber, so the fallback is
@@ -493,6 +462,8 @@ def _commit(spark: SparkSession, index_path: str, manifest: dict) -> None:
     consumers fall back to a directory scan / full reconcile — so the
     weaker remote contract is availability-of-the-fast-path, not
     correctness."""
+    if lockstep:
+        assert_lockstep(manifest, lockstep, index_path)
     data = json.dumps(manifest, sort_keys=True).encode()
     lroot = _local_root(spark, index_path)
     if lroot is not None:

@@ -395,6 +395,45 @@ def snapshot_purge_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+#: sampled rows per output partition for range boundaries (what
+#: repartitionByRange collects: 3x its default 100)
+_RANGE_SAMPLE_PER_PART = 300
+
+
+def _range_partitioned(df: DataFrame, cols: list[str], n: int) -> DataFrame:
+    """``df`` range-partitioned on ``cols`` into ``n`` sorted partitions,
+    with reproducible boundaries: repartitionByRange seeds its sample
+    with the plan's RDD id, so the same input lands on different file
+    boundaries from write to write.  Here the sample is the rows ranked
+    first by a hash of their position (one collect job, like
+    repartitionByRange's sampling; ``rand(seed)`` ranks unevenly, its
+    per-partition streams start from adjacent seeds), and each row is
+    routed by binary search over the sample's quantiles."""
+    sample = (
+        df.select(*cols)
+        .orderBy(F.xxhash64(F.monotonically_increasing_id()))
+        .limit(_RANGE_SAMPLE_PER_PART * n)
+        .collect()
+    )
+    sample.sort(key=lambda r: tuple((v is not None, v) for v in r))
+    key = F.struct(*cols)
+
+    def route(lo: int, hi: int):
+        # partition i holds the keys in (bound i-1, bound i]
+        if lo == hi:
+            return F.lit(lo)
+        mid = (lo + hi) // 2
+        bound = sample[max((mid + 1) * len(sample) // n - 1, 0)]
+        lit = F.struct(*(
+            F.lit(v).cast(df.schema[c].dataType).alias(c)
+            for c, v in zip(cols, bound)
+        ))
+        return F.when(key <= lit, route(lo, mid)).otherwise(route(mid + 1, hi))
+
+    pid = route(0, n - 1) if sample else F.lit(0)
+    return df.repartitionById(n, pid).sortWithinPartitions(*cols)
+
+
 def write_clustered(
     df: DataFrame,
     path: str,
@@ -405,7 +444,7 @@ def write_clustered(
 ) -> None:
     """Write ``df`` range-clustered on ``cluster_cols``.
 
-    repartitionByRange gives disjoint key ranges per FILE (file-level
+    Range partitioning gives disjoint key ranges per FILE (file-level
     min/max skipping); sortWithinPartitions tightens every ROW GROUP's
     stats inside each file; the block-size option bounds row-group span.
     The one extra cost vs a plain write is the range exchange — paid
@@ -419,10 +458,8 @@ def write_clustered(
     value (measured 200k -> ~900 rows read for one hash probe).  Costs
     write-side space/CPU per column — reserve it for keys that are
     genuinely probed by equality."""
-    writer = (
-        df.repartitionByRange(n_files, *cluster_cols)
-        .sortWithinPartitions(*cluster_cols)
-        .write.option("parquet.block.size", rowgroup_bytes)
+    writer = _range_partitioned(df, cluster_cols, n_files).write.option(
+        "parquet.block.size", rowgroup_bytes
     )
     for c in bloom_cols or []:
         writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true")
@@ -488,9 +525,7 @@ def write_zordered(
 
     z = _interleave_bits(bucket(col1, lo1, hi1), bucket(col2, lo2, hi2), bits)
     (
-        df.withColumn("__z", z)
-        .repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
+        _range_partitioned(df.withColumn("__z", z), ["__z"], n_files)
         .drop("__z")
         .write.option("parquet.block.size", rowgroup_bytes)
         .mode("errorifexists")

@@ -352,6 +352,16 @@ def event_transitions_stream(events: DataFrame) -> DataFrame:
     )
 
 
+def _append_pairs(pairs: DataFrame, score: str, pairs_path: str) -> None:
+    """Append a probe's (q_id, c_id, score) matches as canonical
+    (doc_a < doc_b, score) pairs."""
+    pairs.select(
+        F.least("q_id", "c_id").alias("doc_a"),
+        F.greatest("q_id", "c_id").alias("doc_b"),
+        score,
+    ).dropDuplicates(["doc_a", "doc_b"]).write.mode("append").parquet(pairs_path)
+
+
 def near_dup_sink(
     spark: SparkSession,
     index_path: str,
@@ -441,16 +451,7 @@ def near_dup_sink(
                 .filter(F.col("rk") <= top_k_neighbors)
                 .drop("rk")
             )
-        (
-            pairs.select(
-                F.least("q_id", "c_id").alias("doc_a"),
-                F.greatest("q_id", "c_id").alias("doc_b"),
-                "jaccard",
-            )
-            .dropDuplicates(["doc_a", "doc_b"])
-            .write.mode("append")
-            .parquet(pairs_path)
-        )
+        _append_pairs(pairs, "jaccard", pairs_path)
 
     return apply
 
@@ -499,16 +500,7 @@ def fingerprint_overlap_sink(
         pairs = query_fingerprint_index(
             spark, index_path, batch, min_shared=min_shared, fps_df=fps
         )
-        (
-            pairs.select(
-                F.least("q_id", "c_id").alias("doc_a"),
-                F.greatest("q_id", "c_id").alias("doc_b"),
-                "shared_fps",
-            )
-            .dropDuplicates(["doc_a", "doc_b"])
-            .write.mode("append")
-            .parquet(pairs_path)
-        )
+        _append_pairs(pairs, "shared_fps", pairs_path)
 
     return apply
 
@@ -537,27 +529,18 @@ def ann_ingest_sink(spark: SparkSession, index_path: str):
 def ann_delete_sink(spark: SparkSession, index_path: str):
     """Streaming TAKEDOWN for the composed IVF-PQ index (r16): each
     micro-batch of (vec_id) delete requests lands as tombstones
-    (operators/similarity.delete_from_ivfpq_index), hidden from every
+    (operators/tombstones, as delete_from_ivfpq_index), hidden from every
     query path on the next query with no index rewrite — the 24/7
     delete half of the lifecycle whose ingest half ivfpq_ingest_sink
     owns.  A takedown/dedup-removal feed runs both sinks against one
     index: appends restore ids with fresh encodings (upsert), the
     scheduled rebuild compacts tombstones physically.
 
-    At-least-once safe BY CONSTRUCTION: delete_from_ivfpq_index writes
+    At-least-once safe BY CONSTRUCTION: the tombstone append writes
     only ids not already tombstoned, so a redelivered batch writes
     nothing — the relation's size tracks DISTINCT deletes, not
     deliveries.  Expects batches with a ``vec_id`` column."""
-    from data_integration_system_spark.operators.similarity import (
-        delete_from_ivfpq_index,
-    )
-
-    def apply(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        delete_from_ivfpq_index(spark, index_path, batch.select("vec_id"))
-
-    return apply
+    return _tombstone_sink(spark, index_path, "vec_id")
 
 
 def doc_delete_sink(spark: SparkSession, index_path: str):
@@ -569,6 +552,12 @@ def doc_delete_sink(spark: SparkSession, index_path: str):
     ingest sinks un-deletes; the scheduled rebuild compacts.  Same
     at-least-once-by-construction contract as ann_delete_sink.
     Expects batches with a ``doc_id`` column."""
+    return _tombstone_sink(spark, index_path, "doc_id")
+
+
+def _tombstone_sink(spark: SparkSession, index_path: str, id_col: str):
+    """The delete sinks' one body: each non-empty micro-batch's
+    ``id_col`` values are appended to the index's tombstones."""
     from data_integration_system_spark.operators.tombstones import (
         append_tombstones,
     )
@@ -576,7 +565,7 @@ def doc_delete_sink(spark: SparkSession, index_path: str):
     def apply(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
-        append_tombstones(spark, index_path, batch.select("doc_id"), "doc_id")
+        append_tombstones(spark, index_path, batch.select(id_col), id_col)
 
     return apply
 

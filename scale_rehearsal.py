@@ -2983,8 +2983,9 @@ def run_ivfpq_manifest(spark) -> None:
     # --- the knee under the new rule: the computed default shortlist ---
     if "default_shortlist" not in row:
         man = im.read_manifest(spark, D3C_IDX)
-        cent = spark.read.parquet(f"{D3C_IDX}/centroids")
-        sets = _probe_sets(qdf, cent, _IVFPQ_NPROBE)
+        cent_rows = spark.read.parquet(f"{D3C_IDX}/centroids").collect()
+        q_rows = [(r.q_id, list(r.qe)) for r in qdf.collect()]
+        sets = _probe_sets(q_rows, cent_rows, _IVFPQ_NPROBE)
         per_q = [im.partition_rows(man, "codes", s) for s in sets.values()]
         row["default_shortlist"] = {
             "max_per_query_candidates": max(per_q),

@@ -515,3 +515,48 @@ def test_handle_and_oneshot_use_manifest_default_identically(spark, tmp_path):
         ).collect()
     }
     assert legacy_rows == explicit
+
+
+#: Spark jobs of one ``query_ivfpq_index(...).collect()`` on the sf0.001
+#: index below (one tombstone present) when the one-shot path loaded the
+#: index state itself and picked probes with a Spark crossJoin.
+_ONESHOT_JOBS_BEFORE = 18
+
+
+def test_oneshot_query_jobs_equal_open_plus_handle_query(spark, tmp_path):
+    """The one-shot query IS open + handle.query: its Spark job count
+    (job-group attribution) equals the open's plus one handle query's,
+    and is below the count of the former self-loading one-shot path."""
+    from data_integration_system_spark.catalog import table
+    from data_integration_system_spark.operators.similarity import (
+        _N_QUERIES,
+        delete_from_ivfpq_index,
+        open_ivfpq_index,
+        query_ivfpq_index,
+    )
+
+    idx = _build(spark, tmp_path)
+    delete_from_ivfpq_index(spark, idx, [10**9])
+    queries = table(spark, SF, "embeddings").filter(
+        F.col("vec_id") < _N_QUERIES
+    ).select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe"))
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup("", "")
+        return len(tracker.getJobIdsForGroup(group)), out
+
+    query_ivfpq_index(spark, idx, queries).collect()  # warm plan caches
+    oneshot, rows = jobs(
+        "ivfpq-oneshot", lambda: query_ivfpq_index(spark, idx, queries).collect()
+    )
+    opened, handle = jobs("ivfpq-open", lambda: open_ivfpq_index(spark, idx))
+    queried, held = jobs("ivfpq-query", lambda: handle.query(queries).collect())
+    assert {tuple(r) for r in rows} == {tuple(r) for r in held} and rows
+    assert oneshot == opened + queried, (oneshot, opened, queried)
+    assert oneshot < _ONESHOT_JOBS_BEFORE, oneshot

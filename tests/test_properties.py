@@ -103,7 +103,7 @@ def test_spark_hash_matches_python_on_generated_batch(spark):
 @given(
     sizes=st.lists(st.integers(min_value=1, max_value=4000), min_size=2, max_size=24),
 )
-@settings(max_examples=12, deadline=None)
+@settings(max_examples=25, deadline=None)
 def test_band_blocking_exactness_property(spark, sizes):
     """The banded self-join's exactness claim, over RANDOM shingle-set
     size distributions: candidates == exactly the pairs surviving the
@@ -140,7 +140,7 @@ def test_band_blocking_exactness_property(spark, sizes):
         max_size=16,
     ),
 )
-@settings(max_examples=10, deadline=None)
+@settings(max_examples=20, deadline=None)
 def test_prefix_filter_exactness_property(spark, docs):
     """The prefix-filtered candidate join (the r7 replacement for the
     quadratic length-band blocker) over RANDOM shingle sets: candidates
@@ -189,7 +189,7 @@ def test_prefix_filter_exactness_property(spark, docs):
         max_size=30,
     ),
 )
-@settings(max_examples=12, deadline=None)
+@settings(max_examples=25, deadline=None)
 def test_dup_rate_report_property(spark, rows):
     """dup_rate_report over RANDOM (possibly duplicate-keyed) grain
     ledgers matches a direct Python reference: per source, docs whose
@@ -238,7 +238,7 @@ def test_dup_rate_report_property(spark, rows):
         max_size=25,
     ),
 )
-@settings(max_examples=10, deadline=None)
+@settings(max_examples=20, deadline=None)
 def test_purchase_streak_property(spark, rows):
     """The islands query over RANDOM event sequences matches a direct
     Python fold: purchases close islands; max/current streak count the
@@ -304,7 +304,7 @@ def test_purchase_streak_property(spark, rows):
         max_size=30,
     ),
 )
-@settings(max_examples=10, deadline=None)
+@settings(max_examples=20, deadline=None)
 def test_run_checks_property(spark, vals):
     """run_checks over random data (with NULLs) matches a direct Python
     count: NULL predicate results are violations, and n_rows is the

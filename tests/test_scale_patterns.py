@@ -1891,6 +1891,44 @@ def test_ivfpq_residual_mode_identities(spark, tmp_path):
     assert grown == want and len(want) > 0
 
 
+def test_driver_probe_sets_match_spark_cosine_ranking(spark):
+    """IVF-PQ probe selection runs driver-side in numpy; the reference
+    is the Spark ranking it replaced — cosine via the JVM fold, best
+    first, ties to the lowest cent_id — on the fitted sf0.001 centroids
+    plus a duplicated centroid (an exact tie) at every nprobe."""
+    from pyspark.sql import Window
+
+    from data_integration_system_spark.functions.vectors import cosine
+    from data_integration_system_spark.operators._common import local_rows_df
+    from data_integration_system_spark.operators.similarity import (
+        _N_QUERIES,
+        _probe_sets,
+        fit_ivf_centroids,
+    )
+
+    fitted = fit_ivf_centroids(spark, SF).collect()
+    rows = [(int(r.cent_id), list(r.centroid)) for r in fitted]
+    rows.append((max(c for c, _ in rows) + 1, rows[0][1]))  # exact tie
+    cent = local_rows_df(spark, rows, "cent_id long, centroid array<double>")
+    qdf = table(spark, SF, "embeddings").filter(
+        F.col("vec_id") < _N_QUERIES
+    ).select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe"))
+    q_rows = [(r.q_id, list(r.qe)) for r in qdf.collect()]
+    w = Window.partitionBy("q_id").orderBy(F.col("d").desc(), "cent_id")
+    ranked = (
+        qdf.crossJoin(F.broadcast(cent))
+        .select("q_id", "cent_id", cosine("qe", "centroid").alias("d"))
+        .withColumn("rn", F.row_number().over(w))
+        .collect()
+    )
+    for nprobe in range(1, len(rows) + 1):
+        want: dict = {}
+        for r in ranked:
+            if r.rn <= nprobe:
+                want.setdefault(int(r.q_id), set()).add(int(r.cent_id))
+        assert _probe_sets(q_rows, cent.collect(), nprobe) == want, nprobe
+
+
 def test_ivfpq_handle_matches_oneshot_and_sees_appends_on_reopen(spark, tmp_path):
     """The serving handle (open_ivfpq_index): identical answers to the
     one-shot query path on the same index, repeated queries reuse the
