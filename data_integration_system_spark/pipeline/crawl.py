@@ -4,16 +4,23 @@
 asyncio queue drained by 8 worker tasks; here it becomes a driver-side
 iteration over frontier *generations* (SURVEY §3.4):
 
-    frontier₀ = seeds (depth 0)
-    genᵢ      = scope-filter(frontierᵢ) − visited
-    pagesᵢ    = extract(fetch(genᵢ))
-    frontierᵢ₊₁ = links(pagesᵢ) at depth i+1, deduped
+    frontier₀   = seeds (depth 0)
+    genᵢ        = scope-filter(frontierᵢ) − visited
+    fetchedᵢ    = fetch-and-parse(genᵢ)          one row per url
+    pagesᵢ      = fetchedᵢ where the body was HTML
+    retryᵢ      = fetchedᵢ where the fetch failed and retry < max_retries
+    visitedᵢ₊₁  = visitedᵢ ∪ (fetchedᵢ − retryᵢ)
+    frontierᵢ₊₁ = links(pagesᵢ) at depth i+1, deduped, ∪ retryᵢ (retry+1)
     stop when frontier empty, depth cap hit, or page budget spent
 
-Each arrow is a DataFrame transformation; `visited` is maintained by
-union + dropDuplicates, localCheckpoint()-ed each generation to cut
-lineage (SURVEY §7 'BFS loop at scale').  `max_pages_total` is ENFORCED
-— the reference declared it but never read it (models.py:23, SURVEY §6).
+Each arrow is a DataFrame transformation.  Per generation, `gen` is
+localCheckpoint()-ed and counted, and `fetched` is localCheckpoint()-ed
+once; pages, retries and the visited increment are filters of that one
+materialization.  `gen` is disjoint from `visited` and has one row per
+url, so `visited` grows by a plain union; its lineage, like the pages
+union's, is cut every `_CHECKPOINT_EVERY` generations (SURVEY §7 'BFS
+loop at scale').  `max_pages_total` is ENFORCED — the reference declared
+it but never read it (models.py:23, SURVEY §6).
 
 Gate order preserves the reference's manual pushdown (crawler_core.py:
 157-167: cheap predicates before the expensive fetch — which Catalyst
@@ -23,7 +30,7 @@ load-bearing exactly like it was in the reference).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,7 +42,7 @@ from data_integration_system_spark.functions.urls import (
     is_blocked_ext,
     path_of,
 )
-from data_integration_system_spark.pipeline.extract import extract_pages
+from data_integration_system_spark.pipeline.extract import PAGE_COLUMNS, parse_page
 from data_integration_system_spark.pipeline.fetch import FetchFn, fetch_frontier
 
 
@@ -68,8 +75,10 @@ class CrawlConfig:
     max_retries: int = 2
     incremental: bool = True       # models.py:18 / crawler_core.py:258
     per_domain: int = 2            # http_fetcher.py:23
-    checkpoint_every: int = 4      # lineage cut cadence (ours)
-    extra: dict = field(default_factory=dict)  # config jsonb escape hatch
+
+
+#: generations between lineage cuts of the in-memory pages and visited
+_CHECKPOINT_EVERY = 4
 
 
 def scope_filter(frontier: DataFrame, cfg: CrawlConfig) -> DataFrame:
@@ -149,7 +158,10 @@ def crawl(
         )
         .dropDuplicates(["url"])  # D1 enqueue-dedup, crawler_core.py:263-267
     )
-    visited = spark.createDataFrame([], "url string")
+    # a local relation, not spark.createDataFrame([]): that is a Python
+    # RDD whose empty partitions each start a Python task in every plan
+    # that reads visited until its next lineage cut
+    visited = local_rows_df(spark, [], "url string")
     pages: DataFrame | None = None
     budget = cfg.max_pages_total
     generation = 0
@@ -199,39 +211,35 @@ def crawl(
         budget -= n  # attempts consume budget: a crash-looping site
         # cannot extend the crawl past max_pages_total
 
-        # fetch ONCE, then split into outcomes (url_frontier's
-        # queued->done/failed state machine, db/schema.sql:37-39)
-        fetched = fetch_frontier(gen, fetch_fn, per_domain=cfg.per_domain).localCheckpoint()
-        failed = gen.join(
-            fetched.filter(F.col("content").isNull()).select("url"),
-            "url",
-            "left_semi",
-        )
-        retryable = failed.filter(F.col("retry") < cfg.max_retries).withColumn(
-            "retry", F.col("retry") + 1
-        )
-        # visited = everything attempted EXCEPT urls that will retry
-        visited = (
-            visited.unionByName(gen.select("url"))
-            .exceptAll(retryable.select("url"))
+        # fetch and parse ONCE, then split the one materialization into
+        # outcomes (url_frontier's queued->done/failed state machine,
+        # db/schema.sql:37-39)
+        fetched = (
+            fetch_frontier(
+                gen, fetch_fn, parse_page, PAGE_COLUMNS, per_domain=cfg.per_domain
+            )
+            .select(
+                url_hash("url").alias("page_id"),
+                "url",
+                domain_of(F.col("url")).alias("domain"),
+                "depth",
+                "text",
+                "links",
+                content_hash(F.col("text")).alias("content_hash"),
+                F.length("text").cast("long").alias("text_len"),
+                "retry",
+                "fetched",
+            )
             .localCheckpoint()
         )
-
-        html = fetched.filter(
-            F.col("content").isNotNull()
-            & F.col("content_type").contains("text/html")  # F10 dispatch
+        retrying = ~F.col("fetched") & (F.col("retry") < cfg.max_retries)
+        retryable = fetched.filter(retrying).select(
+            "url", "depth", (F.col("retry") + 1).alias("retry")
         )
-        extracted = extract_pages(html)
-        gen_pages = extracted.select(
-            url_hash("url").alias("page_id"),
-            "url",
-            domain_of(F.col("url")).alias("domain"),
-            "depth",
-            "text",
-            "links",
-            content_hash(F.col("text")).alias("content_hash"),
-            F.length("text").cast("long").alias("text_len"),
-        ).localCheckpoint()  # materialize: extraction runs exactly once
+        # visited = everything attempted EXCEPT urls that will retry
+        visited = visited.unionByName(fetched.filter(~retrying).select("url"))
+        # pages: HTML answers only (F10 dispatch in parse_page)
+        gen_pages = fetched.filter(F.col("text").isNotNull()).drop("retry", "fetched")
 
         # EXPAND (crawler_core.py:237-241): next generation = discovered
         # links at depth+1 (retry 0) + failed urls re-enqueued with
@@ -259,10 +267,6 @@ def crawl(
             visited.write.mode("overwrite").parquet(
                 f"{checkpoint_dir}/visited/gen={generation + 1}"
             )
-            from data_integration_system_spark.operators._common import (
-                local_rows_df,
-            )
-
             local_rows_df(
                 spark, [(generation + 1, budget)], "generation long, budget long"
             ).coalesce(1).write.mode("overwrite").parquet(
@@ -274,8 +278,9 @@ def crawl(
             visited = spark.read.parquet(f"{checkpoint_dir}/visited/gen={generation + 1}")
         else:
             pages = gen_pages if pages is None else pages.unionByName(gen_pages)
-            if generation % cfg.checkpoint_every == cfg.checkpoint_every - 1:
+            if generation % _CHECKPOINT_EVERY == _CHECKPOINT_EVERY - 1:
                 pages = pages.localCheckpoint()
+                visited = visited.localCheckpoint()
         generation += 1
 
     if checkpoint_dir:

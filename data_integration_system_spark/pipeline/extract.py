@@ -1,8 +1,9 @@
-"""Extraction stages: bytes → text, HTML → text+links, format dispatch.
+"""Extraction: bytes → text, HTML → text+links, format dispatch.
 
-Reference semantics re-expressed as Arrow-batched pandas UDF stages
-(the reference ran these as per-URL Python calls inside asyncio tasks,
-crawler/crawler_core.py:178-193):
+Reference semantics as per-URL Python functions, run the way the
+reference ran them — inside the task that fetched the URL
+(crawler/crawler_core.py:178-193): `parse_page` and `file_parser` are
+the parses `fetch.fetch_frontier` calls in its fetch pass.
 
 * charset cascade (crawler_core.py:33-55): header charset → utf-8
   (reject on mojibake markers) → windows-1254 → iso-8859-9 →
@@ -18,29 +19,24 @@ crawler/crawler_core.py:178-193):
   clearly-marked stub.  Errors are returned AS DATA (error column),
   never raised — the reference's contract (file_ingestion.py:61-63).
 
-Scale notes: every stage is `mapInPandas`/pandas-UDF over Arrow batches —
-binary payloads never pickle row-at-a-time.  Size caps (F9) and type
-dispatch (F10) are plain column predicates applied BEFORE these stages so
-skipped payloads never reach Python.
+Scale notes: the parses run in the fetch stage's Arrow-batched pass, so
+fetched bodies never cross into the JVM; only text, links and error
+markers do.  Type dispatch (F10, `parse_page` parses only text/html) and
+the size cap (F9, `extract_document`) are checked per URL before any
+parser runs, so skipped payloads are never parsed.
 """
 
 from __future__ import annotations
 
 import re
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 from html.parser import HTMLParser
 from urllib.parse import urldefrag, urljoin
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+
+from data_integration_system_spark.pipeline.fetch import ParseFn
 
 # ---------------------------------------------------------------------------
 # charset cascade (P5) — crawler_core.py:33-55
@@ -261,76 +257,57 @@ def extract_document(data: bytes, ext: str, max_bytes: int = 25_000_000) -> tupl
 
 
 # ---------------------------------------------------------------------------
-# DataFrame stages
+# per-URL parses, run by fetch.fetch_frontier in its fetch pass
 # ---------------------------------------------------------------------------
 
-PAGE_EXTRACT_SCHEMA = StructType(
-    [
-        StructField("url", StringType()),
-        StructField("depth", LongType()),
-        StructField("text", StringType()),
-        StructField("links", ArrayType(StringType())),
-    ]
-)
+
+def charset_of(content_type: str) -> str:
+    """The charset= parameter of a Content-Type header, or ""."""
+    for part in content_type.split(";"):
+        part = part.strip()
+        if part.lower().startswith("charset="):
+            return part.split("=", 1)[1].strip()
+    return ""
 
 
-def extract_pages(pages: DataFrame) -> DataFrame:
-    """HTML pages (url, depth, content: binary, charset: string) →
-    (url, depth, text, links).  One mapInPandas stage — the Python
-    boundary of the ingest pipeline; everything before and after is
-    JVM-side."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            texts: list[str] = []
-            links: list[list[str]] = []
-            for content, charset, url in zip(pdf["content"], pdf["charset"], pdf["url"]):
-                html = decode_bytes(bytes(content), charset or None)
-                t, ls = html_to_text_and_links(html, base_url=url)
-                texts.append(t)
-                links.append(ls)
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "depth": pdf["depth"].astype("int64"),
-                    "text": texts,
-                    "links": links,
-                }
-            )
-
-    return pages.mapInPandas(run, PAGE_EXTRACT_SCHEMA)
+#: the columns `parse_page` adds to each fetched frontier row
+PAGE_COLUMNS = "fetched boolean, text string, links array<string>"
 
 
-FILE_EXTRACT_SCHEMA = StructType(
-    [
-        StructField("url", StringType()),
-        StructField("text", StringType()),
-        StructField("error", StringType()),
-        StructField("size_bytes", LongType()),
-    ]
-)
+def parse_page(url: str, body: bytes | None, content_type: str) -> tuple:
+    """The page stream's parse: (fetched, text, links).  A failed fetch
+    is (False, None, None); F10 type dispatch gives content that is not
+    text/html no page and no links, (True, None, None)."""
+    if body is None:
+        return False, None, None
+    if "text/html" not in content_type:
+        return True, None, None
+    html = decode_bytes(body, charset_of(content_type) or None)
+    return (True, *html_to_text_and_links(html, base_url=url))
 
 
-def extract_files(files: DataFrame, max_bytes: int = 25_000_000) -> DataFrame:
-    """Binary documents (url, ext, content) → (url, text, error,
-    size_bytes) via the S9 dispatch.  The size cap ALSO exists as a
-    column predicate upstream (F9) so capped blobs can be pruned before
-    they're shipped to Python; here it's the belt-and-braces check."""
+def _url_ext(url: str) -> str:
+    """Python twin of functions.urls.ext_of: '.pdf' from
+    'https://x/a.PDF?dl=1'."""
+    m = re.search(r"(\.[^./\\]+)$", re.sub(r"[?#].*$", "", url))
+    return m.group(1).lower() if m else ""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            texts, errs, sizes = [], [], []
-            for content, ext in zip(pdf["content"], pdf["ext"]):
-                data = bytes(content)
-                t, e = extract_document(data, ext, max_bytes=max_bytes)
-                texts.append(t)
-                errs.append(e)
-                sizes.append(len(data))
-            yield pd.DataFrame(
-                {"url": pdf["url"], "text": texts, "error": errs, "size_bytes": sizes}
-            )
 
-    return files.mapInPandas(run, FILE_EXTRACT_SCHEMA)
+#: the columns `file_parser`'s parse adds to each fetched file-link row
+FILE_COLUMNS = "text string, error string, size_bytes long"
+
+
+def file_parser(max_bytes: int) -> ParseFn:
+    """The file stream's parse: (text, error, size_bytes) by the S9
+    dispatch on the URL's extension, oversize bodies included as
+    `skipped_too_large` (F9); a failed download gives no row."""
+
+    def parse(url: str, body: bytes | None, content_type: str) -> tuple | None:
+        if body is None:
+            return None
+        return (*extract_document(body, _url_ext(url), max_bytes), len(body))
+
+    return parse
 
 
 def with_text_metrics(df: DataFrame, text_col: str = "text") -> Column | DataFrame:

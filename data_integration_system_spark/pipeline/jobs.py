@@ -29,13 +29,12 @@ from pyspark.sql import functions as F
 from data_integration_system_spark.catalog import table
 from data_integration_system_spark.functions.skew import salted_agg
 from data_integration_system_spark.registry import query
-from data_integration_system_spark.functions.urls import ext_of
 from data_integration_system_spark.pipeline.crawl import (
     CrawlConfig,
     crawl,
     file_links_of,
 )
-from data_integration_system_spark.pipeline.extract import extract_files
+from data_integration_system_spark.pipeline.extract import FILE_COLUMNS, file_parser
 from data_integration_system_spark.pipeline.fetch import (
     FetchFn,
     default_http_fetch,
@@ -93,33 +92,18 @@ def ingest_files(
     pages: DataFrame, cfg: CrawlConfig, fetch_fn: FetchFn
 ) -> DataFrame:
     """The file-document stream (crawler_core.py:96-135 _handle_file_url,
-    batched): allowlisted file links discovered by the crawl → politeness
-    fetch → S4-S9 extraction with the size cap.  Errors stay data
-    (error column), exactly like download_extract_delete's contract.
-
-    The size cap is enforced as a COLUMN predicate before the Arrow
-    boundary (extract.py's F9 contract): oversize blobs never ship to
-    Python — their skipped_too_large marker rows are synthesized
-    Spark-side, preserving the reference's errors-as-data outcome
-    (crawler_core.py:116)."""
-    files = file_links_of(pages, cfg)
-    fetched = fetch_frontier(files, fetch_fn, per_domain=cfg.per_domain).filter(
-        F.col("content").isNotNull()
-    )
-    size = F.octet_length("content")
-    extracted = extract_files(
-        fetched.filter(size <= cfg.max_file_bytes).withColumn(
-            "ext", ext_of(F.col("url"))
-        ),
-        max_bytes=cfg.max_file_bytes,
-    )
-    too_large = fetched.filter(size > cfg.max_file_bytes).select(
-        "url",
-        F.lit("").alias("text"),
-        F.lit("skipped_too_large").alias("error"),
-        size.cast("long").alias("size_bytes"),
-    )
-    return extracted.unionByName(too_large)
+    batched): allowlisted file links discovered by the crawl, fetched
+    politely and extracted in the same pass by the S4-S9 dispatch, whose
+    size cap turns an oversize body into a skipped_too_large row
+    (crawler_core.py:116).  Errors stay data (error column), exactly like
+    download_extract_delete's contract; a failed download gives no row."""
+    return fetch_frontier(
+        file_links_of(pages, cfg),
+        fetch_fn,
+        file_parser(cfg.max_file_bytes),
+        FILE_COLUMNS,
+        per_domain=cfg.per_domain,
+    ).drop("depth")
 
 
 # ---------------------------------------------------------------------------
@@ -371,15 +355,14 @@ def run_pending_jobs(
     most of the cluster idle, so overlapping jobs back-fills the tails
     (measured: the 8-job sf0.1 drain 35 s serial → see SCALE.md r18).
     Every job writes only its own ``{output_root}/{job_id}`` paths, so
-    bodies are independent; LOG appends stay SERIALIZED (the claim loop
-    appends every RUNNING row before any body starts, and terminal rows
-    are appended under a lock) because concurrent parquet appends into
-    the ONE jobs-log dir would race on the shared ``_temporary``
-    staging dir.  Crash semantics: the whole claimed batch is marked
-    RUNNING up front — after a worker death the batch reads RUNNING
-    (was: unstarted tail stayed PENDING), which is the reference
-    daemon's claim-then-process shape (worker_daemon.py:31-38); stale
-    RUNNING recovery remains the resubmission path either way.
+    bodies are independent; LOG appends stay SERIALIZED (every append
+    holds ``_LOG_LOCK``) because concurrent parquet appends into the ONE
+    jobs-log dir would race on the shared ``_temporary`` staging dir.
+    Crash semantics: each job's RUNNING row is appended just before its
+    body starts, so a worker death leaves the started jobs RUNNING and
+    the unstarted tail PENDING for the next claim — the reference's
+    pick-one daemon shape (worker_daemon.py:31-38); stale RUNNING
+    recovery remains the resubmission path.
     ``max_workers=1`` restores the strictly serial walk."""
     pending = (
         current_jobs(spark, jobs_path)
@@ -390,23 +373,17 @@ def run_pending_jobs(
     )
     if not pending:
         return []
-    import threading
     from concurrent.futures import ThreadPoolExecutor
 
-    for row in pending:  # claim the batch (serial appends, one log dir)
-        job_status_update(spark, jobs_path, row["job_id"], "RUNNING")
-    log_lock = threading.Lock()
-
     def run_one(row) -> dict[str, Any]:
+        job_status_update(spark, jobs_path, row["job_id"], "RUNNING")
         report = run_job(
             spark, job_request_of(row),
             f"{output_root.rstrip('/')}/{row['job_id']}", fetch_fn,
         )
-        with log_lock:
-            job_status_update(
-                spark, jobs_path, row["job_id"], report["status"],
-                report["error"],
-            )
+        job_status_update(
+            spark, jobs_path, row["job_id"], report["status"], report["error"]
+        )
         return {"job_id": row["job_id"]} | report
 
     if max_workers <= 1 or len(pending) == 1:

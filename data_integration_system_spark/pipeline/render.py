@@ -5,11 +5,16 @@ enrichment stage over fetched rows.
 
 The reference class is DEAD CODE (never imported by crawler_core.py),
 so this stage is not on any default path either — it exists so a user
-who crawls JS-heavy sites can splice it between fetch and extract:
+who crawls JS-heavy sites can splice it between fetch and parse, by
+fetching with a parse that keeps the raw body (FETCHED_SCHEMA's columns)
+and parsing the rendered content afterwards (`charset_of` and
+`parse_page` are in extract.py):
 
-    fetched = fetch_frontier(frontier)
+    keep = lambda url, body, ctype: (body, ctype, charset_of(ctype))
+    fetched = fetch_frontier(frontier, fetch_fn, keep,
+                             "content binary, content_type string, charset string")
     rendered = render_pages(fetched)          # needs playwright
-    docs = extract_text(rendered)
+    # then per row: parse_page(url, content, content_type)
 
 Design mirrors pipeline/fetch.py exactly:
 
@@ -45,13 +50,30 @@ from collections.abc import Callable, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType, StructField, StructType
+from pyspark.sql.types import (
+    BinaryType,
+    BooleanType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from data_integration_system_spark.functions.urls import domain_of
-from data_integration_system_spark.pipeline.fetch import FETCHED_SCHEMA
 
 #: render(url) -> rendered DOM html, or None on failure
 RenderFn = Callable[[str], "str | None"]
+
+#: fetched rows with their raw body: the input of `render_pages`
+FETCHED_SCHEMA = StructType(
+    [
+        StructField("url", StringType()),
+        StructField("depth", LongType()),
+        StructField("content", BinaryType()),
+        StructField("content_type", StringType()),
+        StructField("charset", StringType()),
+    ]
+)
 
 RENDERED_SCHEMA = StructType(
     list(FETCHED_SCHEMA.fields) + [StructField("rendered", BooleanType())]

@@ -527,6 +527,70 @@ def test_crawl_retries_failed_fetches(spark, tmp_path):
     assert len(always.read_text().splitlines()) == 3  # 1 + 2 retries
 
 
+def test_crawl_non_html_answer_is_fetched_once_and_not_a_page(spark, tmp_path):
+    """F10 type dispatch on the page stream: a URL that answers with
+    content that is not text/html counts as fetched (no retry), gives no
+    page, and its body is never parsed for links (/z is only linked from
+    it, and /c only from the original /a)."""
+    fetches = tmp_path / "fetches.log"
+    site = dict(SITE)
+    site["https://ex.com/z"] = "Leaf Z"
+    site_fetch = make_fake_fetch(site)
+
+    def json_a_fetch(url: str, _log=str(fetches)):
+        with open(_log, "a") as fh:
+            fh.write(url + "\n")
+        if url == "https://ex.com/a":
+            return b'<a href="/z">z</a>', "application/json"
+        return site_fetch(url)
+
+    cfg = CrawlConfig(root_domain="ex.com", max_depth=5, max_pages_total=100,
+                      max_retries=2)
+    pages = crawl(spark, ["https://ex.com/"], cfg, json_a_fetch)
+    assert {r.url for r in pages.select("url").collect()} == {
+        "https://ex.com/",
+        "https://ex.com/b",
+    }
+    assert sorted(fetches.read_text().splitlines()) == [
+        "https://ex.com/",
+        "https://ex.com/a",
+        "https://ex.com/b",
+    ]
+
+
+def test_crawl_warm_count_job_budget(spark):
+    """Each generation is materialized once after its fetch-and-parse
+    pass: a warm crawl(...).count() over SITE (3 generations) schedules at
+    most 40 Spark jobs (50-51 with separate fetch and extract stages and
+    four materializations per generation)."""
+    cfg = CrawlConfig(root_domain="ex.com", max_depth=5, max_pages_total=100)
+    crawl(spark, ["https://ex.com/"], cfg, fake_fetch).count()  # warm
+    sc = spark.sparkContext
+    sc.setJobGroup("crawl-job-budget", "warm crawl count")
+    try:
+        n = crawl(spark, ["https://ex.com/"], cfg, fake_fetch).count()
+    finally:
+        sc.setJobGroup("", "")
+    assert n == 4
+    assert len(sc.statusTracker().getJobIdsForGroup("crawl-job-budget")) <= 40
+
+
+def test_url_ext_matches_spark_ext_of(spark):
+    """The file parse's extension dispatch agrees with the Spark-side
+    `ext_of` that selected the file links."""
+    from data_integration_system_spark.functions.urls import ext_of
+    from data_integration_system_spark.pipeline.extract import _url_ext
+
+    urls = [
+        "https://x/a.PDF?dl=1", "https://x/a.docx#p2", "https://x/dir.d/file",
+        "https://x/a.tar.gz", "https://x/", "https://x/a.", "https://x/.xlsx",
+        "https://x/a.pdf?q=b.txt", "https://x/a\\b.txt", "",
+    ]
+    df = spark.createDataFrame([(u,) for u in urls], "url string")
+    got = {r.url: r.ext for r in df.select("url", ext_of("url").alias("ext")).collect()}
+    assert {u: _url_ext(u) for u in urls} == got
+
+
 # ---------------------------------------------------------------------------
 # maintenance: small-files compaction
 # ---------------------------------------------------------------------------
@@ -1065,6 +1129,37 @@ def test_run_pending_jobs_drains_past_claim_limit(spark, tmp_path):
     assert rounds == 3
     state = {r.job_id: r.status for r in current_jobs(spark, jobs_path).collect()}
     assert state == {i: "DONE" for i in ids}
+
+
+def test_run_pending_jobs_worker_death_leaves_unstarted_jobs_pending(
+    spark, tmp_path, monkeypatch
+):
+    """Claim semantics: a job is marked RUNNING just before its body
+    starts, so a worker that dies inside the first of two claimed jobs
+    leaves the second PENDING for the next claim (the reference's
+    pick-one daemon, worker_daemon.py:31-38), not RUNNING forever."""
+    from data_integration_system_spark.pipeline import jobs
+
+    class WorkerDeath(BaseException):
+        pass
+
+    def dying_run_job(*args, **kwargs):
+        raise WorkerDeath
+
+    jobs_path = str(tmp_path / "jobs_log")
+    first, second = (
+        jobs.submit_job(spark, jobs_path,
+                        {"url": "https://ex.com/", "download_files": False})
+        for _ in range(2)
+    )
+    monkeypatch.setattr(jobs, "run_job", dying_run_job)
+    with pytest.raises(WorkerDeath):
+        jobs.run_pending_jobs(spark, jobs_path, str(tmp_path / "out"),
+                              fetch_fn=fake_fetch, max_workers=1)
+    state = {
+        r.job_id: r.status for r in jobs.current_jobs(spark, jobs_path).collect()
+    }
+    assert state == {first: "RUNNING", second: "PENDING"}
 
 
 def test_snapshot_time_travel_and_diff(spark, tmp_path):
