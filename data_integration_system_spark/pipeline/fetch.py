@@ -6,8 +6,10 @@ the caller's per-URL parse in the same pass, as the reference parses each
 URL inside the task that fetched it (crawler_core.py:178-193):
 
 * The frontier is `repartition("domain")`-ed so each domain's URLs land
-  together; inside a partition a bounded thread pool + per-domain
-  semaphores reproduce the reference's ≤2-in-flight-per-domain rule.
+  together; `fetch_batch` fetches each batch on a bounded thread pool
+  whose per-domain semaphores reproduce the reference's
+  ≤2-in-flight-per-domain rule.  The crawl's driver path calls the same
+  function on a whole generation.
   Catalyst cannot see a politeness constraint (SURVEY §4.2) — it lives
   here, isolated from all query paths.  The parse runs after the
   semaphore is released, so parsing never holds a politeness slot.
@@ -26,8 +28,8 @@ domain (one giant site) throttles only its own partition.
 
 from __future__ import annotations
 
+import re
 import threading
-from collections import defaultdict
 from collections.abc import Callable, Iterator
 
 import pandas as pd
@@ -35,7 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from data_integration_system_spark.functions.urls import domain_of
+from data_integration_system_spark.functions.urls import _HOST_RE, domain_of
 
 #: fetch(url) -> (body bytes | None, content_type)
 FetchFn = Callable[[str], "tuple[bytes | None, str]"]
@@ -44,8 +46,10 @@ FetchFn = Callable[[str], "tuple[bytes | None, str]"]
 #: columns, or None for no output row
 ParseFn = Callable[[str, "bytes | None", str], "tuple | None"]
 
-#: fetch threads per partition
+#: fetch threads per batch
 _POOL_SIZE = 8
+
+_HOST = re.compile(_HOST_RE)
 
 
 def default_http_fetch(url: str, timeout_s: int = 20) -> tuple[bytes | None, str]:
@@ -61,6 +65,62 @@ def default_http_fetch(url: str, timeout_s: int = 20) -> tuple[bytes | None, str
         return None, ""
 
 
+def _politeness_key(url: str) -> str:
+    """Python twin of functions.urls.domain_of, the key of a URL's
+    politeness slot: lowercased host, port kept, leading www. stripped.
+    Keying on anything else (the raw host, or a split on "/" that keeps
+    a path-less URL's ?query) would give one site several semaphores and
+    multiply its in-flight budget."""
+    m = _HOST.match(url.lower())
+    return m.group(1).removeprefix("www.") if m else ""
+
+
+def fetch_batch(
+    pdf: pd.DataFrame,
+    fetch_fn: FetchFn,
+    parse: ParseFn,
+    names: list[str],
+    per_domain: int,
+) -> pd.DataFrame:
+    """Fetch and parse one batch of frontier rows on a bounded thread
+    pool, at most `per_domain` fetches in flight per domain (the
+    reference's HttpFetcher(per_domain=2), http_fetcher.py:7-15,23).
+    Returns each row followed by what `parse` returned for it, under
+    `names`; rows it returns None for are dropped.  The parse runs after
+    the politeness slot is released, so parsing never holds one.
+
+    The one fetch implementation: `fetch_frontier`'s pass runs it per
+    Arrow batch, and the crawl's driver path runs it per generation."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    urls = list(pdf["url"])
+    keys = pd.Series([_politeness_key(u) for u in urls])
+    # every semaphore exists before the first fetch: threads creating
+    # them on demand could race and give one domain two
+    sems = {k: threading.Semaphore(per_domain) for k in keys}
+    # submit round-robin over domains (each domain's first url, then each
+    # one's second, ...): in batch order, a run of one domain's urls
+    # would fill the pool with threads waiting on its semaphore while
+    # the other domains' urls sit idle behind them
+    order = keys.groupby(keys).cumcount().sort_values(kind="stable").index
+
+    def one(i: int) -> tuple | None:
+        with sems[keys[i]]:
+            body, content_type = fetch_fn(urls[i])
+        return parse(urls[i], body, content_type)
+
+    parsed: list[tuple | None] = [None] * len(urls)
+    with ThreadPoolExecutor(max_workers=_POOL_SIZE) as pool:
+        for i, out in zip(order, pool.map(one, order)):
+            parsed[i] = out
+    rows = [
+        (*row, *out)
+        for row, out in zip(pdf.itertuples(index=False), parsed)
+        if out is not None
+    ]
+    return pd.DataFrame(rows, columns=names)
+
+
 def fetch_frontier(
     frontier: DataFrame,
     fetch_fn: FetchFn,
@@ -71,37 +131,14 @@ def fetch_frontier(
     """Frontier rows (a `url` column among them) → each row followed by
     `columns` (a DDL string), the values `parse(url, body, content_type)`
     returns for it; rows it returns None for are dropped.  Partitioned
-    by domain; per-domain Semaphore(per_domain) inside each partition
-    mirrors HttpFetcher(per_domain=2) (http_fetcher.py:7-15,23)."""
+    by domain, each Arrow batch fetched and parsed by `fetch_batch`."""
     schema = StructType(frontier.schema.fields + StructType.fromDDL(columns).fields)
     names = schema.fieldNames()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from concurrent.futures import ThreadPoolExecutor
-
-        sems: dict[str, threading.Semaphore] = defaultdict(
-            lambda: threading.Semaphore(per_domain)
-        )
-
-        def one(url: str) -> tuple | None:
-            # normalize like domain_of (lowercase, strip www.) — keying
-            # on the raw host would give WWW.Ex.com and ex.com separate
-            # semaphores, doubling the per-site budget
-            dom = url.split("/")[2].lower() if "://" in url else url.lower()
-            dom = dom.removeprefix("www.")
-            with sems[dom]:
-                body, content_type = fetch_fn(url)
-            return parse(url, body, content_type)
-
         for pdf in batches:
-            with ThreadPoolExecutor(max_workers=_POOL_SIZE) as pool:
-                parsed = list(pool.map(one, pdf["url"]))
-            rows = [
-                (*row, *out)
-                for row, out in zip(pdf.itertuples(index=False), parsed)
-                if out is not None
-            ]
-            if rows:
-                yield pd.DataFrame(rows, columns=names)
+            out = fetch_batch(pdf, fetch_fn, parse, names, per_domain)
+            if len(out):
+                yield out
 
     return frontier.repartition(domain_of(F.col("url"))).mapInPandas(run, schema)

@@ -53,6 +53,7 @@ import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
+from data_integration_system_spark.operators._common import local_rows_df
 from data_integration_system_spark.pipeline.fsutil import hadoop_path
 
 MANIFEST_NAME = "_manifest.json"
@@ -590,7 +591,7 @@ def _relation_df(
         # with the relation's schema, not an error (write_manifest
         # carries schema_json forward across emptying commits)
         if schema is not None:
-            return spark.createDataFrame([], schema)
+            return local_rows_df(spark, [], schema)
         raise ValueError(
             f"manifest lists no files for {root} and stores no schema "
             "(pre-schema manifest of an empty relation) — rebuild the "

@@ -22,3 +22,17 @@ def test_no_python_stage_beside_the_fetch_pass():
         if "mapInPandas" in line
     ]
     assert not offenders, offenders
+
+
+def test_crawl_fetches_only_through_fetch_batch():
+    """The crawl's driver path fetches through ``fetch.fetch_batch``, the
+    one implementation of the per-domain politeness rule: a thread pool
+    or semaphore in ``crawl.py`` would be a second one."""
+    offenders = [
+        f"pipeline/crawl.py:{i}: {line.strip()}"
+        for i, line in enumerate(
+            (_PKG / "pipeline/crawl.py").read_text().splitlines(), 1
+        )
+        if "ThreadPoolExecutor" in line or "Semaphore" in line
+    ]
+    assert not offenders, offenders

@@ -1273,3 +1273,219 @@ def test_index_maintenance_rebuild_dispatch(spark, tmp_path):
     meta = spark.read.parquet(f"{idx2}/meta").head()
     assert meta["residual_mode"] == "auto" and meta["opq"] is True
     assert query_ivfpq_index(spark, idx2, queries).count() > 0
+
+
+# ---------------------------------------------------------------------------
+# crawl paths: the driver path, a handoff to the distributed loop after
+# the first generation (cap 1) and the distributed loop alone (cap 0)
+# ---------------------------------------------------------------------------
+
+PATH_SITE = {
+    "https://ex.com/docs/": '<a href="/docs/a">a</a><a href="/other/b">b</a><a href="/docs">d</a>',
+    "https://ex.com/docs/a": '<a href="/docs/c.pdf">pdf</a>Doc A',
+    "https://ex.com/docs": "Docs index",
+    "https://ex.com/other/b": "Out of scope",
+}
+
+
+def _failing_fetch(log: str, fail_times: int):
+    """SITE, with /b answering nothing on its first `fail_times`
+    attempts; attempts are logged to `log`."""
+
+    def fetch(url: str):
+        if url == "https://ex.com/b":
+            with open(log, "a") as fh:
+                fh.write("b\n")
+            with open(log) as fh:
+                if sum(1 for _ in fh) <= fail_times:
+                    return None, ""
+        return fake_fetch(url)
+
+    return fetch
+
+
+def _json_a_fetch():
+    """SITE, with /a answering JSON that holds a link."""
+
+    def fetch(url: str):
+        if url == "https://ex.com/a":
+            return b'<a href="/z">z</a>', "application/json"
+        return fake_fetch(url)
+
+    return fetch
+
+
+_PATH_SCENARIOS = {
+    "site": (dict(max_depth=5), lambda log: fake_fetch, "https://ex.com/"),
+    "budget_2": (dict(max_pages_total=2), lambda log: fake_fetch, "https://ex.com/"),
+    "single_page": (dict(single_page=True), lambda log: fake_fetch, "https://ex.com/"),
+    "path_mode": (
+        dict(path_mode=True, base_path="/docs"),
+        lambda log: make_fake_fetch(PATH_SITE),
+        "https://ex.com/docs/",
+    ),
+    "max_depth_1": (dict(max_depth=1), lambda log: fake_fetch, "https://ex.com/"),
+    "flaky": (dict(), lambda log: _failing_fetch(log, 2), "https://ex.com/"),
+    "always_failing": (dict(), lambda log: _failing_fetch(log, 99), "https://ex.com/"),
+    "always_failing_budget_4": (
+        dict(max_pages_total=4), lambda log: _failing_fetch(log, 99), "https://ex.com/"
+    ),
+    "non_html": (dict(), lambda log: _json_a_fetch(), "https://ex.com/"),
+}
+
+
+@pytest.mark.parametrize("scenario", sorted(_PATH_SCENARIOS))
+def test_crawl_driver_path_matches_distributed(spark, tmp_path, monkeypatch, scenario):
+    """The driver path, a crawl handed to the distributed loop after its
+    first generation, and the distributed loop alone give the same
+    8-column pages table, file links and fetch attempts on every
+    scenario.  The default 20,000-page budget stays on the driver (the
+    run fails if it reaches the distributed fetch); a multi-generation
+    crawl under cap 1 must reach it."""
+    from data_integration_system_spark.pipeline import crawl as C
+
+    opts, make_fetch, seed = _PATH_SCENARIOS[scenario]
+    cfg = CrawlConfig(root_domain="ex.com", **opts)
+
+    def run(tag: str):
+        log = tmp_path / f"{tag}.log"
+        pages = crawl(spark, [seed], cfg, make_fetch(str(log)))
+        return (
+            sorted(map(tuple, pages.collect())),
+            sorted(r.url for r in file_links_of(pages, cfg).collect()),
+            len(log.read_text().splitlines()) if log.exists() else 0,
+        )
+
+    def no_distributed_fetch(*args, **kwargs):
+        raise AssertionError("the driver path ran the distributed fetch")
+
+    distributed_fetches = []
+    fetch_frontier = C.fetch_frontier
+
+    def counted_fetch(*args, **kwargs):
+        distributed_fetches.append(1)
+        return fetch_frontier(*args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(C, "fetch_frontier", no_distributed_fetch)
+        on_driver = run("driver")
+    with monkeypatch.context() as m:
+        m.setattr(C, "fetch_frontier", counted_fetch)
+        m.setattr(C, "_LOCAL_CRAWL_PAGES", 1)
+        handed_off = run("handoff")
+    with monkeypatch.context() as m:
+        m.setattr(C, "_LOCAL_CRAWL_PAGES", 0)
+        distributed = run("distributed")
+    assert on_driver == handed_off == distributed
+    assert on_driver[0], "every scenario crawls at least the seed"
+    assert bool(distributed_fetches) == (scenario != "single_page")
+    if scenario in ("flaky", "always_failing"):
+        assert on_driver[2] == 3  # /b: first attempt + max_retries
+
+
+def _warm_jobs(spark, group: str, action) -> tuple:
+    """(result, Spark jobs) of `action()` after one warm-up call."""
+    action()
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setJobGroup("", "")
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_crawl_driver_path_job_budget(spark, tmp_path):
+    """A crawl that ends on the driver runs its generations without
+    Spark jobs, whatever its budget: a warm crawl(...).count() over SITE
+    at the default 20,000-page budget takes at most 3 jobs (31 on the
+    distributed loop) and a warm run_job at most 8."""
+    from data_integration_system_spark.pipeline.jobs import run_job
+
+    cfg = CrawlConfig(root_domain="ex.com", max_depth=5)
+    n, jobs = _warm_jobs(
+        spark, "crawl-driver-count",
+        lambda: crawl(spark, ["https://ex.com/"], cfg, fake_fetch).count(),
+    )
+    assert n == 4 and jobs <= 3, jobs
+
+    outs = iter(str(tmp_path / f"out{i}") for i in range(2))
+    job = {"start_urls": ["https://ex.com/"], "max_depth_root": 5,
+           "download_files": False}
+    report, jobs = _warm_jobs(
+        spark, "crawl-driver-run-job",
+        lambda: run_job(spark, job, next(outs), fetch_fn=fake_fetch),
+    )
+    assert report["status"] == "DONE" and report["pages"] == 4
+    assert jobs <= 8, jobs
+
+
+def test_crawl_distributed_job_budget(spark, monkeypatch):
+    """The distributed loop keeps its per-generation cost: a warm
+    crawl(...).count() over SITE with the driver path off takes at most
+    40 Spark jobs."""
+    from data_integration_system_spark.pipeline import crawl as C
+
+    monkeypatch.setattr(C, "_LOCAL_CRAWL_PAGES", 0)
+    cfg = CrawlConfig(root_domain="ex.com", max_depth=5, max_pages_total=100)
+    n, jobs = _warm_jobs(
+        spark, "crawl-distributed-count",
+        lambda: crawl(spark, ["https://ex.com/"], cfg, fake_fetch).count(),
+    )
+    assert n == 4 and jobs <= 40, jobs
+
+
+def test_crawl_driver_path_politeness(spark):
+    """The driver path fetches a whole generation on one pool, across
+    domains: it keeps at most per_domain fetches in flight per domain,
+    path-less ?query URLs included, and starts the domains side by side.
+    Submitted in (depth, url) order, a.com's 10 urls would fill the
+    8-thread pool and b.com's first fetch would wait for a.com's."""
+    import threading
+    import time
+    from urllib.parse import urlsplit
+
+    hub = "".join(
+        f'<a href="https://{h}/p{i}">p</a>' for h in ("a.com", "b.com") for i in range(10)
+    ) + "".join(f'<a href="https://b.com?p={i}">q</a>' for i in range(3))
+    lock = threading.Lock()
+    in_flight: dict[str, int] = {}
+    peak: dict[str, int] = {}
+    starts: list[str] = []
+
+    def slow_fetch(url: str):
+        dom = urlsplit(url).hostname
+        with lock:
+            in_flight[dom] = in_flight.get(dom, 0) + 1
+            peak[dom] = max(peak.get(dom, 0), in_flight[dom])
+            starts.append(dom)
+        time.sleep(0.05)
+        with lock:
+            in_flight[dom] -= 1
+        body = hub if url == "https://a.com/" else "leaf"
+        return f"<html><body>{body}</body></html>".encode(), "text/html"
+
+    cfg = CrawlConfig(root_domain="a.com", same_domain_only=False, max_depth=1,
+                      per_domain=2)
+    assert crawl(spark, ["https://a.com/"], cfg, slow_fetch).count() == 24
+    assert set(peak) == {"a.com", "b.com"}
+    assert max(peak.values()) <= 2, peak
+    # the seed, then the second generation's first 4 fetches
+    assert set(starts[1:5]) == {"a.com", "b.com"}, starts
+
+
+def test_politeness_key_matches_domain_of(spark):
+    """fetch_batch's semaphore key is domain_of's value: a path-less URL
+    with a ?query or #fragment shares its site's slot."""
+    from data_integration_system_spark.functions.urls import domain_of
+    from data_integration_system_spark.pipeline.fetch import _politeness_key
+
+    urls = [
+        "https://ex.com?p=2", "https://ex.com#frag", "https://ex.com:8080/a",
+        "https://WWW.Ex.com/a", "https://www.ex.com", "http://sub.ex.com/x?y=/z",
+        "ex.com/no-scheme", "",
+    ]
+    df = spark.createDataFrame([(u,) for u in urls], "url string")
+    got = {r.url: r.d for r in df.select("url", domain_of("url").alias("d")).collect()}
+    assert {u: _politeness_key(u) for u in urls} == got
+    assert _politeness_key("https://ex.com?p=2") == "ex.com"

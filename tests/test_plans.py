@@ -746,6 +746,24 @@ def test_local_rows_df_is_local_table_scan(spark):
     assert rows == {("a", 1, (1.0, 2.0)), ("b", None, ())}
 
 
+def test_no_empty_python_rdd_frames():
+    """Empty frames are built with local_rows_df: an empty
+    ``createDataFrame([], ...)`` is a Python RDD whose empty partitions
+    each start a Python task in every plan that reads the frame."""
+    from pathlib import Path
+
+    import data_integration_system_spark
+
+    pkg = Path(data_integration_system_spark.__file__).parent
+    offenders = [
+        f"{path.relative_to(pkg)}:{i}: {line.strip()}"
+        for path in sorted(pkg.rglob("*.py"))
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if "createDataFrame([]" in line and not line.strip().startswith("#")
+    ]
+    assert not offenders, offenders
+
+
 def test_local_rows_df_concurrent_threads_keep_conf(spark):
     """The r14 ADVICE race: local_rows_df's Arrow-conf set/restore is
     session-global — concurrent callers (multiple streaming queries'
