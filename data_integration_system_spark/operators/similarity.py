@@ -97,16 +97,32 @@ def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_id",
         F.when(denom > 0, dot(F.col("qe"), F.col("ce")) / denom).alias("sim"),
     )
+    return _rank_topk(sims, _TOP_K)
+
+
+def _rank_topk(sims: DataFrame, top_k: int) -> DataFrame:
+    """(q_id, c_id, sim) -> each query's ``top_k`` best by sim, ties to
+    the lowest c_id, as (q_id, c_id, rnk, cos_sim): the one ranking
+    tail of every exact and re-ranked path.  The similarity is rounded
+    AFTER ranking."""
     w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), "c_id")
     return (
         sims.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _TOP_K)
+        .filter(F.col("rn") <= top_k)
         .select(
             "q_id",
             "c_id",
             F.col("rn").cast("long").alias("rnk"),
             F.round("sim", 4).alias("cos_sim"),
         )
+    )
+
+
+def _query_frame(emb: DataFrame) -> DataFrame:
+    """The query side of every fixture-driven search: the first
+    _N_QUERIES vectors as (q_id, qe)."""
+    return emb.filter(F.col("vec_id") < _N_QUERIES).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe")
     )
 
 
@@ -174,13 +190,14 @@ def _nearest_centroid(df: DataFrame, cent: DataFrame) -> DataFrame:
 
 
 _LLOYD_ITERS = 2
+_IVFPQ_NPROBE = 3  #: probed centroids per query, IVF and IVF-PQ alike
 
 
 @query("similarity_ivf_topk", oracle=None)
 def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """North-star IVF-style ANN: corpus vectors are k-means-assigned to
-    centroids (label-mean init + Lloyd refinement rounds, all
-    distributed: shuffle-free inline-argmax assignment, posexplode mean
+    centroids (fit_ivf_centroids: label-mean init + Lloyd refinement
+    rounds, shuffle-free inline-argmax assignment, posexplode mean
     update); each query probes only the `nprobe` nearest centroids'
     partitions.
 
@@ -191,45 +208,83 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Approximate -> rows-only."""
     from data_integration_system_spark.operators._common import parallelize_scan
 
-    # spread the unsplittable small scan: every Lloyd round's explode +
-    # inline argmin inherits the partitioning (3.6 s -> 0.7 s at sf0.1)
+    # spread the unsplittable small scan: the assignment's inline argmin
+    # inherits the partitioning (3.6 s -> 0.7 s at sf0.1)
     emb = parallelize_scan(table(spark, sf_dir, "embeddings"))
-    nprobe = 3
-
     corpus = emb.filter(F.col("vec_id") >= _N_QUERIES)
-    # init: per-label means; then Lloyd rounds re-assign + re-average.
-    # localCheckpoint per round: k×dim rows, and it cuts the iterative
-    # lineage exactly like the crawl/clustering loops.
-    cent = _elementwise_means(
-        emb.select(F.col("label").alias("cent_id"), "embedding")
-    ).localCheckpoint()
-    for _ in range(_LLOYD_ITERS):
-        asg = nearest_centroid(corpus.select("vec_id", "embedding"), cent)
-        cent = _elementwise_means(asg).localCheckpoint()
-
-    assigned = nearest_centroid(corpus.select("vec_id", "embedding"), cent)
-
-    # each query probes its nprobe nearest centroids
-    queries = emb.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe")
+    cent = fit_ivf_centroids(spark, sf_dir)
+    cent_rows = cent.collect()
+    assigned = nearest_centroid(
+        corpus.select("vec_id", "embedding"), cent, rows=cent_rows
     )
-    probe_w = Window.partitionBy("q_id").orderBy(F.col("d").desc(), "cent_id")
-    probes = (
-        queries.crossJoin(F.broadcast(cent))
-        .select("q_id", "qe", "cent_id", cosine("qe", "centroid").alias("d"))
-        .withColumn("rn", F.row_number().over(probe_w))
-        .filter(F.col("rn") <= nprobe)
-        .select("q_id", "qe", "cent_id")
+    probes, _ = _ivf_probes(_query_frame(emb), cent_rows, _IVFPQ_NPROBE)
+    return _rank_topk(
+        probes.join(assigned, "cent_id").select(
+            "q_id",
+            F.col("vec_id").alias("c_id"),
+            cosine("qe", "embedding").alias("sim"),
+        ),
+        _TOP_K,
     )
 
-    top_w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), "c_id")
-    return (
-        probes.join(assigned, "cent_id")
-        .select("q_id", F.col("vec_id").alias("c_id"), cosine("qe", "embedding").alias("sim"))
-        .withColumn("rn", F.row_number().over(top_w))
-        .filter(F.col("rn") <= _TOP_K)
-        .select("q_id", "c_id", F.col("rn").cast("long").alias("rnk"), F.round("sim", 4).alias("cos_sim"))
+
+def _probe_sets(q_rows: list, cent_rows: list, nprobe: int) -> dict:
+    """Per-query probe assignment: ``{q_id: {cent_id, ...}}`` for the
+    ``nprobe`` nearest centroids by ``functions.vectors.cosine``, best
+    first, ties to the lowest cent_id.  Driver-side numpy over
+    ``(q_id, embedding)`` query rows and the k centroid rows — the one
+    probe ranking of both IVF tiers: every serving path already collects
+    its queries (pq_shortlist's LUTs, _ivf_probes' probe relation), so
+    probe selection needs no Spark job of its own.
+
+    The sums are left-to-right folds over the dimensions (one loop over
+    them for the whole batch), the JVM cosine's order, so a similarity
+    is bit-identical to the Spark expression's and equal centroids tie
+    exactly (a BLAS dot may sum two equal rows in different orders and
+    break the tie either way); a zero-norm pair ranks last, where the
+    NULL cosine sorts."""
+    import numpy as np
+
+    cent_rows = sorted(cent_rows, key=lambda r: int(r.cent_id))
+    ids = np.asarray([int(r.cent_id) for r in cent_rows])
+    cmat = np.asarray([list(r.centroid) for r in cent_rows], dtype=np.float64)
+    qmat = np.asarray([list(qe) for _, qe in q_rows], dtype=np.float64)
+    qmat = qmat.reshape(len(q_rows), cmat.shape[1])
+    dots = np.zeros((len(q_rows), len(ids)))
+    qsq, csq = np.zeros(len(q_rows)), np.zeros(len(ids))
+    for j in range(cmat.shape[1]):
+        dots = dots + qmat[:, j, None] * cmat[:, j]
+        qsq = qsq + qmat[:, j] * qmat[:, j]
+        csq = csq + cmat[:, j] * cmat[:, j]
+    n = np.sqrt(qsq)[:, None] * np.sqrt(csq)
+    sims = np.where(n > 0, dots / np.where(n > 0, n, 1.0), -np.inf)
+    order = np.argsort(-sims, axis=1, kind="stable")[:, :nprobe]
+    return {
+        int(q_id): {int(c) for c in ids[row]}
+        for (q_id, _), row in zip(q_rows, order)
+    }
+
+
+def _ivf_probes(queries: DataFrame, cent_rows: list, nprobe: int) -> tuple:
+    """``(probes, probed)``: each (q_id, qe) query row paired with each
+    of its ``nprobe`` nearest centroids (_probe_sets, driver-side) as a
+    local (q_id, qe, cent_id) relation, and the sorted union of probed
+    cent_ids — the literal partition filter of a pruned corpus scan.
+    The queries are collected once; the probe list needs no Spark job
+    of its own."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from data_integration_system_spark.operators._common import local_rows_df
+
+    queries = queries.select("q_id", "qe")
+    q_rows = [(r[0], list(r[1])) for r in queries.collect()]
+    sets = _probe_sets(q_rows, cent_rows, nprobe)
+    probes = local_rows_df(
+        queries.sparkSession,
+        [(q, qe, c) for q, qe in q_rows for c in sorted(sets[int(q)])],
+        StructType(queries.schema.fields + [StructField("cent_id", LongType())]),
     )
+    return probes, sorted({c for s in sets.values() for c in s})
 
 
 @query(
@@ -363,51 +418,32 @@ def query_ivf_index(
     index_path: str,
     queries: DataFrame,
     top_k: int = _TOP_K,
-    nprobe: int = 3,
+    nprobe: int = _IVFPQ_NPROBE,
 ) -> DataFrame:
-    """ANN top-k against a built index: probe selection runs on the tiny
-    centroids table, and the per-query probe ids become LITERAL partition
-    filters on the corpus scan (collecting q×nprobe ints to the driver is
-    the index-probe protocol — that is what makes partition PRUNING, not
-    post-scan filtering, possible).  `queries` is (q_id, qe)."""
-    cent = spark.read.parquet(f"{index_path}/centroids")
-    probe_w = Window.partitionBy("q_id").orderBy(F.col("d").desc(), "cent_id")
-    probes = (
-        queries.crossJoin(F.broadcast(cent))
-        .select("q_id", "qe", "cent_id", cosine("qe", "centroid").alias("d"))
-        .withColumn("rn", F.row_number().over(probe_w))
-        .filter(F.col("rn") <= nprobe)
-        .select("q_id", "qe", "cent_id")
-        .localCheckpoint()  # tiny; freezes the probe list for the collect
-    )
-    probed_cents = sorted(
-        {r.cent_id for r in probes.select("cent_id").distinct().collect()}
-    )
+    """ANN top-k against a built index: probe selection runs driver-side
+    on the tiny centroids table, and the per-query probe ids become
+    LITERAL partition filters on the corpus scan (collecting q×nprobe
+    ints to the driver is the index-probe protocol — that is what makes
+    partition PRUNING, not post-scan filtering, possible).  `queries` is
+    (q_id, qe)."""
+    cent_rows = spark.read.parquet(f"{index_path}/centroids").collect()
+    probes, probed = _ivf_probes(queries, cent_rows, nprobe)
     corpus = (
         spark.read.parquet(f"{index_path}/corpus")
-        .filter(F.col("cent_id").isin(probed_cents))  # literal -> PartitionFilters
+        .filter(F.col("cent_id").isin(probed))  # literal -> PartitionFilters
         # redelivered appends (at-least-once streaming ingest) duplicate
         # (vec_id, embedding) rows; without this a duplicate would hold
         # TWO of the top-k ranks.  Cost: one dedup over the PROBED
         # nprobe/k subset only, never the whole index.
         .dropDuplicates(["vec_id"])
     )
-    top_w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), "c_id")
-    return (
-        probes.join(corpus, "cent_id")
-        .select(
+    return _rank_topk(
+        probes.join(corpus, "cent_id").select(
             "q_id",
             F.col("vec_id").alias("c_id"),
             cosine("qe", "embedding").alias("sim"),
-        )
-        .withColumn("rn", F.row_number().over(top_w))
-        .filter(F.col("rn") <= top_k)
-        .select(
-            "q_id",
-            "c_id",
-            F.col("rn").cast("long").alias("rnk"),
-            F.round("sim", 4).alias("cos_sim"),
-        )
+        ),
+        top_k,
     )
 
 
@@ -430,24 +466,37 @@ def similarity_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     overlap without materializing either payload."""
     exact = similarity_topk(spark, sf_dir).select("q_id", "c_id")
     approx = similarity_ivf_topk(spark, sf_dir).select("q_id", "c_id")
-    hits = (
-        approx.join(exact, ["q_id", "c_id"], "left_semi")
-        .groupBy("q_id")
-        .agg(F.count("*").cast("long").alias("n_hits"))
-    )
     return (
         exact.select("q_id")
         .distinct()
-        .join(hits, "q_id", "left")
-        .select(
-            "q_id",
-            F.coalesce("n_hits", F.lit(0)).cast("long").alias("n_hits"),
-            F.expr(f"coalesce(n_hits, 0) * 100 div {_TOP_K}")
-            .cast("long")
-            .alias("recall_e2"),
-        )
+        .join(_hit_counts(approx, exact), "q_id", "left")
+        .select("q_id", *_recall_columns())
         .orderBy("q_id")
     )
+
+
+def _hit_counts(got: DataFrame, truth: DataFrame, name: str = "n_hits") -> DataFrame:
+    """(q_id, ``name``): how many of each query's returned (q_id, c_id)
+    pairs are in ``truth`` — a semi-join count; queries with no hit are
+    absent (left-join it onto the query ids)."""
+    return (
+        got.join(truth, ["q_id", "c_id"], "left_semi")
+        .groupBy("q_id")
+        .agg(F.count("*").cast("long").alias(name))
+    )
+
+
+def _recall_columns(name: str = "") -> list:
+    """The (n_hits{name}, recall{name}_e2) columns of a recall row over
+    _hit_counts: a missing count reads 0, recall@_TOP_K is an integer
+    percent."""
+    hits = f"n_hits{name}"
+    return [
+        F.coalesce(hits, F.lit(0)).cast("long").alias(hits),
+        F.expr(f"coalesce({hits}, 0) * 100 div {_TOP_K}")
+        .cast("long")
+        .alias(f"recall{name}_e2"),
+    ]
 
 
 # ---------------------------------------------------------------------------
@@ -696,30 +745,44 @@ def fit_pq_codebooks(
     variation the IVF partition already resolved; residual books
     spend them on the within-cluster structure a probe actually
     ranks (measured: SCALE_REHEARSAL_RECALL.json d3_clustered)."""
+    x, _ = _training_sample(corpus, sample_cap, residual_centroids)
+    return _fit_books_np(x, m, k, iters)
+
+
+def _training_sample(
+    df: DataFrame, sample_cap: int, residual_centroids: dict | None = None
+) -> tuple:
+    """The one training-sample draw behind every driver-side fit
+    (fit_pq_codebooks, fit_opq, choose_codes_mode): at most
+    ``sample_cap`` rows of ``df`` thinned by a vec_id hash stride and
+    cut in (hash, vec_id) order — no RNG, so a rebuild of the same
+    corpus draws the same rows — L2-normalized into a float64 matrix.
+    The collect is capped by construction, never corpus-sized.
+
+    ``residual_centroids`` (cent_id -> centroid; ``df`` then carries
+    ``cent_id``) shifts each row by its normalized centroid: the rows
+    become residuals x_norm - c_norm.  Returns ``(x, cent_ids)``;
+    cent_ids is None without centroids."""
     import numpy as np
 
-    n = corpus.count()
+    n = df.count()
     stride = max(1, n // sample_cap)
+    cols = ["embedding"] if residual_centroids is None else ["embedding", "cent_id"]
     sample = (
-        corpus.filter(F.pmod(F.xxhash64("vec_id"), F.lit(stride)) == 0)
+        df.filter(F.pmod(F.xxhash64("vec_id"), F.lit(stride)) == 0)
         .orderBy(F.pmod(F.xxhash64("vec_id"), F.lit(1 << 20)), "vec_id")
         .limit(sample_cap)
-        .select(
-            *(
-                ["embedding", "cent_id"]
-                if residual_centroids is not None
-                else ["embedding"]
-            )
-        )
+        .select(*cols)
         .collect()
     )
     x = np.asarray([r.embedding for r in sample], dtype=np.float64)
     norms = np.linalg.norm(x, axis=1, keepdims=True)
     x = x / np.where(norms == 0, 1.0, norms)
-    if residual_centroids is not None:
-        cmap = _normalized_centroid_map(residual_centroids)
-        x = x - np.stack([cmap[int(r.cent_id)] for r in sample])
-    return _fit_books_np(x, m, k, iters)
+    if residual_centroids is None:
+        return x, None
+    cmap = _normalized_centroid_map(residual_centroids)
+    cids = np.asarray([int(r.cent_id) for r in sample])
+    return x - np.stack([cmap[int(c)] for c in cids]), cids
 
 
 def _fit_books_np(x, m: int, k: int, iters: int) -> list:
@@ -779,7 +842,6 @@ def fit_opq(
     sample_cap: int = _PQ_SAMPLE_CAP,
     iters: int = _PQ_ITERS,
     opq_iters: int = _OPQ_ITERS,
-    residual_centroids: dict | None = None,
 ) -> tuple:
     """Optimized Product Quantization fit (Ge et al. CVPR 2013,
     non-parametric solution): alternate between (a) fitting the
@@ -797,7 +859,7 @@ def fit_opq(
     rotation decorrelates the split.  On isotropic data R converges
     near a permutation and the fit degrades gracefully to plain PQ.
 
-    Deterministic end-to-end: the sample draw is the fit_pq_codebooks
+    Deterministic end-to-end: the sample draw is _training_sample's
     hash-thinned one, Lloyd init is first-k-distinct, and SVD of a
     fixed matrix is deterministic — build and rebuild agree
     bit-for-bit on the same corpus (the append parity contract).
@@ -811,27 +873,7 @@ def fit_opq(
     Arrow batch (~7 s over 2M vectors)."""
     import numpy as np
 
-    n = corpus.count()
-    stride = max(1, n // sample_cap)
-    sample = (
-        corpus.filter(F.pmod(F.xxhash64("vec_id"), F.lit(stride)) == 0)
-        .orderBy(F.pmod(F.xxhash64("vec_id"), F.lit(1 << 20)), "vec_id")
-        .limit(sample_cap)
-        .select(
-            *(
-                ["embedding", "cent_id"]
-                if residual_centroids is not None
-                else ["embedding"]
-            )
-        )
-        .collect()
-    )
-    x = np.asarray([r.embedding for r in sample], dtype=np.float64)
-    norms = np.linalg.norm(x, axis=1, keepdims=True)
-    x = x / np.where(norms == 0, 1.0, norms)
-    if residual_centroids is not None:
-        cmap = _normalized_centroid_map(residual_centroids)
-        x = x - np.stack([cmap[int(r.cent_id)] for r in sample])
+    x, _ = _training_sample(corpus, sample_cap)
     d = x.shape[1]
     rot = np.eye(d)
     for _ in range(opq_iters):
@@ -1138,35 +1180,14 @@ def similarity_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
     corpus = emb.filter(F.col("vec_id") >= _N_QUERIES)
     books = fit_pq_codebooks(corpus)
-    codes = pq_encode(corpus, books)
-    q_rows = [
-        (r.vec_id, list(r.embedding))
-        for r in emb.filter(F.col("vec_id") < _N_QUERIES)
-        .select("vec_id", "embedding")
-        .collect()
-    ]
-    short = pq_shortlist(codes, q_rows, books, _PQ_SHORTLIST_X * _TOP_K)
-    qdf = emb.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe")
+    qdf = _query_frame(emb)
+    q_rows = [(r.q_id, list(r.qe)) for r in qdf.collect()]
+    short = pq_shortlist(
+        pq_encode(corpus, books), q_rows, books, _PQ_SHORTLIST_X * _TOP_K
     )
-    cand = short.join(
-        corpus.select(F.col("vec_id"), F.col("embedding").alias("ce")), "vec_id"
-    ).join(F.broadcast(qdf), "q_id")
-    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), "c_id")
-    return (
-        cand.select(
-            "q_id", F.col("vec_id").alias("c_id"), cosine("qe", "ce").alias("sim")
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _TOP_K)
-        .select(
-            "q_id",
-            "c_id",
-            F.col("rn").cast("long").alias("rnk"),
-            F.round("sim", 4).alias("cos_sim"),
-        )
-        .orderBy("q_id", "rnk")
-    )
+    return _finish_topk(
+        short, qdf, corpus.select("vec_id", "embedding"), _TOP_K
+    ).orderBy("q_id", "rnk")
 
 
 def _codebooks_from_rows(cb_rows: list, m: int) -> list:
@@ -1211,8 +1232,8 @@ def _write_pq_codebooks(
     meta``; k is informational (read-back groups actual rows, never
     trusts k) — record the LARGEST subspace so a ragged fit is visible.
 
-    ``auto_stats`` (from choose_residual_mode) marks the residual flag
-    as auto-chosen and logs both measured statistics, so a rebuild's
+    ``auto_stats`` (from choose_codes_mode) marks the code mode as
+    auto-chosen and logs both measured statistics, so a rebuild's
     mode decision is auditable from the index alone.  Explicit builds
     record mode='explicit' with NULL statistics; pre-r15 indexes simply
     lack the columns (readers access meta fields by name)."""
@@ -1334,19 +1355,11 @@ def _finish_topk(
         # surviving row is the right one)
         .dropDuplicates(["q_id", "vec_id"])
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), "c_id")
-    return (
+    return _rank_topk(
         cand.select(
             "q_id", F.col("vec_id").alias("c_id"), cosine("qe", "ce").alias("sim")
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= top_k)
-        .select(
-            "q_id",
-            "c_id",
-            F.col("rn").cast("long").alias("rnk"),
-            F.round("sim", 4).alias("cos_sim"),
-        )
+        ),
+        top_k,
     )
 
 
@@ -1360,45 +1373,6 @@ def _finish_topk(
 # partition pruning bounds I/O, code compression bounds the bytes of
 # what's left, and only the shortlist pays an exact re-rank.
 # ---------------------------------------------------------------------------
-
-_IVFPQ_NPROBE = 3
-
-
-def _probe_sets(q_rows: list, cent_rows: list, nprobe: int) -> dict:
-    """Per-query probe assignment: ``{q_id: {cent_id, ...}}`` for the
-    ``nprobe`` nearest centroids by ``functions.vectors.cosine``, best
-    first, ties to the lowest cent_id.  Driver-side numpy over
-    ``(q_id, embedding)`` query rows and the k centroid rows: every
-    serving path already collects its queries for pq_shortlist, so
-    probe selection needs no Spark job of its own.
-
-    The sums are left-to-right folds over the dimensions (one loop over
-    them for the whole batch), the JVM cosine's order, so a similarity
-    is bit-identical to the Spark expression's and equal centroids tie
-    exactly (a BLAS dot may sum two equal rows in different orders and
-    break the tie either way); a zero-norm pair ranks last, where the
-    NULL cosine sorts."""
-    import numpy as np
-
-    cent_rows = sorted(cent_rows, key=lambda r: int(r.cent_id))
-    ids = np.asarray([int(r.cent_id) for r in cent_rows])
-    cmat = np.asarray([list(r.centroid) for r in cent_rows], dtype=np.float64)
-    qmat = np.asarray([list(qe) for _, qe in q_rows], dtype=np.float64)
-    qmat = qmat.reshape(len(q_rows), cmat.shape[1])
-    dots = np.zeros((len(q_rows), len(ids)))
-    qsq, csq = np.zeros(len(q_rows)), np.zeros(len(ids))
-    for j in range(cmat.shape[1]):
-        dots = dots + qmat[:, j, None] * cmat[:, j]
-        qsq = qsq + qmat[:, j] * qmat[:, j]
-        csq = csq + cmat[:, j] * cmat[:, j]
-    n = np.sqrt(qsq)[:, None] * np.sqrt(csq)
-    sims = np.where(n > 0, dots / np.where(n > 0, n, 1.0), -np.inf)
-    order = np.argsort(-sims, axis=1, kind="stable")[:, :nprobe]
-    return {
-        int(q_id): {int(c) for c in ids[row]}
-        for (q_id, _), row in zip(q_rows, order)
-    }
-
 
 def _index_relation(
     spark: SparkSession,
@@ -1445,7 +1419,9 @@ def _load_frozen_state(
     """An IVF-PQ index's frozen state — ``(cent, cent_rows, books,
     residual_centroids, rotation)`` from the centroids, meta, codebooks
     and rotation relations — the one loader behind append_ivfpq_index
-    and IvfPqIndexHandle."""
+    and IvfPqIndexHandle.  It applies whatever meta records, so an
+    index whose meta sets both residual and opq (a composition builds
+    no longer offer) still opens, appends and answers."""
     cent = _index_relation(spark, index_path, "centroids", manifest)
     cent_rows = cent.collect()
     meta = _index_relation(spark, index_path, "meta", manifest).head()
@@ -1461,11 +1437,11 @@ def _load_frozen_state(
     )
 
 
-#: residual="auto" decision thresholds — the executable form of the
+#: mode="auto" decision thresholds — the executable form of the
 #: four-regime operating rule (SCALE.md r13/r14/r15).  Residual encoding
 #: pays when clusters are TIGHT (mean normalized residual norm well under
 #: the wide-isotropic band: d3t measures ~0.37, d3c/d3l ~0.63, pure noise
-#: ~1.4) or when residuals are STRUCTURED/low-rank (per-cluster
+#: ~1.4) and OPQ when residuals are STRUCTURED/low-rank (per-cluster
 #: participation ratio of the residual covariance far below the dimension:
 #: rank-8-of-64 measures ~0.12 vs isotropic ~0.5-1.0 depending on sample
 #: size).  Thresholds sit mid-band so sampling noise can't flip a regime.
@@ -1475,16 +1451,26 @@ _AUTO_SAMPLE_CAP = 20_000
 _AUTO_MIN_CLUSTER_ROWS = 16
 
 
-def choose_residual_mode(
+def choose_codes_mode(
     assigned: DataFrame,
     residual_centroids: dict,
     sample_cap: int = _AUTO_SAMPLE_CAP,
-) -> tuple[bool, dict]:
-    """Measure the residual geometry on a bounded, deterministic sample
-    and decide flat-vs-residual PQ encoding — the r13/r14 evidence
-    table's operating rule made executable (build_ivfpq_index's
-    ``residual="auto"``).  Returns ``(use_residual, stats)`` where
-    stats carries the two measured statistics for the meta log:
+) -> tuple[str, dict]:
+    """The code-quality ladder (SCALE.md r15) made executable —
+    build_ivfpq_index(mode="auto")'s decision function.  Measures the
+    residual geometry on a bounded, deterministic sample and returns
+    ``(mode, stats)`` with mode in {"flat", "residual", "opq"}:
+
+    * tight clusters (ratio <= 0.5) -> **residual** — re-centering is
+      the win there (a rotation cannot shrink a norm; d3t: 6x).
+    * structured / low-rank residuals (lowrank_frac <= 0.35) ->
+      **opq** — at d3l scale OPQ matches residual's starved-shortlist
+      recall (0.90) at 1.65x lower query cost (one LUT per query vs
+      one per probed centroid), so on structure alone OPQ dominates.
+    * isotropic wide / noise -> **flat** — both alternatives measured
+      as pure cost there.
+
+    ``stats`` carries the two measured statistics for the meta log:
 
     * ``ratio`` — mean L2 norm of the normalized-space residual
       (vectors are unit, so this IS residual-norm/vector-norm).  Tight
@@ -1495,11 +1481,10 @@ def choose_residual_mode(
       residual covariance, sample-weighted, over the dimension:
       (sum lam)^2 / sum lam^2 / d, DEBIASED for sample size (below).
       Anisotropic low-rank residuals (d3l: rank 8 of 64 -> ~0.12 raw,
-      ~0.2 debiased at 100-row clusters) are the structured regime
-      where residual wins at equal norm ratio (Jegou et al. TPAMI 2011
-      §V); isotropic residuals read ~1.0 debiased.  Computed PER
-      CLUSTER because pooling across clusters with different subspaces
-      washes the structure out to isotropic.
+      ~0.2 debiased at 100-row clusters) are the structured regime;
+      isotropic residuals read ~1.0 debiased.  Computed PER CLUSTER
+      because pooling across clusters with different subspaces washes
+      the structure out to isotropic.
 
     Small-sample debiasing (ADVICE r15): the RAW participation ratio
     of a sample covariance is capped by the row count — for a
@@ -1517,33 +1502,18 @@ def choose_residual_mode(
     in the band, not just skipped).  Pinned:
     test_lowrank_frac_debiasing_small_isotropic_clusters.
 
-    The sample is the same hash-thinned deterministic draw as
-    fit_pq_codebooks (no RNG — auto picks the same mode on every
-    rebuild of the same corpus), capped small (stats need far fewer
-    rows than a codebook fit).  Clusters with fewer than
-    _AUTO_MIN_CLUSTER_ROWS sampled members are skipped for the
-    covariance statistic (below that even the debiased PR is variance-
-    dominated); when no cluster qualifies, the decision falls back
-    to the ratio test alone."""
+    The sample is _training_sample's deterministic draw (no RNG — auto
+    picks the same mode on every rebuild of the same corpus), capped
+    small (stats need far fewer rows than a codebook fit).  Clusters
+    with fewer than _AUTO_MIN_CLUSTER_ROWS sampled members are skipped
+    for the covariance statistic (below that even the debiased PR is
+    variance-dominated); when no cluster qualifies, the decision falls
+    back to the ratio test alone."""
     import numpy as np
 
-    n = assigned.count()
-    stride = max(1, n // sample_cap)
-    sample = (
-        assigned.filter(F.pmod(F.xxhash64("vec_id"), F.lit(stride)) == 0)
-        .orderBy(F.pmod(F.xxhash64("vec_id"), F.lit(1 << 20)), "vec_id")
-        .limit(sample_cap)
-        .select("embedding", "cent_id")
-        .collect()
-    )
-    x = np.asarray([r.embedding for r in sample], dtype=np.float64)
-    norms = np.linalg.norm(x, axis=1, keepdims=True)
-    x = x / np.where(norms == 0, 1.0, norms)
-    cmap = _normalized_centroid_map(residual_centroids)
-    cids = np.asarray([int(r.cent_id) for r in sample])
-    resid = x - np.stack([cmap[int(c)] for c in cids])
+    resid, cids = _training_sample(assigned, sample_cap, residual_centroids)
     ratio = float(np.linalg.norm(resid, axis=1).mean())
-    d = x.shape[1]
+    d = resid.shape[1]
     prs: list[float] = []
     weights: list[int] = []
     for c in np.unique(cids):
@@ -1562,45 +1532,15 @@ def choose_residual_mode(
         prs.append(tot * tot / float((lam**2).sum()) * debias)
         weights.append(len(rc))
     frac = float(np.average(prs, weights=weights) / d) if prs else None
-    use_residual = ratio <= _AUTO_TIGHT_RATIO or (
-        frac is not None and frac <= _AUTO_LOWRANK_FRAC
-    )
-    return use_residual, {"ratio": ratio, "lowrank_frac": frac}
-
-
-def choose_codes_mode(
-    assigned: DataFrame,
-    residual_centroids: dict,
-    sample_cap: int = _AUTO_SAMPLE_CAP,
-) -> tuple[str, dict]:
-    """The FIVE-ROW code-quality ladder (SCALE.md r15) made executable
-    — build_ivfpq_index(mode="auto")'s decision function.  Same two
-    measured statistics as choose_residual_mode, one more outcome:
-
-    * tight clusters (ratio <= 0.5) -> **residual** — re-centering is
-      the win there (a rotation cannot shrink a norm; d3t: 6x).
-    * structured / low-rank residuals (lowrank_frac <= 0.35) ->
-      **opq** — at d3l scale OPQ matches residual's starved-shortlist
-      recall (0.90) at 1.65x lower query cost (one LUT per query vs
-      one per probed centroid), so on structure alone OPQ dominates.
-    * isotropic wide / noise -> **flat** — both alternatives measured
-      as pure cost there.
-
-    Returns ``(mode, stats)`` with mode in {"flat", "residual",
-    "opq"}.  choose_residual_mode keeps its two-way semantics for the
-    ``residual="auto"`` knob (residual-vs-flat, the r14 evidence);
-    this is the r15 front door that also knows OPQ exists.  The
-    "residual+opq" composition was measured at 2M scale and REJECTED
-    from the ladder (never beats the best pure mode on either regime —
-    SCALE.md r16), so auto never returns it."""
-    use_residual, stats = choose_residual_mode(
-        assigned, residual_centroids, sample_cap
-    )
-    if stats["ratio"] <= _AUTO_TIGHT_RATIO:
+    stats = {"ratio": ratio, "lowrank_frac": frac}
+    if ratio <= _AUTO_TIGHT_RATIO:
         return "residual", stats
-    if use_residual:  # structure rule fired, not the tight rule
+    if frac is not None and frac <= _AUTO_LOWRANK_FRAC:
         return "opq", stats
     return "flat", stats
+
+
+_CODE_MODES = ("flat", "residual", "opq", "auto")
 
 
 def build_ivfpq_index(
@@ -1608,10 +1548,8 @@ def build_ivfpq_index(
     sf_dir: str,
     index_path: str,
     lloyd_iters: int = _LLOYD_ITERS,
-    residual: bool | str = False,
     store_vectors: bool | str = True,
-    opq: bool = False,
-    mode: str | None = None,
+    mode: str = "flat",
     centroids: DataFrame | None = None,
     assigned: DataFrame | None = None,
 ) -> None:
@@ -1624,42 +1562,25 @@ def build_ivfpq_index(
     corpus — the same grow-online/refit-offline cadence as the IVF and
     PQ tiers it composes.
 
-    ``residual="auto"`` measures the residual geometry on the fit
-    sample and applies the four-regime operating rule
-    (choose_residual_mode); the chosen mode and both measured
-    statistics are logged into ``{index}/meta`` so a rebuild's choice
-    is auditable.
+    ``mode`` picks how vectors become codes:
 
-    ``opq=True`` (r15): fit the codebooks through fit_opq's learned
-    orthogonal rotation (Ge et al. CVPR 2013) — the d×d matrix is
-    stored as ``{index}/rotation`` (KBs) and flagged in meta, and
-    every encode/LUT path applies it symmetrically.  Pays on
-    anisotropic data (correlated dims split across subspaces); on
-    isotropic data it degrades gracefully to plain PQ.
-
-    ``mode`` is the unified front door over both knobs: "flat",
-    "residual", "opq", "residual+opq" set them explicitly;
-    ``mode="auto"`` measures the fit sample and applies the full
-    five-row ladder (choose_codes_mode: tight→residual,
-    structured→opq, isotropic/noise→flat), logged into meta.  When
-    ``mode`` is given it overrides ``residual``/``opq``.
-
-    "residual+opq" composes both: codes encode the ROTATED residual
-    (x_norm − c_norm) @ R — fit_opq learns the rotation on the residual
-    sample, pq_encode/pq_shortlist apply residual shift then rotation
-    symmetrically (the per-probed-centroid LUT shape; query cost is
-    residual's).  Measured at 2M-vector scale (SCALE.md r16): the
-    composition NEVER beats the best pure mode — 0.875 vs 0.90 on
-    low-rank (per-cluster subspaces differ, so one global rotation of
-    pooled residuals decorrelates none of them), 0.35 vs residual's
-    0.45 on tight (the fit chases sample noise in near-isotropic
-    residuals) — so the auto ladder never picks it; the knob ships for
-    corpora that are simultaneously tight AND globally structured."""
+    * "flat" — codebooks fitted on the normalized vectors.
+    * "residual" — true IVFADC: codes encode x_norm − c_norm against
+      residual-fitted books; queries build one LUT per probed centroid.
+    * "opq" — codebooks fitted through fit_opq's learned orthogonal
+      rotation (Ge et al. CVPR 2013), stored as ``{index}/rotation``
+      (KBs) and applied symmetrically by every encode/LUT path.
+    * "auto" — measure the fit sample and apply choose_codes_mode's
+      ladder (tight→residual, structured→opq, isotropic/noise→flat);
+      the choice and both statistics are logged into ``{index}/meta``
+      so a rebuild's choice is auditable."""
     from data_integration_system_spark.operators._common import (
         cluster_for_partitioned_write,
         parallelize_scan,
     )
 
+    if mode not in _CODE_MODES:
+        raise ValueError(f"mode must be one of {_CODE_MODES}; got {mode!r}")
     # ``centroids``/``assigned`` (r18): callers that build SEVERAL index
     # variants over the SAME corpus (the recall-gain/parity queries, A/B
     # rebuild loops) may pass the fit and the assignment in, so the
@@ -1678,33 +1599,16 @@ def build_ivfpq_index(
         ).localCheckpoint()  # one assignment feeds fit + encode + write
     cent_rows = cent.collect()
     auto_stats = None
-    if mode is not None:
-        if mode == "auto":
-            chosen, auto_stats = choose_codes_mode(
-                assigned, _centroid_map(cent_rows)
-            )
-        elif mode in ("flat", "residual", "opq", "residual+opq"):
-            chosen = mode
-        else:
-            raise ValueError(
-                "mode must be 'auto', 'flat', 'residual', 'opq', or "
-                f"'residual+opq'; got {mode!r}"
-            )
-        residual = chosen in ("residual", "residual+opq")
-        opq = chosen in ("opq", "residual+opq")
-    elif residual == "auto":
-        residual, auto_stats = choose_residual_mode(
-            assigned, _centroid_map(cent_rows)
-        )
-    cmap = _centroid_map(cent_rows) if residual else None
-    rotation = None
+    if mode == "auto":
+        mode, auto_stats = choose_codes_mode(assigned, _centroid_map(cent_rows))
+    cmap = _centroid_map(cent_rows) if mode == "residual" else None
     # both fits sample on the CHECKPOINTED assignment (same vec_id set,
     # same hash-thinned deterministic sample as the raw corpus scan the
     # flat path used to re-read — values identical, one scan cheaper)
-    if opq:
-        rotation, books = fit_opq(assigned, residual_centroids=cmap)
+    if mode == "opq":
+        rotation, books = fit_opq(assigned)
     else:
-        books = fit_pq_codebooks(assigned, residual_centroids=cmap)
+        rotation, books = None, fit_pq_codebooks(assigned, residual_centroids=cmap)
     codes = pq_encode(
         assigned, books, carry=("cent_id",), residual_centroids=cmap,
         rotation=rotation,
@@ -1748,7 +1652,7 @@ def build_ivfpq_index(
     def _write_meta() -> None:
         cent.write.mode("overwrite").parquet(f"{index_path}/centroids")
         _write_pq_codebooks(
-            spark, books, index_path, residual=residual,
+            spark, books, index_path, residual=cmap is not None,
             auto_stats=auto_stats, rotation=rotation,
         )
 
@@ -2106,9 +2010,7 @@ def similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus.select("vec_id", "embedding"), cent, rows=cent_rows
     )
     codes = pq_encode(assigned, books, carry=("cent_id",))
-    qdf = emb.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe")
-    )
+    qdf = _query_frame(emb)
     q_rows = [(r.q_id, list(r.qe)) for r in qdf.collect()]
     sets = _probe_sets(q_rows, cent_rows, _IVFPQ_NPROBE)
     probed = sorted({c for s in sets.values() for c in s})
@@ -2146,21 +2048,8 @@ def similarity_ann_recall_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = None
     for method, fn in tiers:
         approx = fn(spark, sf_dir).select("q_id", "c_id")
-        hits = (
-            approx.join(exact, ["q_id", "c_id"], "left_semi")
-            .groupBy("q_id")
-            .agg(F.count("*").cast("long").alias("n_hits"))
-        )
-        row = (
-            q_ids.join(hits, "q_id", "left")
-            .select(
-                F.lit(method).alias("method"),
-                "q_id",
-                F.coalesce("n_hits", F.lit(0)).cast("long").alias("n_hits"),
-                F.expr(f"coalesce(n_hits, 0) * 100 div {_TOP_K}")
-                .cast("long")
-                .alias("recall_e2"),
-            )
+        row = q_ids.join(_hit_counts(approx, exact), "q_id", "left").select(
+            F.lit(method).alias("method"), "q_id", *_recall_columns()
         )
         out = row if out is None else out.unionByName(row)
     return out.orderBy("method", "q_id")
@@ -2458,29 +2347,19 @@ def similarity_ivfpq_clustered_recall(
         corpus = emb.filter(F.col("vec_id") >= _N_QUERIES).select(
             "vec_id", "embedding"
         )
-        qdf = emb.filter(F.col("vec_id") < _N_QUERIES).select(
-            F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe")
-        )
+        qdf = _query_frame(emb)
         q_rows = [(r.q_id, list(r.qe)) for r in qdf.collect()]
         truth = exact_topk_np(corpus, q_rows, _TOP_K).select("q_id", "c_id")
         got = query_ivfpq_index(spark, idx, qdf, vectors=corpus).select(
             "q_id", "c_id"
         )
-        hits = (
-            got.join(truth, ["q_id", "c_id"], "left_semi")
-            .groupBy("q_id")
-            .agg(F.count("*").cast("long").alias("n_hits"))
-        )
         out = (
             qdf.select("q_id")
-            .join(hits, "q_id", "left")
+            .join(_hit_counts(got, truth), "q_id", "left")
             .select(
                 "q_id",
                 F.lit(k).cast("long").alias("k_centroids"),
-                F.coalesce("n_hits", F.lit(0)).cast("long").alias("n_hits"),
-                F.expr(f"coalesce(n_hits, 0) * 100 div {_TOP_K}")
-                .cast("long")
-                .alias("recall_e2"),
+                *_recall_columns(),
             )
             .orderBy("q_id")
             .localCheckpoint()  # sever lineage from the temp corpus
@@ -2514,89 +2393,25 @@ def similarity_ivfpq_lowrank_residual_gain(
     partial-topk numpy truth; the residual build adds per-probed-
     centroid LUTs (KBs per query), not data movement."""
     import math as _math
-    import shutil
-    import tempfile
 
     n = table(spark, sf_dir, "embeddings").count()
-    k = max(_N_QUERIES + 2, _math.isqrt(n))
-    root = tempfile.mkdtemp(prefix="ivfpq_lowrank_")
-    try:
-        generate_clustered_embeddings(
-            spark, root, n, k, sigma=0.3, cov_rank=8
-        )
-        emb = table(spark, root, "embeddings")
-        corpus = emb.filter(F.col("vec_id") >= _N_QUERIES).select(
-            "vec_id", "embedding"
-        )
-        qdf = emb.filter(F.col("vec_id") < _N_QUERIES).select(
-            F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe")
-        )
-        q_rows = [(r.q_id, list(r.qe)) for r in qdf.collect()]
-        truth = exact_topk_np(corpus, q_rows, _TOP_K).select("q_id", "c_id")
-        truth = truth.localCheckpoint()
-        # ONE Lloyd fit + ONE assignment pass feed BOTH variant builds
-        # (r18, guide §5): the builds previously re-derived the identical
-        # centroids and nearest-centroid assignment per mode — pure
-        # recompute, deterministic, so sharing is bit-identical.
-        from data_integration_system_spark.operators._common import (
-            parallelize_scan,
-        )
-
-        cent = fit_ivf_centroids(spark, root, _LLOYD_ITERS)
-        assigned = nearest_centroid(
-            parallelize_scan(table(spark, root, "embeddings"))
-            .filter(F.col("vec_id") >= _N_QUERIES)
-            .select("vec_id", "embedding"),
-            cent,
-        ).localCheckpoint()
-        hits = {}
-        for mode, residual in (("flat", False), ("residual", True)):
-            idx = f"{root}/idx_{mode}"
-            build_ivfpq_index(
-                spark, root, idx, residual=residual, store_vectors=False,
-                centroids=cent, assigned=assigned,
-            )
-            got = query_ivfpq_index(
-                spark, idx, qdf, vectors=corpus, shortlist_x=_PQ_SHORTLIST_X
-            ).select("q_id", "c_id")
-            hits[mode] = (
-                got.join(truth, ["q_id", "c_id"], "left_semi")
-                .groupBy("q_id")
-                .agg(F.count("*").cast("long").alias(f"n_hits_{mode}"))
-            )
-        out = (
-            qdf.select("q_id")
-            .join(hits["flat"], "q_id", "left")
-            .join(hits["residual"], "q_id", "left")
-            .select(
-                "q_id",
-                F.lit(k).cast("long").alias("k_centroids"),
-                F.coalesce("n_hits_flat", F.lit(0))
-                .cast("long")
-                .alias("n_hits_flat"),
-                F.coalesce("n_hits_residual", F.lit(0))
-                .cast("long")
-                .alias("n_hits_residual"),
-                F.expr(f"coalesce(n_hits_flat, 0) * 100 div {_TOP_K}")
-                .cast("long")
-                .alias("recall_flat_e2"),
-                F.expr(f"coalesce(n_hits_residual, 0) * 100 div {_TOP_K}")
-                .cast("long")
-                .alias("recall_residual_e2"),
-            )
-            .orderBy("q_id")
-            .localCheckpoint()  # sever lineage from the temp corpus
-        )
-        return out
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    x8 = {"shortlist_x": _PQ_SHORTLIST_X}
+    return _variant_recall(
+        spark, "ivfpq_lowrank_", n, max(_N_QUERIES + 2, _math.isqrt(n)),
+        {"sigma": 0.3, "cov_rank": 8},
+        (
+            ("flat", {"store_vectors": False}, x8),
+            ("residual", {"store_vectors": False, "mode": "residual"}, x8),
+        ),
+        rerank=True,
+    )
 
 
 @query("similarity_ivfpq_opq_gain", oracle=None)
 def similarity_ivfpq_opq_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OPQ vs plain PQ inside the composed index (r15): both modes
     built through the REAL materialized path
-    (build_ivfpq_index(opq=True) — fit_opq's learned orthogonal
+    (build_ivfpq_index(mode="opq") — fit_opq's learned orthogonal
     rotation, Ge et al. CVPR 2013) on a seeded ANISOTROPIC corpus
     (cov_rank=8: correlated dims are exactly what an axis-aligned
     subspace split wastes codes on), queried at the deliberately
@@ -2613,90 +2428,26 @@ def similarity_ivfpq_opq_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow batch at encode and one per LUT at query (microseconds);
     codes stay m bytes — OPQ buys recall at zero scan-cost delta,
     which is why it's the standard next rung above plain PQ."""
-    import shutil
-    import tempfile
-
     n = table(spark, sf_dir, "embeddings").count()
     # CROWDED clusters (~200 members each), not sqrt(n) fan-out: OPQ's
     # per-slot ADC resolution only binds when a probed cluster holds
     # many near-identical-ADC distractors competing for starved slots —
     # at sqrt(n) fan-out both modes saturate and the row measures
-    # nothing (the lowrank residual row has the same property)
-    k = max(_N_QUERIES + 2, n // 200)
-    root = tempfile.mkdtemp(prefix="ivfpq_opq_")
-    try:
-        generate_clustered_embeddings(
-            spark, root, n, k, sigma=0.3, cov_rank=8
-        )
-        emb = table(spark, root, "embeddings")
-        corpus = emb.filter(F.col("vec_id") >= _N_QUERIES).select(
-            "vec_id", "embedding"
-        )
-        qdf = emb.filter(F.col("vec_id") < _N_QUERIES).select(
-            F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe")
-        )
-        q_rows = [(r.q_id, list(r.qe)) for r in qdf.collect()]
-        truth = exact_topk_np(corpus, q_rows, _TOP_K).select("q_id", "c_id")
-        truth = truth.localCheckpoint()
-        # shared fit + assignment across both variant builds (r18,
-        # guide §5) — deterministic derivations, bit-identical results
-        from data_integration_system_spark.operators._common import (
-            parallelize_scan,
-        )
-
-        cent = fit_ivf_centroids(spark, root, _LLOYD_ITERS)
-        assigned = nearest_centroid(
-            parallelize_scan(table(spark, root, "embeddings"))
-            .filter(F.col("vec_id") >= _N_QUERIES)
-            .select("vec_id", "embedding"),
-            cent,
-        ).localCheckpoint()
-        hits = {}
-        for mode, use_opq in (("flat", False), ("opq", True)):
-            idx = f"{root}/idx_{mode}"
-            build_ivfpq_index(
-                spark, root, idx, store_vectors=False, opq=use_opq,
-                centroids=cent, assigned=assigned,
-            )
-            # vectors=None on a store_vectors=False index = PURE ADC
-            # ranking — deliberately: the exact re-rank would erase the
-            # code-resolution difference at fixture scale (the shortlist
-            # rarely misses here), and code resolution is exactly what
-            # OPQ improves.  Measured: flat 0.275 / OPQ 0.400 recall@5.
-            got = query_ivfpq_index(
-                spark, idx, qdf, shortlist_x=8
-            ).select("q_id", "c_id")
-            hits[mode] = (
-                got.join(truth, ["q_id", "c_id"], "left_semi")
-                .groupBy("q_id")
-                .agg(F.count("*").cast("long").alias(f"n_hits_{mode}"))
-            )
-        out = (
-            qdf.select("q_id")
-            .join(hits["flat"], "q_id", "left")
-            .join(hits["opq"], "q_id", "left")
-            .select(
-                "q_id",
-                F.lit(k).cast("long").alias("k_centroids"),
-                F.coalesce("n_hits_flat", F.lit(0))
-                .cast("long")
-                .alias("n_hits_flat"),
-                F.coalesce("n_hits_opq", F.lit(0))
-                .cast("long")
-                .alias("n_hits_opq"),
-                F.expr(f"coalesce(n_hits_flat, 0) * 100 div {_TOP_K}")
-                .cast("long")
-                .alias("recall_flat_e2"),
-                F.expr(f"coalesce(n_hits_opq, 0) * 100 div {_TOP_K}")
-                .cast("long")
-                .alias("recall_opq_e2"),
-            )
-            .orderBy("q_id")
-            .localCheckpoint()  # sever lineage from the temp corpus
-        )
-        return out
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    # nothing (the lowrank residual row has the same property).
+    # No re-rank (pure ADC ranking on store_vectors=False indexes) —
+    # deliberately: the exact re-rank would erase the code-resolution
+    # difference at fixture scale (the shortlist rarely misses here),
+    # and code resolution is exactly what OPQ improves.  Measured:
+    # flat 0.275 / OPQ 0.400 recall@5.
+    x8 = {"shortlist_x": 8}
+    return _variant_recall(
+        spark, "ivfpq_opq_", n, max(_N_QUERIES + 2, n // 200),
+        {"sigma": 0.3, "cov_rank": 8},
+        (
+            ("flat", {"store_vectors": False}, x8),
+            ("opq", {"store_vectors": False, "mode": "opq"}, x8),
+        ),
+    )
 
 
 @query("similarity_sq8_rerank_parity", oracle=None)
@@ -2725,74 +2476,76 @@ def similarity_sq8_rerank_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest-backed zero-listing scans; the decode is a JVM transform
     lambda inside the re-rank stage (no Python round-trip on the
     serving path)."""
+    n = table(spark, sf_dir, "embeddings").count()
+    return _variant_recall(
+        spark, "ivfpq_sq8_", n, max(_N_QUERIES + 2, n // 200), {},
+        (
+            ("float", {"store_vectors": True}, {}),
+            ("sq8", {"store_vectors": "sq8"}, {}),
+        ),
+    )
+
+
+def _variant_recall(
+    spark: SparkSession,
+    prefix: str,
+    n: int,
+    k: int,
+    gen_kw: dict,
+    variants: tuple,
+    rerank: bool = False,
+) -> DataFrame:
+    """The A/B recall harness of the two-variant gain rows: a seeded
+    clustered corpus of ``n`` vectors in ``k`` clusters
+    (generate_clustered_embeddings with ``gen_kw``) in a temp dir, its
+    exact numpy truth, ONE Lloyd fit and ONE assignment pass shared by
+    both variant builds (deterministic derivations, so sharing is
+    bit-identical to per-build fits), then per ``(name, build_kw,
+    query_kw)`` variant a build_ivfpq_index + query_ivfpq_index and
+    its per-query hits.  ``rerank`` re-ranks each shortlist exactly
+    against the generated corpus.  Returns (q_id, k_centroids,
+    n_hits_{a}, n_hits_{b}, recall_{a}_e2, recall_{b}_e2), materialized
+    before the temp dir goes."""
     import shutil
     import tempfile
 
-    n = table(spark, sf_dir, "embeddings").count()
-    k = max(_N_QUERIES + 2, n // 200)
-    root = tempfile.mkdtemp(prefix="ivfpq_sq8_")
+    from data_integration_system_spark.operators._common import parallelize_scan
+
+    root = tempfile.mkdtemp(prefix=prefix)
     try:
-        generate_clustered_embeddings(spark, root, n, k)
+        generate_clustered_embeddings(spark, root, n, k, **gen_kw)
         emb = table(spark, root, "embeddings")
         corpus = emb.filter(F.col("vec_id") >= _N_QUERIES).select(
             "vec_id", "embedding"
         )
-        qdf = emb.filter(F.col("vec_id") < _N_QUERIES).select(
-            F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe")
-        )
+        qdf = _query_frame(emb)
         q_rows = [(r.q_id, list(r.qe)) for r in qdf.collect()]
         truth = exact_topk_np(corpus, q_rows, _TOP_K).select("q_id", "c_id")
         truth = truth.localCheckpoint()
-        # shared fit + assignment across both variant builds (r18,
-        # guide §5) — deterministic derivations, bit-identical results
-        from data_integration_system_spark.operators._common import (
-            parallelize_scan,
-        )
-
         cent = fit_ivf_centroids(spark, root, _LLOYD_ITERS)
-        assigned = nearest_centroid(
-            parallelize_scan(table(spark, root, "embeddings"))
-            .filter(F.col("vec_id") >= _N_QUERIES)
-            .select("vec_id", "embedding"),
-            cent,
-        ).localCheckpoint()
-        hits = {}
-        for mode, sv in (("float", True), ("sq8", "sq8")):
-            idx = f"{root}/idx_{mode}"
+        assigned = nearest_centroid(parallelize_scan(corpus), cent).localCheckpoint()
+        out = qdf.select("q_id")
+        for name, build_kw, query_kw in variants:
+            idx = f"{root}/idx_{name}"
             build_ivfpq_index(
-                spark, root, idx, store_vectors=sv,
-                centroids=cent, assigned=assigned,
+                spark, root, idx, centroids=cent, assigned=assigned, **build_kw
             )
-            got = query_ivfpq_index(spark, idx, qdf).select("q_id", "c_id")
-            hits[mode] = (
-                got.join(truth, ["q_id", "c_id"], "left_semi")
-                .groupBy("q_id")
-                .agg(F.count("*").cast("long").alias(f"n_hits_{mode}"))
-            )
-        out = (
-            qdf.select("q_id")
-            .join(hits["float"], "q_id", "left")
-            .join(hits["sq8"], "q_id", "left")
-            .select(
+            if rerank:
+                query_kw = {**query_kw, "vectors": corpus}
+            got = query_ivfpq_index(spark, idx, qdf, **query_kw)
+            hits = _hit_counts(got.select("q_id", "c_id"), truth, f"n_hits_{name}")
+            out = out.join(hits, "q_id", "left")
+        cols = [_recall_columns(f"_{name}") for name, _, _ in variants]
+        return (
+            out.select(
                 "q_id",
                 F.lit(k).cast("long").alias("k_centroids"),
-                F.coalesce("n_hits_float", F.lit(0))
-                .cast("long")
-                .alias("n_hits_float"),
-                F.coalesce("n_hits_sq8", F.lit(0))
-                .cast("long")
-                .alias("n_hits_sq8"),
-                F.expr(f"coalesce(n_hits_float, 0) * 100 div {_TOP_K}")
-                .cast("long")
-                .alias("recall_float_e2"),
-                F.expr(f"coalesce(n_hits_sq8, 0) * 100 div {_TOP_K}")
-                .cast("long")
-                .alias("recall_sq8_e2"),
+                *[c[0] for c in cols],
+                *[c[1] for c in cols],
             )
             .orderBy("q_id")
             .localCheckpoint()  # sever lineage from the temp corpus
         )
-        return out
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -2826,9 +2579,7 @@ def similarity_ann_delete_visibility(spark: SparkSession, sf_dir: str) -> DataFr
     try:
         generate_clustered_embeddings(spark, root, n, k)
         emb = table(spark, root, "embeddings")
-        qdf = emb.filter(F.col("vec_id") < _N_QUERIES).select(
-            F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe")
-        ).localCheckpoint()
+        qdf = _query_frame(emb).localCheckpoint()
         idx = f"{root}/idx"
         build_ivfpq_index(spark, root, idx)
         twin_base = 900_000_000
@@ -2918,9 +2669,7 @@ def similarity_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id", "embedding"
         )
         allowed = corpus.filter(F.col("vec_id") % 2 == 0).select("vec_id")
-        qdf = emb.filter(F.col("vec_id") < _N_QUERIES).select(
-            F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe")
-        )
+        qdf = _query_frame(emb)
         q_rows = [(r.q_id, list(r.qe)) for r in qdf.collect()]
         truth = exact_topk_np(
             corpus.filter(F.col("vec_id") % 2 == 0), q_rows, _TOP_K
@@ -2930,25 +2679,17 @@ def similarity_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         got = query_ivfpq_index(spark, idx, qdf, allowed=allowed).select(
             "q_id", "c_id"
         )
-        hits = (
-            got.join(truth, ["q_id", "c_id"], "left_semi")
-            .groupBy("q_id")
-            .agg(F.count("*").cast("long").alias("n_hits"))
-        )
         violations = got.filter(F.col("c_id") % 2 != 0).groupBy("q_id").agg(
             F.count("*").cast("long").alias("n_violations")
         )
         out = (
             qdf.select("q_id")
-            .join(hits, "q_id", "left")
+            .join(_hit_counts(got, truth), "q_id", "left")
             .join(violations, "q_id", "left")
             .select(
                 "q_id",
                 F.lit(k).cast("long").alias("k_centroids"),
-                F.coalesce("n_hits", F.lit(0)).cast("long").alias("n_hits"),
-                F.expr(f"coalesce(n_hits, 0) * 100 div {_TOP_K}")
-                .cast("long")
-                .alias("recall_e2"),
+                *_recall_columns(),
                 F.coalesce("n_violations", F.lit(0))
                 .cast("long")
                 .alias("n_predicate_violations"),

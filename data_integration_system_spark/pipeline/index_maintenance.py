@@ -59,11 +59,10 @@ def rebuild_index(
     index_path) contract and their own determinism guarantees, so a
     rebuild on an unchanged corpus is bit-identical to the original
     build (the append tests' invariant).  ``knobs`` pass through to the
-    builder — the ivfpq tier's ``residual`` ("auto" measures the fit
-    sample and logs the choice into meta) and ``opq`` (learned-rotation
-    codebooks), so a scheduled rebuild can apply the measured operating
-    rules instead of silently resetting a mode-built index to the
-    defaults."""
+    builder — the ivfpq tier's ``mode`` (flat, residual, opq, or auto,
+    which measures the fit sample and logs the choice into meta), so a
+    scheduled rebuild can apply the measured operating rules instead of
+    silently resetting a mode-built index to the default."""
     builders = _builders()
     if kind not in builders:
         raise ValueError(f"unknown index kind {kind!r}; have {sorted(builders)}")
@@ -88,23 +87,11 @@ def _main(argv: list[str]) -> int:
         help="overwrite an existing index (offline windows only — not atomic under probes)",
     )
     ap.add_argument(
-        "--residual",
-        choices=["auto", "true", "false"],
-        help="ivfpq only: PQ encoding mode ('auto' measures the fit "
-        "sample and applies the four-regime rule, logged into meta)",
-    )
-    ap.add_argument(
-        "--opq",
-        action="store_true",
-        help="ivfpq only: fit learned-rotation (OPQ) codebooks",
-    )
-    ap.add_argument(
         "--mode",
-        choices=["auto", "flat", "residual", "opq", "residual+opq"],
-        help="ivfpq only: unified code-mode front door ('auto' applies "
-        "the full five-row ladder: tight→residual, structured→opq, "
-        "isotropic/noise→flat; 'residual+opq' composes both — rotated "
-        "residual codes; overrides --residual/--opq)",
+        choices=["auto", "flat", "residual", "opq"],
+        help="ivfpq only: PQ code mode ('auto' measures the fit sample "
+        "and applies the ladder tight→residual, structured→opq, "
+        "isotropic/noise→flat, logged into meta)",
     )
     ap.add_argument(
         "--vectors",
@@ -115,12 +102,6 @@ def _main(argv: list[str]) -> int:
     )
     args = ap.parse_args(argv)
     knobs: dict = {}
-    if args.residual is not None:
-        knobs["residual"] = {
-            "auto": "auto", "true": True, "false": False,
-        }[args.residual]
-    if args.opq:
-        knobs["opq"] = True
     if args.mode is not None:
         knobs["mode"] = args.mode
     if args.vectors is not None:
@@ -128,7 +109,7 @@ def _main(argv: list[str]) -> int:
             "float": True, "sq8": "sq8", "none": False,
         }[args.vectors]
     if knobs and args.kind != "ivfpq":
-        ap.error("--residual/--opq/--mode/--vectors apply to the ivfpq tier only")
+        ap.error("--mode/--vectors apply to the ivfpq tier only")
     from data_integration_system_spark.session import get_spark
 
     spark = get_spark("index-maintenance")

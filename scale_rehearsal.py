@@ -2667,7 +2667,7 @@ def run_ivfpq_clustered(spark) -> None:
     res_built = os.path.exists(os.path.join(D3C_IDX_RES, "codes", "_SUCCESS"))
     if "build_sec" not in res_row or not res_built:
         t0 = time.perf_counter()
-        build_ivfpq_index(spark, D3C, D3C_IDX_RES, residual=True)
+        build_ivfpq_index(spark, D3C, D3C_IDX_RES, mode="residual")
         res_row["build_sec"] = round(time.perf_counter() - t0, 3)
         row["residual"] = res_row
         flush()
@@ -2863,13 +2863,13 @@ def run_ivfpq_tight(spark) -> None:
         print(f"  exact truth: {row['truth']['exact_bruteforce_sec']}s")
     truth = {tuple(p) for p in row["truth"]["pairs"]}
 
-    for mode, residual in (("flat", False), ("residual", True)):
+    for mode in ("flat", "residual"):
         mrow = dict(row.get(mode, {}))
         idx = os.path.join(HERE, ".scale", f"d3t_idx_{mode}")
         built = os.path.exists(os.path.join(idx, "codes", "_SUCCESS"))
         if "build_sec" not in mrow or not built:
             t0 = time.perf_counter()
-            build_ivfpq_index(spark, D3T, idx, residual=residual)
+            build_ivfpq_index(spark, D3T, idx, mode=mode)
             mrow["build_sec"] = round(time.perf_counter() - t0, 3)
             row[mode] = mrow
             flush()
@@ -3228,13 +3228,13 @@ def run_ivfpq_lowrank(spark) -> None:
         flush()
         print(f"  residual ratio: {row['residual_ratio']}")
 
-    for mode, residual in (("flat", False), ("residual", True)):
+    for mode in ("flat", "residual"):
         mrow = dict(row.get(mode, {}))
         idx = os.path.join(HERE, ".scale", f"d3l_idx_{mode}")
         built = os.path.exists(os.path.join(idx, "codes", "_SUCCESS"))
         if "build_sec" not in mrow or not built:
             t0 = time.perf_counter()
-            build_ivfpq_index(spark, D3L, idx, residual=residual)
+            build_ivfpq_index(spark, D3L, idx, mode=mode)
             mrow["build_sec"] = round(time.perf_counter() - t0, 3)
             row[mode] = mrow
             flush()
@@ -3303,7 +3303,7 @@ def run_opq_d3l(spark) -> None:
         os.path.join(idx, "rotation", "_SUCCESS")
     ):
         t0 = time.perf_counter()
-        build_ivfpq_index(spark, D3L, idx, opq=True)
+        build_ivfpq_index(spark, D3L, idx, mode="opq")
         row["build_sec"] = round(time.perf_counter() - t0, 3)
         flush()
         print(f"  opq build: {row['build_sec']}s")
@@ -3339,157 +3339,6 @@ def run_opq_d3l(spark) -> None:
         }
         flush()
         print(f"  flat x8 replay: {row['flat_x8_replay']}")
-
-
-def run_resopq_composition(spark) -> None:
-    """r16 (VERDICT r15 #3/#4): the OPQ×residual COMPOSITION measured on
-    both regimes where a pure mode wins, plus the OPQ build-cost split.
-
-    Composition legs (section "resopq_composition"):
-    * d3l (anisotropic rank-8, 2M, k=1,414): recorded flat 0.80 /
-      residual 0.90 / opq 0.90 at the starved x=8 shortlist —
-      does rotating the RESIDUAL buy anything beyond either pure mode,
-      and at whose query cost?  Reuses d3_lowrank's stored truth.
-    * d3t (tight sigma=0.05): recorded flat 0.075 / residual 0.45 at
-      x=8 — the regime where re-centering is the whole win; this leg
-      also builds the MISSING pure-OPQ index at d3t so the tight row
-      of the ladder has all four modes.  Reuses d3_tight's truth.
-
-    Cost split (section "d3l_opq_cost", VERDICT r15 #4): the recorded
-    193 s OPQ build vs 71 s flat at d3l is unattributed — fit (one-time
-    driver numpy over the capped sample, amortizes across corpus size)
-    vs per-vector encode (doesn't).  Times fit_pq_codebooks and
-    fit_opq standalone on the same corpus, replays the flat build as a
-    host-speed anchor, and derives the encode-side delta; the
-    ``opq_iters`` knob is the lever if the alternating fit dominates.
-    Every sub-step resumes."""
-    import statistics
-
-    from pyspark.sql import functions as F
-
-    from data_integration_system_spark.catalog import table
-    from data_integration_system_spark.operators.similarity import (
-        build_ivfpq_index,
-        fit_opq,
-        fit_pq_codebooks,
-        query_ivfpq_index,
-    )
-
-    path = os.path.join(HERE, "SCALE_REHEARSAL_RECALL.json")
-    with open(path) as fh:
-        prev = json.load(fh)
-    prev = dict(prev)
-    row = dict(prev.get("resopq_composition", {}))
-
-    def flush() -> None:
-        prev["resopq_composition"] = row
-        with open(path, "w") as fh:
-            json.dump(prev, fh, indent=1, sort_keys=True)
-
-    def dataset(root):
-        emb = table(spark, root, "embeddings")
-        corpus = emb.filter(F.col("vec_id") >= 8).select("vec_id", "embedding")
-        qdf = (
-            emb.filter(F.col("vec_id") < 8)
-            .select(F.col("vec_id").alias("q_id"),
-                    F.col("embedding").alias("qe"))
-            .localCheckpoint()
-        )
-        return corpus, qdf
-
-    def measure(idx_path, corpus, qdf, truth, **kw):
-        walls, got = [], set()
-        for _ in range(3):
-            t0 = time.perf_counter()
-            res = query_ivfpq_index(
-                spark, idx_path, qdf, vectors=corpus, nprobe=3, **kw
-            ).collect()
-            walls.append(round(time.perf_counter() - t0, 3))
-            got = {(int(r.q_id), int(r.c_id)) for r in res}
-        return {
-            "recall_at_5": round(len(got & truth) / len(truth), 4),
-            "query_sec_med3": statistics.median(walls),
-        }
-
-    # --- composition legs ---
-    legs = [
-        ("d3l", D3L, "d3_lowrank", ("residual+opq",)),
-        ("d3t", D3T, "d3_tight", ("opq", "residual+opq")),
-    ]
-    for tag, root, truth_section, modes in legs:
-        truth = {tuple(p) for p in prev[truth_section]["truth"]["pairs"]}
-        corpus = qdf = None
-        for mode in modes:
-            mkey = f"{tag}_{mode.replace('+', '_')}"
-            mrow = dict(row.get(mkey, {}))
-            idx = os.path.join(
-                HERE, ".scale", f"{tag}_idx_{mode.replace('+', '_')}"
-            )
-            if corpus is None:
-                corpus, qdf = dataset(root)
-            if "build_sec" not in mrow or not os.path.exists(
-                os.path.join(idx, "codes", "_SUCCESS")
-            ):
-                t0 = time.perf_counter()
-                build_ivfpq_index(spark, root, idx, mode=mode)
-                mrow["build_sec"] = round(time.perf_counter() - t0, 3)
-                row[mkey] = mrow
-                flush()
-                print(f"  {mkey} build: {mrow['build_sec']}s")
-            if "x8" not in mrow:
-                mrow["x8"] = measure(idx, corpus, qdf, truth, shortlist_x=8)
-                row[mkey] = mrow
-                flush()
-                print(f"  {mkey} x8: {mrow['x8']}")
-            if "default" not in mrow:
-                mrow["default"] = measure(idx, corpus, qdf, truth)
-                row[mkey] = mrow
-                flush()
-                print(f"  {mkey} default: {mrow['default']}")
-
-    # --- OPQ build-cost split at d3l ---
-    cost = dict(prev.get("d3l_opq_cost", {}))
-
-    def cflush() -> None:
-        prev["d3l_opq_cost"] = cost
-        with open(path, "w") as fh:
-            json.dump(prev, fh, indent=1, sort_keys=True)
-
-    corpus, _ = dataset(D3L)
-    if "fit_pq_sec" not in cost:
-        t0 = time.perf_counter()
-        fit_pq_codebooks(corpus)
-        cost["fit_pq_sec"] = round(time.perf_counter() - t0, 3)
-        cflush()
-        print(f"  fit_pq standalone: {cost['fit_pq_sec']}s")
-    if "fit_opq_sec" not in cost:
-        t0 = time.perf_counter()
-        fit_opq(corpus)
-        cost["fit_opq_sec"] = round(time.perf_counter() - t0, 3)
-        cflush()
-        print(f"  fit_opq standalone: {cost['fit_opq_sec']}s")
-    if "build_flat_replay_sec" not in cost:
-        idx = os.path.join(HERE, ".scale", "d3l_idx_flat_replay")
-        t0 = time.perf_counter()
-        build_ivfpq_index(spark, D3L, idx)
-        cost["build_flat_replay_sec"] = round(time.perf_counter() - t0, 3)
-        cflush()
-        print(f"  flat build replay: {cost['build_flat_replay_sec']}s")
-    if "attribution" not in cost:
-        fit_delta = cost["fit_opq_sec"] - cost["fit_pq_sec"]
-        rec_flat = prev["d3_lowrank"]["flat"]["build_sec"]
-        rec_opq = prev["d3l_opq"]["build_sec"]
-        cost["attribution"] = {
-            "recorded_build_flat_sec": rec_flat,
-            "recorded_build_opq_sec": rec_opq,
-            "host_ratio_vs_recorded":
-                round(cost["build_flat_replay_sec"] / rec_flat, 3),
-            "fit_delta_sec": round(fit_delta, 3),
-            "encode_delta_sec":
-                round((rec_opq - rec_flat) - fit_delta, 3),
-        }
-        cflush()
-        print(f"  attribution: {cost['attribution']}")
 
 
 def run_sq8_d3l(spark) -> None:
@@ -4115,11 +3964,6 @@ def main() -> None:
         "vs the recorded flat/residual x8 rows",
     )
     ap.add_argument(
-        "--resopq", action="store_true",
-        help="r16: OPQ x residual composition on the tight and "
-        "low-rank regimes + the OPQ build-cost fit/encode split",
-    )
-    ap.add_argument(
         "--online-sink-batchsize", action="store_true",
         help="r16: online minhash sink batch-size curve "
         "(400/4k/40k docs) at the 5M-doc index",
@@ -4201,8 +4045,6 @@ def main() -> None:
         run_online_sink_geometry(spark)
     if args.opq_d3l:
         run_opq_d3l(spark)
-    if args.resopq:
-        run_resopq_composition(spark)
     if args.online_sink_batchsize:
         run_online_sink_batchsize(spark)
     if args.sq8_d3l:

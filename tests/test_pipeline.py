@@ -1269,9 +1269,9 @@ def test_index_maintenance_rebuild_dispatch(spark, tmp_path):
         rebuild_index(spark, "btree", sf, str(tmp_path / "x"))
     # mode knobs pass through to the ivfpq builder and land in meta
     idx2 = str(tmp_path / "ivfpq_modes")
-    rebuild_index(spark, "ivfpq", sf, idx2, residual="auto", opq=True)
+    rebuild_index(spark, "ivfpq", sf, idx2, mode="opq")
     meta = spark.read.parquet(f"{idx2}/meta").head()
-    assert meta["residual_mode"] == "auto" and meta["opq"] is True
+    assert meta["opq"] is True
     assert query_ivfpq_index(spark, idx2, queries).count() > 0
 
 

@@ -1388,7 +1388,7 @@ def test_nearest_centroid_np_matches_hof(spark, tmp_path):
 
 
 def test_opq_rotation_pays_on_anisotropic_corpus(spark, tmp_path):
-    """OPQ (Ge et al. CVPR 2013): build_ivfpq_index(opq=True) learns an
+    """OPQ (Ge et al. CVPR 2013): build_ivfpq_index(mode="opq") learns an
     orthogonal rotation that decorrelates the subspace split.  Pinned
     on the seeded anisotropic fixture at the STARVED x=8 shortlist
     (where per-slot ADC resolution separates modes): OPQ recall@5 beats
@@ -1436,7 +1436,7 @@ def test_opq_rotation_pays_on_anisotropic_corpus(spark, tmp_path):
     flat_idx = str(tmp_path / "flat")
     opq_idx = str(tmp_path / "opq")
     sim.build_ivfpq_index(spark, root, flat_idx, store_vectors=False)
-    sim.build_ivfpq_index(spark, root, opq_idx, store_vectors=False, opq=True)
+    sim.build_ivfpq_index(spark, root, opq_idx, store_vectors=False, mode="opq")
 
     meta = spark.read.parquet(f"{opq_idx}/meta").head()
     assert meta["opq"] is True and meta["residual"] is False
@@ -1517,12 +1517,12 @@ def test_lowrank_frac_debiasing_small_isotropic_clusters(spark, tmp_path):
 
 
 def test_residual_auto_lands_on_the_winner_in_all_four_regimes(spark, tmp_path):
-    """residual="auto" is the executable form of the four-regime
-    evidence table (SCALE.md r13/r14): flat on wide-isotropic clusters
-    and on pure noise, residual on tight clusters (norm-ratio rule) and
-    on anisotropic low-rank residuals (structure rule — same norm ratio
-    as the isotropic-flat regime, so the ratio alone CANNOT separate
-    them; the per-cluster participation ratio does).  All four fixtures
+    """mode="auto" is the executable form of the four-regime
+    evidence table (SCALE.md r13/r14/r15): flat on wide-isotropic
+    clusters and on pure noise, residual on tight clusters (norm-ratio
+    rule), opq on anisotropic low-rank residuals (structure rule — same
+    norm ratio as the isotropic-flat regime, so the ratio alone CANNOT
+    separate them; the per-cluster participation ratio does).  All four fixtures
     are seeded, so the choice is pinned, not probabilistic."""
     from pyspark.sql import functions as F
 
@@ -1537,17 +1537,15 @@ def test_residual_auto_lands_on_the_winner_in_all_four_regimes(spark, tmp_path):
         cent = sim.fit_ivf_centroids(spark, root, lloyd_iters=2)
         assigned = sim.nearest_centroid(corpus, cent).localCheckpoint()
         cmap = sim._centroid_map(cent.collect())
-        use, st = sim.choose_residual_mode(assigned, cmap)
-        mode, st2 = sim.choose_codes_mode(assigned, cmap)
-        assert st == st2  # one measurement feeds both rules
-        return use, st, mode
+        mode, st = sim.choose_codes_mode(assigned, cmap)
+        return st, mode
 
     # wide isotropic (d3c shape, sigma=0.15): flat — ratio in the wide
     # band, residual covariance ~isotropic
     iso = str(tmp_path / "iso")
     sim.generate_clustered_embeddings(spark, iso, n=2000, n_clusters=20)
-    use, st, mode = choice(iso)
-    assert not use and mode == "flat"
+    st, mode = choice(iso)
+    assert mode == "flat"
     assert st["ratio"] > sim._AUTO_TIGHT_RATIO
     assert st["lowrank_frac"] > sim._AUTO_LOWRANK_FRAC
 
@@ -1556,25 +1554,25 @@ def test_residual_auto_lands_on_the_winner_in_all_four_regimes(spark, tmp_path):
     tight = str(tmp_path / "tight")
     sim.generate_clustered_embeddings(spark, tight, n=2000, n_clusters=20,
                                       sigma=0.05)
-    use, st, mode = choice(tight)
-    assert use and mode == "residual"
+    st, mode = choice(tight)
+    assert mode == "residual"
     assert st["ratio"] <= sim._AUTO_TIGHT_RATIO
 
     # anisotropic low-rank (d3l shape, sigma=0.3 rank 8): the STRUCTURE
-    # rule — residual under the two-way r14 rule, OPQ under the r15
-    # ladder (same recall at 1.65x lower query cost, SCALE.md r15)
+    # rule — OPQ (residual's recall at 1.65x lower query cost, SCALE.md
+    # r15)
     low = str(tmp_path / "lowrank")
     sim.generate_clustered_embeddings(spark, low, n=2000, n_clusters=20,
                                       sigma=0.3, cov_rank=8)
-    use, st, mode = choice(low)
-    assert use and mode == "opq"
+    st, mode = choice(low)
+    assert mode == "opq"
     assert st["ratio"] > sim._AUTO_TIGHT_RATIO
     assert st["lowrank_frac"] <= sim._AUTO_LOWRANK_FRAC
 
     # noise (the unclustered synthetic embeddings table): flat — the
     # centroids resolve nothing, residual norm ~ vector norm
-    use, st, mode = choice("/root/testdata/sf0.001")
-    assert not use and mode == "flat"
+    st, mode = choice("/root/testdata/sf0.001")
+    assert mode == "flat"
     assert st["ratio"] > sim._AUTO_TIGHT_RATIO
 
     # mode="auto" builds through the ladder: the low-rank fixture gets
@@ -1592,7 +1590,7 @@ def test_residual_auto_lands_on_the_winner_in_all_four_regimes(spark, tmp_path):
 
 
 def test_residual_auto_build_logs_choice_into_meta(spark, tmp_path):
-    """A full build with residual='auto' commits the chosen mode AND
+    """A full build with mode='auto' commits the chosen mode AND
     both measured statistics into {index}/meta (auditable rebuilds);
     explicit builds record mode='explicit' with NULL stats."""
     from data_integration_system_spark.operators import similarity as sim
@@ -1601,7 +1599,7 @@ def test_residual_auto_build_logs_choice_into_meta(spark, tmp_path):
     sim.generate_clustered_embeddings(spark, root, n=1500, n_clusters=15,
                                       sigma=0.05)
     idx = str(tmp_path / "idx_auto")
-    sim.build_ivfpq_index(spark, root, idx, residual="auto")
+    sim.build_ivfpq_index(spark, root, idx, mode="auto")
     meta = spark.read.parquet(f"{idx}/meta").head()
     assert meta["residual"] is True  # tight regime -> residual
     assert meta["residual_mode"] == "auto"
@@ -1620,7 +1618,7 @@ def test_residual_auto_build_logs_choice_into_meta(spark, tmp_path):
     assert len(got) > 0
 
     idx2 = str(tmp_path / "idx_explicit")
-    sim.build_ivfpq_index(spark, root, idx2, residual=False,
+    sim.build_ivfpq_index(spark, root, idx2, mode="flat",
                           store_vectors=False)
     meta2 = spark.read.parquet(f"{idx2}/meta").head()
     assert meta2["residual"] is False
@@ -1854,7 +1852,7 @@ def test_ivfpq_residual_mode_identities(spark, tmp_path):
     root = str(tmp_path / "corpus")
     generate_clustered_embeddings(spark, root, n=400, n_clusters=20)
     full = str(tmp_path / "full")
-    build_ivfpq_index(spark, root, full, residual=True)
+    build_ivfpq_index(spark, root, full, mode="residual")
     meta = spark.read.parquet(f"{full}/meta").head()
     assert meta["residual"] is True
 
@@ -1927,6 +1925,121 @@ def test_driver_probe_sets_match_spark_cosine_ranking(spark):
             if r.rn <= nprobe:
                 want.setdefault(int(r.q_id), set()).add(int(r.cent_id))
         assert _probe_sets(q_rows, cent.collect(), nprobe) == want, nprobe
+
+
+def _crossjoin_ivf_topk(queries, cent, corpus, nprobe=3, top_k=5):
+    """The Spark ranking the IVF tier ran before driver-side probes:
+    queries crossJoined with the broadcast centroids, the nprobe best
+    by cosine per query in a window (ties to the lowest cent_id), then
+    the probed corpus rows ranked by cosine in a second window."""
+    from pyspark.sql import Window
+
+    from data_integration_system_spark.functions.vectors import cosine
+
+    probe_w = Window.partitionBy("q_id").orderBy(F.col("d").desc(), "cent_id")
+    probes = (
+        queries.crossJoin(F.broadcast(cent))
+        .select("q_id", "qe", "cent_id", cosine("qe", "centroid").alias("d"))
+        .withColumn("rn", F.row_number().over(probe_w))
+        .filter(F.col("rn") <= nprobe)
+        .select("q_id", "qe", "cent_id")
+    )
+    top_w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), "c_id")
+    ranked = (
+        probes.join(corpus, "cent_id")
+        .select(
+            "q_id",
+            F.col("vec_id").alias("c_id"),
+            cosine("qe", "embedding").alias("sim"),
+        )
+        .withColumn("rn", F.row_number().over(top_w))
+        .filter(F.col("rn") <= top_k)
+        .select(
+            "q_id",
+            "c_id",
+            F.col("rn").cast("long").alias("rnk"),
+            F.round("sim", 4).alias("cos_sim"),
+        )
+    )
+    return {tuple(r) for r in ranked.collect()}
+
+
+def test_ivf_tier_driver_probes_match_crossjoin_ranking_and_job_budget(
+    spark, tmp_path
+):
+    """Both IVF paths rank probes with _probe_sets over collected
+    queries and centroids; their rows equal the crossJoin + window
+    ranking they replaced (kept above as the reference), and a warm run
+    stays inside its Spark-job budget: similarity_ivf_topk <= 25
+    (measured 23; 28 with the crossJoin ranking and a localCheckpoint
+    per Lloyd round), query_ivf_index <= 9 for 8 and for 40 queries
+    (measured 8; 11 with the checkpointed crossJoin probes and the
+    distinct collect)."""
+    from data_integration_system_spark.operators._common import parallelize_scan
+    from data_integration_system_spark.operators.similarity import (
+        _N_QUERIES,
+        build_ivf_index,
+        fit_ivf_centroids,
+        nearest_centroid,
+        query_ivf_index,
+        similarity_ivf_topk,
+    )
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup("", "")
+        return len(tracker.getJobIdsForGroup(group)), out
+
+    emb = table(spark, SF, "embeddings")
+    cent = fit_ivf_centroids(spark, SF)
+    corpus = parallelize_scan(emb).filter(F.col("vec_id") >= _N_QUERIES)
+    assigned = nearest_centroid(corpus.select("vec_id", "embedding"), cent)
+    queries = emb.filter(F.col("vec_id") < _N_QUERIES).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe")
+    )
+    want = _crossjoin_ivf_topk(queries, cent, assigned)
+    similarity_ivf_topk(spark, SF).collect()  # warm plan caches
+    n_jobs, rows = jobs(
+        "ivf-topk", lambda: similarity_ivf_topk(spark, SF).collect()
+    )
+    assert {tuple(r) for r in rows} == want and len(want) == 5 * _N_QUERIES
+    assert n_jobs <= 25, n_jobs
+
+    idx = str(tmp_path / "ivf")
+    build_ivf_index(spark, SF, idx)
+    stored = spark.read.parquet(f"{idx}/centroids")
+    indexed = spark.read.parquet(f"{idx}/corpus").dropDuplicates(["vec_id"])
+    for n_q in (_N_QUERIES, 40):
+        qs = emb.filter(F.col("vec_id") < n_q).select(
+            F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe")
+        )
+        want = _crossjoin_ivf_topk(qs, stored, indexed)
+        query_ivf_index(spark, idx, qs).collect()  # warm
+        n_jobs, rows = jobs(
+            f"ivf-query-{n_q}", lambda: query_ivf_index(spark, idx, qs).collect()
+        )
+        assert {tuple(r) for r in rows} == want and len(want) == 5 * n_q
+        assert n_jobs <= 9, (n_q, n_jobs)
+
+
+def test_build_ivfpq_index_names_the_four_modes(spark, tmp_path):
+    """One code-mode knob with four values: the removed composition
+    (and any other value) is refused before any fit runs."""
+    from data_integration_system_spark.operators.similarity import (
+        build_ivfpq_index,
+    )
+
+    with pytest.raises(ValueError) as err:
+        build_ivfpq_index(spark, SF, str(tmp_path / "x"), mode="residual+opq")
+    for mode in ("flat", "residual", "opq", "auto"):
+        assert f"'{mode}'" in str(err.value)
+    assert not (tmp_path / "x").exists()
 
 
 def test_ivfpq_handle_matches_oneshot_and_sees_appends_on_reopen(spark, tmp_path):
@@ -2006,9 +2119,9 @@ def test_residual_beats_flat_on_tight_clusters(spark, tmp_path):
         (r.q_id, r.c_id) for r in exact_topk_np(corpus, q_rows, 5).collect()
     }
     recall = {}
-    for mode, res in (("flat", False), ("residual", True)):
+    for mode in ("flat", "residual"):
         idx = str(tmp_path / f"idx_{mode}")
-        build_ivfpq_index(spark, root, idx, residual=res)
+        build_ivfpq_index(spark, root, idx, mode=mode)
         got = {
             (r.q_id, r.c_id)
             for r in query_ivfpq_index(
@@ -2017,53 +2130,6 @@ def test_residual_beats_flat_on_tight_clusters(spark, tmp_path):
         }
         recall[mode] = len(got & truth) / len(truth)
     assert recall["residual"] > recall["flat"], recall
-
-
-def test_residual_opq_composition_builds_and_answers(spark, tmp_path):
-    """mode="residual+opq" (r16): codes encode the ROTATED residual —
-    fit_opq learns R on the residual sample, encode applies
-    normalize → subtract centroid → rotate, and the query side builds
-    one rotated LUT per probed centroid.  Pins: both meta flags set,
-    rotation stored and orthogonal, end-to-end query answers, and the
-    append path composes both transforms (a planted twin of query 0
-    must win rank 1 through codes appended AFTER the build)."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from data_integration_system_spark.catalog import table
-    from data_integration_system_spark.operators import similarity as sim
-    from data_integration_system_spark.pipeline import index_manifest as im
-
-    root = str(tmp_path / "corpus")
-    # tight AND structured: the regime the composed mode exists for
-    sim.generate_clustered_embeddings(
-        spark, root, n=2000, n_clusters=20, sigma=0.3, cov_rank=8
-    )
-    idx = str(tmp_path / "idx_resopq")
-    sim.build_ivfpq_index(spark, root, idx, mode="residual+opq",
-                          store_vectors=False)
-    meta = spark.read.parquet(f"{idx}/meta").head()
-    assert meta["residual"] is True and meta["opq"] is True
-    R = np.asarray(sim._read_rotation(spark, idx, meta))
-    assert float(np.abs(R @ R.T - np.eye(R.shape[0])).max()) < 1e-9
-    assert "rotation" in im.read_manifest(spark, idx)["relations"]
-
-    emb = table(spark, root, "embeddings")
-    queries = emb.filter(F.col("vec_id") < sim._N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe")
-    )
-    assert sim.query_ivfpq_index(spark, idx, queries).count() > 0
-
-    twin = queries.filter(F.col("q_id") == 0).select(
-        F.lit(99_000_000).cast("long").alias("vec_id"),
-        F.col("qe").alias("embedding"),
-    )
-    sim.append_ivfpq_index(spark, idx, twin)
-    got = {
-        (r.q_id, r.c_id, r.rnk)
-        for r in sim.query_ivfpq_index(spark, idx, queries).collect()
-    }
-    assert (0, 99_000_000, 1) in got
 
 
 def test_sq8_vectors_relation_decodes_and_serves(spark, tmp_path):
