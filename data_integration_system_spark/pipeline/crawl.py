@@ -21,10 +21,10 @@ done so far, not by its declared budget:
 
 * Driver path: every crawl without a `checkpoint_dir` starts here.  The
   frontier is a Python list and `visited` a set.  Each generation is
-  scope-filtered by `scope_filter` over a local relation (no Spark
-  job), de-duplicated and cut in Python, and fetched and parsed by
-  `fetch.fetch_batch` on the driver; the pages become one local
-  relation.  A crawl that ends within `_LOCAL_CRAWL_PAGES` fetch
+  filtered by `scope_predicate`, built once per crawl, over a local
+  relation (no Spark job), de-duplicated and cut in Python, and fetched
+  and parsed by `fetch.fetch_batch` on the driver; the pages become one
+  local relation.  A crawl that ends within `_LOCAL_CRAWL_PAGES` fetch
   attempts costs the Spark jobs of its consumers, not ~10 per
   generation, whatever its budget.
 * Distributed path: a crawl whose next generation would take the
@@ -43,7 +43,7 @@ done so far, not by its declared budget:
   `resume=True` continue a killed crawl, and a driver generation keeps
   nothing a restarted process could resume from.
 
-Both paths share `scope_filter`, `fetch_batch`, `parse_page` and the
+Both paths share `scope_predicate`, `fetch_batch`, `parse_page` and the
 page projection, so they return the same pages table (a test runs every
 crawl scenario on the driver, across the handoff and on the distributed
 loop alone, and compares them).
@@ -59,7 +59,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -125,20 +125,25 @@ _LOCAL_CRAWL_PAGES = 1_000
 FRONTIER_SCHEMA = "url string, depth long, retry long"
 
 
-def scope_filter(frontier: DataFrame, cfg: CrawlConfig) -> DataFrame:
-    """F1-F5 gates (crawler_core.py:15-24,81-93,157-167) as one composed
-    predicate over the frontier.  All column math — runs before fetch."""
-    df = frontier.filter(~is_blocked_ext(F.col("url")))  # F1
+def scope_predicate(cfg: CrawlConfig) -> Column:
+    """F1-F5 gates (crawler_core.py:15-24,81-93,157-167) as one Column
+    over a frontier's url and depth.  All column math — runs before
+    fetch.  Each Column is a py4j round trip: build it once per crawl."""
+    pred = ~is_blocked_ext(F.col("url"))  # F1
     if cfg.same_domain_only:
-        df = df.filter(domain_of(F.col("url")) == F.lit(cfg.root_domain))  # F2
+        pred &= domain_of(F.col("url")) == F.lit(cfg.root_domain)  # F2
     if cfg.path_mode and cfg.base_path:
         base = cfg.base_path.rstrip("/") + "/"  # crawler_core.py:74-79
-        df = df.filter(
-            path_of(F.col("url")).startswith(base)
-            | (path_of(F.col("url")) == cfg.base_path.rstrip("/"))
+        pred &= path_of(F.col("url")).startswith(base) | (
+            path_of(F.col("url")) == cfg.base_path.rstrip("/")
         )  # F3
     cap = 0 if cfg.single_page else cfg.max_depth  # F5 / F4
-    return df.filter(F.col("depth") <= cap)
+    return pred & (F.col("depth") <= cap)
+
+
+def scope_filter(frontier: DataFrame, cfg: CrawlConfig) -> DataFrame:
+    """The frontier rows inside the crawl's scope (`scope_predicate`)."""
+    return frontier.filter(scope_predicate(cfg))
 
 
 PAGES_SCHEMA = (
@@ -376,15 +381,12 @@ def _crawl_on_driver(
     budget = cfg.max_pages_total
     generation = 0
     handoff = None
+    # F1-F5 by the same predicate; a filter over a local relation is
+    # folded into it by the optimizer, so collect() runs no job
+    in_scope = scope_predicate(cfg)
     while budget > 0 and frontier:
-        # F1-F5 by the same predicate; a filter over a local relation is
-        # folded into it by the optimizer, so collect() runs no job
-        scoped = scope_filter(
-            local_rows_df(
-                spark, [r for r in frontier if r[0] not in visited], FRONTIER_SCHEMA
-            ),
-            cfg,
-        ).collect()
+        fresh = [r for r in frontier if r[0] not in visited]
+        scoped = local_rows_df(spark, fresh, FRONTIER_SCHEMA).filter(in_scope).collect()
         # one row per url: shallowest depth wins; max(retry) so a link
         # rediscovery can't reset a url's retry budget
         best: dict[str, tuple[int, int]] = {}

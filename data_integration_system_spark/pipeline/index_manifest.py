@@ -52,6 +52,7 @@ import json
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from data_integration_system_spark.operators._common import local_rows_df
 from data_integration_system_spark.pipeline.fsutil import hadoop_path
@@ -264,10 +265,15 @@ def write_manifest(
     relations: dict[str, str | None],
     expected_version: int | None = None,
     lockstep: list[tuple[str, str]] | None = None,
+    written: dict | None = None,
 ) -> dict:
     """Snapshot ``{index_path}/{rel}`` for each ``rel -> partition_col``
     (None = unpartitioned) into ``{index_path}/_manifest.json``,
     atomically (temp + rename).  Returns the manifest dict.
+
+    ``written`` maps a relation to the schema of the DataFrame written into
+    it: read by its non-partition columns, the stored schema is inference's
+    (partition type quirks included) without inference's Spark job.
 
     ``expected_version`` turns the commit optimistic: raise
     ManifestConflict unless the on-disk manifest is still at exactly
@@ -315,7 +321,9 @@ def write_manifest(
         # pass it explicitly, so a cold read schedules zero jobs (without
         # it, parquet schema inference runs a 1-task Spark job per open)
         if files:
-            entry["schema_json"] = _relation_df(spark, root, entry, None).schema.json()
+            data = [f for f in (written or {}).get(rel, []) if f.name != part_col]
+            probe = entry | {"schema_json": StructType(data).json()} if data else entry
+            entry["schema_json"] = _relation_df(spark, root, probe, None).schema.json()
         else:
             # a relation emptied since the last commit (compaction, full
             # retention expiry) keeps its schema, so readers still get an
@@ -552,8 +560,6 @@ def _stored_schema(entry: dict):
     sj = entry.get("schema_json")
     if sj is None:
         return None
-    from pyspark.sql.types import StructType
-
     return StructType.fromJson(json.loads(sj))
 
 

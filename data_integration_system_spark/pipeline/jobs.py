@@ -20,6 +20,7 @@ import datetime as _dt
 import gc
 import json
 import uuid
+from collections import Counter
 from typing import Any
 from urllib.parse import urlparse
 
@@ -27,7 +28,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_integration_system_spark.catalog import table
-from data_integration_system_spark.functions.skew import salted_agg
 from data_integration_system_spark.registry import query
 from data_integration_system_spark.pipeline.crawl import (
     CrawlConfig,
@@ -233,8 +233,9 @@ def fold_job_log(log: DataFrame) -> DataFrame:
 
 def current_jobs(spark: SparkSession, jobs_path: str) -> DataFrame:
     """Present state of every job in the parquet log — the GET /jobs
-    read path (api/main.py:81-93) over the append-only log."""
-    return fold_job_log(spark.read.parquet(jobs_path))
+    read path (api/main.py:81-93) over the append-only log, read with its
+    schema (no inference job; a missing log raises AnalysisException)."""
+    return fold_job_log(spark.read.schema(_JOBS_SCHEMA).parquet(jobs_path))
 
 
 @query(
@@ -394,6 +395,21 @@ def run_pending_jobs(
         return list(pool.map(run_one, pending))
 
 
+def report_counts(rows: DataFrame) -> tuple[int, dict[str, int], dict[str, int]]:
+    """Page total, top-5 domains by (count desc, domain asc) and, when
+    ``rows`` carries ``STATUS_COL``, upsert outcomes, from ONE aggregation;
+    ``count`` combines map-side, so a crawl's skewed domains need no salt."""
+    keys = ["domain", STATUS_COL] if STATUS_COL in rows.columns else ["domain"]
+    per_domain: Counter[str] = Counter()
+    upserts = {"INSERTED": 0, "SKIPPED": 0, "UPSERTED": 0}
+    for r in rows.groupBy(*keys).count().collect():
+        per_domain[r["domain"]] += r["count"]
+        if len(keys) == 2:
+            upserts[r[STATUS_COL]] += r["count"]
+    top = sorted(per_domain.items(), key=lambda kv: (-kv[1], kv[0]))[:5]
+    return sum(per_domain.values()), dict(top), upserts
+
+
 def run_job(
     spark: SparkSession,
     job: dict[str, Any],
@@ -404,7 +420,12 @@ def run_job(
     ingest discovered file documents (download_files), write the pages
     table (unless documents_only — pages are still crawled for link
     discovery, crawler_core.py:217), return the DONE/FAILED report (the
-    worker's status write, worker_daemon.py:54-58, as a value)."""
+    worker's status write, worker_daemon.py:54-58, as a value).
+
+    The report's counts are one aggregation (`report_counts`) that runs
+    AFTER the snapshot commit, so a failure there reports FAILED over a
+    committed version; a retry converges, because the re-crawl is
+    incremental."""
     try:
         cfg = config_from_job(job)
         pages = crawl(spark, list(job.get("start_urls", [])), cfg, fetch_fn)
@@ -416,22 +437,6 @@ def run_job(
         # Collecting here frees them while the write below runs, not
         # whenever the collector next gets to them.
         gc.collect()
-        n = pages.count()
-        # per-domain page counts for the report, via the salted two-phase
-        # aggregation: a crawl's domain distribution is maximally skewed
-        # by construction (one site dominates), so the hot domain is
-        # spread over n_salt reducers before the final combine — the
-        # skew-safe default for ANY re-aggregable per-domain metric this
-        # report grows (count benefits from map-side partials already;
-        # sum/min/max of per-page metrics ride the same call).
-        domains = {
-            r["domain"]: r["count"]
-            for r in salted_agg(pages.select("domain"), "domain",
-                                {"domain": "count"}, n_salt=8)
-            .orderBy(F.col("count").desc(), "domain")
-            .limit(5)
-            .collect()
-        }
         n_files = 0
         if cfg.download_files:
             docs = ingest_files(pages, cfg, fetch_fn).localCheckpoint()
@@ -442,9 +447,9 @@ def run_job(
             docs.write.mode("overwrite").parquet(
                 output_path.rstrip("/") + "_files"
             )
-        upserts = {"INSERTED": 0, "SKIPPED": 0, "UPSERTED": 0}
+        # what the report aggregates, once the commit (if any) is done
+        counted = pages
         if not cfg.documents_only:
-            upserts["INSERTED"] = n
             new_pages = pages.drop("links")
             if cfg.incremental and snapshot_exists(spark, output_path):
                 # re-crawl against an existing store: classify by content
@@ -453,15 +458,6 @@ def run_job(
                 # the new version of changed pages, keep untouched pages
                 base = current_version(spark, output_path)
                 current = read_current(spark, output_path)
-                classified = classify_upsert(
-                    new_pages, current, key="page_id", hash_col="content_hash"
-                ).localCheckpoint()
-                upserts = {"INSERTED": 0, "SKIPPED": 0, "UPSERTED": 0} | {
-                    r[STATUS_COL]: r["n"]
-                    for r in classified.groupBy(STATUS_COL)
-                    .agg(F.count("*").alias("n"))
-                    .collect()
-                }
                 # copy-on-write merge: reads the CURRENT snapshot, writes
                 # the NEXT one — no localCheckpoint pinning, no window
                 # where the only copy is gone (snapshots.write_snapshot
@@ -477,8 +473,15 @@ def run_job(
                     partition_by="domain",
                     expect_current=base,
                 )
+                # classified against the base version the merge read: its
+                # files stay in place after the pointer swap
+                counted = classify_upsert(
+                    new_pages, current, key="page_id", hash_col="content_hash"
+                )
             else:
                 write_snapshot(new_pages, output_path, partition_by="domain")
+                counted = pages.withColumn(STATUS_COL, F.lit("INSERTED"))
+        n, domains, upserts = report_counts(counted)
         return {
             "status": "DONE",
             "pages": n,

@@ -44,6 +44,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from data_integration_system_spark.pipeline import index_manifest as im
 from data_integration_system_spark.pipeline.fsutil import (
     child_names,
     delete_tree,
@@ -174,8 +175,11 @@ def write_snapshot(
         writer = writer.partitionBy(partition_by)
     writer.parquet(f"{root}/{name}")
     # file manifest INSIDE the write-once version dir, before the
-    # pointer swap — the swap atomically publishes data + manifest
-    _commit_data_manifest(spark, root, name, partition_by)
+    # pointer swap — the swap atomically publishes data + manifest; the
+    # schema just written spares it the inference job
+    im.write_manifest(
+        spark, f"{root}/{name}", {"": partition_by}, written={"": df.schema}
+    )
     _check_expected(spark, root, expect_current)  # re-check after the slow write
     _write_manifest(spark, root, name)
     return name
@@ -238,8 +242,6 @@ def _commit_data_manifest(
     the dir is write-once and single-writer, so a present manifest is
     authoritative and re-walking it would undo the splice's whole
     point."""
-    from data_integration_system_spark.pipeline import index_manifest as im
-
     if im.read_manifest(spark, f"{root}/{name}") is not None:
         return
     im.write_manifest(spark, f"{root}/{name}", {"": partition_by})
@@ -254,8 +256,6 @@ def _version_df(
     for pre-manifest versions (``partitions`` then degrades to a
     partition-column filter, pruned by Catalyst from the directory
     listing)."""
-    from data_integration_system_spark.pipeline import index_manifest as im
-
     path = f"{root}/{name}"
     man = im.read_manifest(spark, path)
     if man is not None and "" in man.get("relations", {}):

@@ -2540,7 +2540,7 @@ def streaming_jobs_fold_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from data_integration_system_spark.catalog import table
-    from data_integration_system_spark.pipeline.jobs import fold_job_log
+    from data_integration_system_spark.pipeline.jobs import current_jobs
 
     root = tempfile.mkdtemp(prefix="stream_jobsfold_")
     try:
@@ -2573,7 +2573,7 @@ def streaming_jobs_fold_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
             stream_options={"maxFilesPerTrigger": "1"},
         )
         _drain(q)
-        out = fold_job_log(spark.read.parquet(jobs_path)).localCheckpoint()
+        out = current_jobs(spark, jobs_path).localCheckpoint()
         return out.orderBy("job_id")
     finally:
         shutil.rmtree(root, ignore_errors=True)

@@ -3758,7 +3758,7 @@ def run_jobs_overhead(spark) -> None:
     wrap(PJ, "current_jobs", "claim_fold")
     wrap(PJ, "job_status_update", "status_write")
     wrap(PJ, "crawl", "crawl_bfs")
-    wrap(PJ, "salted_agg", "report_agg")
+    wrap(PJ, "report_counts", "report_agg")
     wrap(PJ, "write_snapshot", "snapshot_write")
     root = tempfile.mkdtemp(prefix="jobs_ovh_")
     try:

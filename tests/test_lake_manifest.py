@@ -14,8 +14,10 @@ chmod-locked unprobed dirs for never-touches.
 
 from __future__ import annotations
 
+import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_integration_system_spark.pipeline import index_manifest as im
@@ -563,3 +565,57 @@ def test_copy_trees_non_local_destination_takes_hadoop_copy(
     ]
     for n in ("site=a", "site=b"):
         assert (tmp_path / "dst" / n / "part-0.parquet").read_bytes() == n.encode()
+
+
+@pytest.mark.parametrize(
+    "partition_by, part_type, part_values, read_type",
+    [
+        (None, None, None, None),
+        ("domain", "string", ["a.com", "b.com", "c.com"], "string"),
+        ("flag", "boolean", [True, False], "string"),
+        ("code", "string", ["007", "12"], "integer"),
+    ],
+)
+def test_snapshot_manifest_schema_matches_inference(
+    spark, tmp_path, partition_by, part_type, part_values, read_type
+):
+    """write_snapshot hands the manifest the data columns it just wrote,
+    so the commit runs one Spark job (the write) and no schema-inference
+    job; the stored schema still equals what inference stores for the
+    same version dir, quirks included (a boolean partition reads back as
+    string, "007" and "12" as int)."""
+    from data_integration_system_spark.operators._common import local_rows_df
+
+    ddl = "id long, text string, links array<string>, score double"
+    rows = [(i, f"t{i}", [f"u{i}"], i / 2) for i in range(12)]
+    if partition_by:
+        rows = [r + (part_values[r[0] % len(part_values)],) for r in rows]
+    if partition_by:
+        ddl += f", {partition_by} {part_type}"
+    df = local_rows_df(spark, rows, ddl)
+    sc = spark.sparkContext
+    roots = iter(str(tmp_path / f"store{i}") for i in range(2))
+    sn.write_snapshot(df, next(roots), partition_by=partition_by)  # warm
+    group = f"manifest-schema-{partition_by}"
+    sc.setJobGroup(group, group)
+    try:
+        root = next(roots)
+        name = sn.write_snapshot(df, root, partition_by=partition_by)
+    finally:
+        sc.setJobGroup("", "")
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+    vdir = f"{root}/{name}"
+    written = im.read_manifest(spark, vdir)["relations"][""]
+    os.remove(os.path.join(vdir, im.MANIFEST_NAME))
+    inferred = im.write_manifest(spark, vdir, {"": partition_by})["relations"][""]
+    assert written["schema_json"] == inferred["schema_json"]
+    if partition_by:
+        stored = json.loads(written["schema_json"])["fields"][-1]
+        assert (stored["name"], stored["type"]) == (partition_by, read_type)
+    assert written["total_rows"] == inferred["total_rows"] == 12
+    if partition_by:
+        assert {k: p["rows"] for k, p in written["partitions"].items()} == {
+            k: p["rows"] for k, p in inferred["partitions"].items()
+        }
+    assert sn.read_current(spark, root).count() == 12

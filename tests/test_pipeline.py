@@ -1435,6 +1435,105 @@ def test_crawl_distributed_job_budget(spark, monkeypatch):
     assert n == 4 and jobs <= 40, jobs
 
 
+def test_run_job_warm_job_budget(spark, tmp_path):
+    """A job pays for its commit, not its bookkeeping: a warm first
+    run_job with download_files=False takes at most 3 Spark jobs (the
+    write plus one report aggregation; no count, no salted top-5, no
+    manifest schema inference) and a warm incremental re-crawl at most
+    5 (no checkpointed classification)."""
+    from data_integration_system_spark.pipeline.jobs import run_job
+
+    job = {"start_urls": ["https://ex.com/"], "max_depth_root": 5,
+           "download_files": False}
+    outs = iter(str(tmp_path / f"first{i}") for i in range(2))
+    report, jobs = _warm_jobs(
+        spark, "run-job-first",
+        lambda: run_job(spark, job, next(outs), fetch_fn=fake_fetch),
+    )
+    assert report["upserts"] == {"INSERTED": 4, "SKIPPED": 0, "UPSERTED": 0}
+    assert jobs <= 3, jobs
+
+    out = str(tmp_path / "recrawl")
+    run_job(spark, job, out, fetch_fn=fake_fetch)
+    report, jobs = _warm_jobs(
+        spark, "run-job-recrawl",
+        lambda: run_job(spark, job, out, fetch_fn=fake_fetch),
+    )
+    assert report["upserts"] == {"INSERTED": 0, "SKIPPED": 4, "UPSERTED": 0}
+    assert jobs <= 5, jobs
+
+
+def test_run_pending_jobs_claim_job_budget(spark, tmp_path, monkeypatch):
+    """The claim reads the job log with its schema: folding a 2-job log
+    and collecting its PENDING rows takes at most 2 Spark jobs (the job
+    bodies and status appends are stubbed out, so only the claim runs)."""
+    from data_integration_system_spark.pipeline import jobs as PJ
+
+    jobs_path = str(tmp_path / "jobs_log")
+    ids = [PJ.submit_job(spark, jobs_path, {"url": f"https://s{i}.com/"})
+           for i in range(2)]
+    monkeypatch.setattr(PJ, "job_status_update", lambda *a, **k: None)
+    monkeypatch.setattr(PJ, "run_job", lambda *a: {"status": "DONE", "error": ""})
+    reports, jobs = _warm_jobs(
+        spark, "claim",
+        lambda: PJ.run_pending_jobs(spark, jobs_path, str(tmp_path / "out")),
+    )
+    assert sorted(r["job_id"] for r in reports) == sorted(ids)
+    assert jobs <= 2, jobs
+
+
+#: a seed page linking into 7 other domains: page counts 3, 2, 2, 2 and
+#: a four-way tie at 1 (d4, d5, d6 and ex.com), so the top 5 by (count
+#: desc, domain asc) cuts inside the tie
+MULTI_DOMAIN_SITE = {
+    "https://ex.com/": "".join(
+        f'<a href="https://d{k}.com/">d{k}</a>' for k in range(7)
+    ),
+    "https://d0.com/": '<a href="/x">x</a><a href="/y">y</a>',
+    "https://d0.com/x": "x",
+    "https://d0.com/y": "y",
+    "https://d1.com/": '<a href="/x">x</a>',
+    "https://d1.com/x": "x",
+    "https://d2.com/": '<a href="/x">x</a>',
+    "https://d2.com/x": "x",
+    "https://d3.com/": '<a href="/x">x</a>',
+    "https://d3.com/x": "x",
+    "https://d4.com/": "leaf",
+    "https://d5.com/": "leaf",
+    "https://d6.com/": "leaf",
+}
+
+
+@pytest.mark.parametrize("path", ["driver", "distributed", "documents_only"])
+def test_run_job_report_counts_match_python(spark, tmp_path, monkeypatch, path):
+    """The report's one aggregation gives the pages total and the top 5
+    domains of a plain Python count with the (count desc, domain asc)
+    rule, on the driver crawl, the distributed loop and with
+    documents_only (no commit)."""
+    from collections import Counter
+    from urllib.parse import urlparse
+
+    from data_integration_system_spark.pipeline import crawl as C
+    from data_integration_system_spark.pipeline.jobs import run_job
+
+    if path == "distributed":
+        monkeypatch.setattr(C, "_LOCAL_CRAWL_PAGES", 0)
+    job = {"start_urls": ["https://ex.com/"], "same_domain_only": False,
+           "download_files": False, "documents_only": path == "documents_only"}
+    report = run_job(spark, job, str(tmp_path / "out"),
+                     fetch_fn=make_fake_fetch(MULTI_DOMAIN_SITE))
+
+    per_domain = Counter(urlparse(u).netloc for u in MULTI_DOMAIN_SITE)
+    top = sorted(per_domain.items(), key=lambda kv: (-kv[1], kv[0]))[:5]
+    assert report["status"] == "DONE", report["error"]
+    assert report["pages"] == len(MULTI_DOMAIN_SITE) == 13
+    assert report["domains"] == dict(top)
+    assert list(report["domains"]) == [d for d, _ in top]
+    assert top[-1] == ("d4.com", 1)
+    inserted = 0 if path == "documents_only" else 13
+    assert report["upserts"] == {"INSERTED": inserted, "SKIPPED": 0, "UPSERTED": 0}
+
+
 def test_crawl_driver_path_politeness(spark):
     """The driver path fetches a whole generation on one pool, across
     domains: it keeps at most per_domain fetches in flight per domain,
