@@ -147,36 +147,6 @@ HEADLINE = (
 #: appeared in BENCH_DETAIL — every query gets a recorded time now)
 _COLD_K = 29
 
-#: changed-paths verification tier (ADDITIVE — r18): queries whose
-#: implementation changed in r17/r18 but whose names fall outside both
-#: this round's cold-tier slice and HEADLINE, so the rotation alone
-#: would leave the optimization claims without a driver-side number
-#: (VERDICT r17 "Next round" #1: the streaming stateful-drain fix—
-#: repartition(1) landing sinks + staged fixture batches — was builder-
-#: measured 47.2 -> 5.4 s but rotated out of the r17 bench slice).
-#: Timed AFTER the cold tier, OUTSIDE the suite wall, skipping names the
-#: round's slices already timed — entries are only ever ADDED to the
-#: sidecar/compact dicts, never removed or renamed.
-_CHANGED_PATHS = (
-    # r17 streaming snapshot fixes awaiting driver confirmation
-    "streaming_user_ewma_snapshot",
-    "streaming_near_dup_snapshot",
-    "streaming_tumbling_counts_snapshot",
-    "streaming_session_windows_snapshot",
-    "streaming_sessionized_eviction_snapshot",
-    "streaming_funnel_pairs_snapshot",
-    "streaming_dup_rate_snapshot",
-    # r17 dedup CC fast path (driver saw dedup_clusters only via the
-    # r17 cold slice; keep both CC consumers priced while changed)
-    "dedup_clusters",
-    "dedup_corpus_keep_reps",
-    # r18 touched paths outside this round's slices
-    "part_name_near_matches",
-    "event_type_pagerank",
-    "streaming_jobs_fold_snapshot",
-)
-
-
 def _next_round_no() -> int:
     """The round this bench run belongs to = latest recorded round + 1
     (the driver writes BENCH_r{N}.json AFTER running us)."""
@@ -417,19 +387,6 @@ def main() -> None:
     # suite wall so `value` stays comparable round-over-round
     cold = _cold_tier(queries, _next_round_no())
     for name in cold:
-        t0 = time.perf_counter()
-        try:
-            queries[name](spark, sf_dir).count()
-            timings[name] = round(time.perf_counter() - t0, 3)
-        except Exception as ex:
-            errors[name] = f"{type(ex).__name__}: {ex}"[:200]
-
-    # changed-paths tier: like the cold tier (outside the suite wall),
-    # but pinned to the names whose code changed recently — skips
-    # anything the headline/cold slices already timed this run
-    for name in _CHANGED_PATHS:
-        if name in timings or name in errors or name not in queries:
-            continue
         t0 = time.perf_counter()
         try:
             queries[name](spark, sf_dir).count()

@@ -2069,7 +2069,7 @@ def similarity_ann_recall_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # scales to millions of vectors, and a registered query that runs the
 # whole loop (generate -> k~sqrt(n) build -> probe -> recall) at the
 # driver's scale.  The d3-scale rows live in SCALE_REHEARSAL_RECALL.json
-# ("d3_clustered", scale_rehearsal.run_ivfpq_clustered).
+# ("d3_clustered"; SCALE.md, "Round-13: IVF-PQ in its honest regime").
 # ---------------------------------------------------------------------------
 
 _CLUSTER_SIGMA = 0.15   #: noise scale: E[cos(member, center)] ~ 0.64 at dim 64

@@ -80,7 +80,7 @@ def config_from_job(job: dict[str, Any]) -> CrawlConfig:
     if job.get("exclusive_depth") is not None:
         cfg["max_depth"] = job["exclusive_depth"]
     if "root_domain" not in cfg:
-        start = job.get("start_urls", [""])[0]
+        start = (job.get("start_urls") or [""])[0]
         # P1 semantics (utils.py:6-8), unifying api/main.py:40-41's
         # non-lowercased variant (SURVEY §2A P10)
         host = urlparse(start).netloc.lower()

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_integration_system_spark.operators._common import dec
+from data_integration_system_spark.operators._common import dec, local_rows_df
 from data_integration_system_spark.pipeline.writer import merge_keep_latest
 
 
@@ -1241,14 +1241,7 @@ def streaming_dup_rate_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("checkpointLocation", f"{root}/ckpt")
             .start()
         )
-        try:
-            if not q.awaitTermination(_drain_deadline_s()):
-                raise TimeoutError(
-                    "availableNow replay did not drain within the deadline; "
-                    "refusing to return a partial snapshot"
-                )
-        finally:
-            q.stop()
+        _drain(q)
         # materialize before the tempdir vanishes; order AFTER the barrier
         out = read_current(spark, f"{root}/report").localCheckpoint()
         return out.orderBy("source")
@@ -1347,14 +1340,7 @@ def streaming_user_ewma_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("checkpointLocation", f"{root}/ckpt")
             .start()
         )
-        try:
-            if not q.awaitTermination(_drain_deadline_s()):
-                raise TimeoutError(
-                    "availableNow replay did not drain within the deadline; "
-                    "refusing to return a partial snapshot"
-                )
-        finally:
-            q.stop()
+        _drain(q)
         out = (
             spark.read.option("basePath", ledger).parquet(ledger)
             .groupBy("user_id")
@@ -1446,14 +1432,7 @@ def streaming_user_ewma_jvm_snapshot(
             .option("checkpointLocation", f"{root}/ckpt")
             .start()
         )
-        try:
-            if not q.awaitTermination(_drain_deadline_s()):
-                raise TimeoutError(
-                    "availableNow replay did not drain within the deadline; "
-                    "refusing to return a partial snapshot"
-                )
-        finally:
-            q.stop()
+        _drain(q)
         out = read_ewma_jvm_state(
             spark, state_root, checkpoint_dir=f"{root}/ckpt"
         ).localCheckpoint()
@@ -1556,14 +1535,7 @@ def streaming_quality_monitor_snapshot(spark: SparkSession, sf_dir: str) -> Data
             .option("checkpointLocation", f"{root}/ckpt")
             .start()
         )
-        try:
-            if not q.awaitTermination(_drain_deadline_s()):
-                raise TimeoutError(
-                    "availableNow replay did not drain within the deadline; "
-                    "refusing to return a partial snapshot"
-                )
-        finally:
-            q.stop()
+        _drain(q)
         # materialize before the tempdir vanishes; order AFTER the barrier
         out = read_current(spark, f"{root}/report").localCheckpoint()
         return out.orderBy("check_name")
@@ -1630,14 +1602,7 @@ def streaming_length_profile_snapshot(spark: SparkSession, sf_dir: str) -> DataF
             .option("checkpointLocation", f"{root}/ckpt")
             .start()
         )
-        try:
-            if not q.awaitTermination(_drain_deadline_s()):
-                raise TimeoutError(
-                    "availableNow replay did not drain within the deadline; "
-                    "refusing to return a partial snapshot"
-                )
-        finally:
-            q.stop()
+        _drain(q)
         # materialize before the tempdir vanishes; order AFTER the barrier
         out = read_current(spark, f"{root}/report").localCheckpoint()
         return out.orderBy("bin")
@@ -1713,14 +1678,7 @@ def streaming_retention_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("checkpointLocation", f"{root}/ckpt")
             .start()
         )
-        try:
-            if not q.awaitTermination(_drain_deadline_s()):
-                raise TimeoutError(
-                    "availableNow replay did not drain within the deadline; "
-                    "refusing to return a partial snapshot"
-                )
-        finally:
-            q.stop()
+        _drain(q)
         # materialize before the tempdir vanishes; order AFTER the barrier
         out = read_current(spark, f"{root}/report").localCheckpoint()
         return out.orderBy("week")
@@ -1817,14 +1775,7 @@ def streaming_tumbling_counts_snapshot(spark: SparkSession, sf_dir: str) -> Data
             .option("checkpointLocation", f"{root}/ckpt")
             .start()
         )
-        try:
-            if not q.awaitTermination(_drain_deadline_s()):
-                raise TimeoutError(
-                    "availableNow replay did not drain within the deadline; "
-                    "refusing to return a partial snapshot"
-                )
-        finally:
-            q.stop()
+        _drain(q)
         out = (
             spark.read.option("basePath", ledger).parquet(ledger)
             .groupBy("bucket_start")
@@ -1946,14 +1897,7 @@ def streaming_session_windows_snapshot(spark: SparkSession, sf_dir: str) -> Data
             .option("checkpointLocation", f"{root}/ckpt")
             .start()
         )
-        try:
-            if not q.awaitTermination(_drain_deadline_s()):
-                raise TimeoutError(
-                    "availableNow replay did not drain within the deadline; "
-                    "refusing to return a partial snapshot"
-                )
-        finally:
-            q.stop()
+        _drain(q)
         led = spark.read.option("basePath", ledger).parquet(ledger)
         last = led.agg(F.max("batch_id")).head()[0]
         out = (
@@ -2065,14 +2009,7 @@ def streaming_funnel_pairs_snapshot(spark: SparkSession, sf_dir: str) -> DataFra
             .option("checkpointLocation", f"{root}/ckpt")
             .start()
         )
-        try:
-            if not q.awaitTermination(_drain_deadline_s()):
-                raise TimeoutError(
-                    "availableNow replay did not drain within the deadline; "
-                    "refusing to return a partial snapshot"
-                )
-        finally:
-            q.stop()
+        _drain(q)
         out = (
             spark.read.option("basePath", ledger).parquet(ledger)
             .select(
@@ -2123,8 +2060,8 @@ def _stage_batches(df: DataFrame, src: str, n: int = 3) -> None:
             # empty single-row-group file with the staged schema instead
             # of failing the fixture
             if empty is None:
-                empty = df.sparkSession.createDataFrame(
-                    [], df.drop("__b").schema
+                empty = local_rows_df(
+                    df.sparkSession, [], df.drop("__b").schema
                 )
             empty.coalesce(1).write.mode("overwrite").parquet(f"{staging}/__empty")
             (src_file,) = _glob.glob(f"{staging}/__empty/part-*.parquet")

@@ -819,6 +819,16 @@ def test_run_job_failure_is_data(spark, tmp_path):
     assert bad["status"] == "FAILED" and bad["error"]
 
 
+def test_run_job_empty_start_urls_is_empty_crawl(spark, tmp_path):
+    """A job with no seeds crawls nothing: DONE with 0 pages, not a
+    bare index error from deriving the root domain."""
+    from data_integration_system_spark.pipeline.jobs import run_job
+
+    report = run_job(spark, {"start_urls": []}, str(tmp_path / "x"), fetch_fn=fake_fetch)
+    assert report["status"] == "DONE", report["error"]
+    assert report["pages"] == 0
+
+
 # ---------------------------------------------------------------------------
 # reference-fidelity regressions (round-1 review findings)
 # ---------------------------------------------------------------------------

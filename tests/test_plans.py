@@ -749,18 +749,22 @@ def test_local_rows_df_is_local_table_scan(spark):
 def test_no_empty_python_rdd_frames():
     """Empty frames are built with local_rows_df: an empty
     ``createDataFrame([], ...)`` is a Python RDD whose empty partitions
-    each start a Python task in every plan that reads the frame."""
+    each start a Python task in every plan that reads the frame.  The
+    call may be split across lines."""
+    import re
     from pathlib import Path
 
     import data_integration_system_spark
 
     pkg = Path(data_integration_system_spark.__file__).parent
-    offenders = [
-        f"{path.relative_to(pkg)}:{i}: {line.strip()}"
-        for path in sorted(pkg.rglob("*.py"))
-        for i, line in enumerate(path.read_text().splitlines(), 1)
-        if "createDataFrame([]" in line and not line.strip().startswith("#")
-    ]
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        text = path.read_text()
+        for m in re.finditer(r"createDataFrame\(\s*\[\s*\]", text):
+            i = text.count("\n", 0, m.start()) + 1
+            line = text.splitlines()[i - 1].strip()
+            if not line.startswith("#"):
+                offenders.append(f"{path.relative_to(pkg)}:{i}: {line}")
     assert not offenders, offenders
 
 
