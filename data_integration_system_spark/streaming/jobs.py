@@ -726,7 +726,8 @@ def incremental_report_sink(
             f"{ledger_path}/batch_id={batch_id}"
         )
         ledger = (
-            spark.read.option("basePath", ledger_path)
+            spark.read.schema(grain.schema)  # known schema: no inference job
+            .option("basePath", ledger_path)
             .parquet(ledger_path)
             .select(*cols)  # drop the batch_id partition-discovery column
         )
@@ -1135,29 +1136,18 @@ def read_ewma_jvm_state(
     return spark.read.parquet(f"{state_root}/batch_id={ids[-1]}")
 
 
-# --- driver-facing streaming query ---------------------------------------
-#
-# The streaming tier above is pinned to batch parity in pytest, but until
-# round 8 no registered query actually EXECUTED a foreachBatch path under
-# the external driver's oracle gate (VERDICT r7 #4).  The query below runs
-# the incremental dup-rate monitor end-to-end — file stream, 3 micro-
-# batches, exactly-once grain ledger, snapshot-swap report — and returns
-# the final snapshot, which the Kappa contract pins equal to the batch
-# dup_rate_by_source, so the exact SQL oracle carries over.
+# --- driver-facing streaming queries --------------------------------------
+# Each ``*_snapshot`` query replays a fixture table in three micro-batches
+# through ``_replay`` and returns what its sink left behind.
 
+from data_integration_system_spark.catalog import table
+from data_integration_system_spark.pipeline.snapshots import read_current
 from data_integration_system_spark.registry import query as _query
 
+#: availableNow replay guard for the snapshot queries: covers every
+#: driver-scale replay with an order of magnitude to spare
+_DRAIN_DEADLINE_S = 600
 
-
-def _drain_deadline_s() -> int:
-    """availableNow replay guard for the snapshot queries: 600 s covers
-    every driver-scale replay with an order of magnitude to spare; the
-    scale campaigns override via SPARK_GRAFT_STREAM_DRAIN_S (the sf10
-    EWMA replay legitimately exceeds 600 s — r11's second streaming
-    decade hit the guard, not a hang)."""
-    import os as _os
-
-    return int(_os.environ.get("SPARK_GRAFT_STREAM_DRAIN_S", "600"))
 
 def _pin_batch_mtimes(src: str, b: int) -> None:
     """Stamp batch ``b``'s parquet files to mtime ``b * 1e6`` so the
@@ -1174,6 +1164,149 @@ def _pin_batch_mtimes(src: str, b: int) -> None:
         p = _os.path.join(src, f)
         if f.endswith(".parquet") and _os.stat(p).st_mtime > 4e6:
             _os.utime(p, (b * 1e6, b * 1e6))
+
+
+def _stage_batches(df: DataFrame, src: str, n: int = 3) -> None:
+    """Land ``df`` (carrying an int ``__b`` column in [0, n)) as ``n``
+    single-file micro-batches under ``src`` with pinned increasing
+    mtimes — in ONE partitioned write job, not n scans of the input.
+    Only within-file row order is unspecified, and every replay sink is
+    order-insensitive within a batch (folds sort, aggregations
+    commute).  Local-filesystem fixture helper, like _pin_batch_mtimes."""
+    import glob as _glob
+    import os as _os
+    import shutil as _shutil
+
+    staging = f"{src}__staging"
+    df.repartition(n, F.col("__b")).write.partitionBy("__b").parquet(staging)
+    _os.makedirs(src, exist_ok=True)
+    empty = None  # built lazily; an all-empty df still needs the schema
+    for b in range(n):
+        parts = _glob.glob(f"{staging}/__b={b}/part-*.parquet")
+        if len(parts) > 1:
+            raise RuntimeError(
+                f"_stage_batches: expected at most 1 file for batch {b}, "
+                f"found {parts}"
+            )
+        dst = f"{src}/batch-{b}.parquet"
+        if parts:
+            _os.replace(parts[0], dst)
+        else:
+            # a __b class with zero rows still replays: as an empty
+            # single-row-group file with the staged schema
+            if empty is None:
+                empty = local_rows_df(
+                    df.sparkSession, [], df.drop("__b").schema
+                )
+            empty.coalesce(1).write.mode("overwrite").parquet(f"{staging}/__empty")
+            (src_file,) = _glob.glob(f"{staging}/__empty/part-*.parquet")
+            _os.replace(src_file, dst)
+        _os.utime(dst, ((b + 1) * 1e6, (b + 1) * 1e6))
+    _shutil.rmtree(staging, ignore_errors=True)
+
+
+def _drain(q) -> None:
+    """availableNow replay barrier shared by the snapshot queries."""
+    try:
+        if not q.awaitTermination(_DRAIN_DEADLINE_S):
+            raise TimeoutError(
+                "availableNow replay did not drain within the deadline; "
+                "refusing to return a partial snapshot"
+            )
+    finally:
+        q.stop()
+
+
+def _terciles(frame: DataFrame, *drop: str) -> DataFrame:
+    """``frame`` minus ``drop`` with ``__b`` = its global (ts, event_id)
+    tercile in [0, 3): every batch-b row precedes every batch-b+1 row, so
+    each key's rows replay in order and no row is ever late.  Staged and
+    read once, so no checkpoint barrier."""
+    from pyspark.sql import Window
+
+    b = F.ntile(3).over(Window.orderBy("ts", "event_id")) - 1
+    return frame.withColumn("__b", b.cast("int")).drop(*drop)
+
+
+def _ledger_sink(root: str):
+    """foreachBatch callable overwriting ``{root}/ledger/batch_id=N`` with
+    batch N's rows, so a redelivered batch replaces its own rows."""
+
+    def land(batch: DataFrame, batch_id: int) -> None:
+        # repartition(1), NOT coalesce(1): the batch's plan still
+        # contains the stateful operator, and coalesce would narrow
+        # that stage to ONE task that walks all N state partitions
+        # serially (each paying its own state-store open + Python
+        # runner setup) — measured 47.2 s -> 5.4 s drain on the
+        # sf0.1 EWMA replay (r17).  The shuffle moves only the
+        # batch's tiny update rows.
+        batch.repartition(1).write.mode("overwrite").parquet(
+            f"{root}/ledger/batch_id={batch_id}"
+        )
+
+    return land
+
+
+def _read_ledger(spark: SparkSession, root: str) -> DataFrame:
+    """Every row ``_ledger_sink`` landed, with its ``batch_id``."""
+    ledger = f"{root}/ledger"
+    return spark.read.option("basePath", ledger).parquet(ledger)
+
+
+def _replay(
+    spark: SparkSession,
+    prefix: str,
+    staged: DataFrame,
+    read,
+    order_by: list[str],
+    sink=None,
+    plan=None,
+    streams: int = 1,
+    output_mode: str | None = None,
+    start=None,
+) -> DataFrame:
+    """The bounded replay behind every snapshot query: under a fresh temp
+    root, stage ``staged`` (int ``__b`` in [0, 3)) as three single-file
+    batches in ``{root}/in``, stream them one file per trigger with
+    availableNow into ``sink(root)``, drain, and return ``read(root)``
+    materialized before the root is deleted, ordered by ``order_by``.
+    An error anywhere stops the query and deletes the root too.
+
+    ``plan(*reads)`` maps ``streams`` reads of the batches (two for a
+    stream-stream self join) to the streamed plan.  The stream schema is
+    the staged frame's own, so no job infers it from the files.  A query
+    started by a package entry point passes ``start(root)`` instead of
+    ``sink``/``plan``; it must drain ``{root}/in`` with availableNow."""
+    import shutil
+    import tempfile
+
+    root = tempfile.mkdtemp(prefix=prefix)
+    try:
+        src = f"{root}/in"
+        _stage_batches(staged, src)
+        if start is not None:
+            q = start(root)
+        else:
+            schema = staged.drop("__b").schema
+            reads = [
+                spark.readStream.schema(schema)
+                .option("maxFilesPerTrigger", "1")
+                .parquet(src)
+                for _ in range(streams)
+            ]
+            writer = (plan(*reads) if plan else reads[0]).writeStream
+            if output_mode:
+                writer = writer.outputMode(output_mode)
+            q = (
+                writer.foreachBatch(sink(root))
+                .trigger(availableNow=True)
+                .option("checkpointLocation", f"{root}/ckpt")
+                .start()
+            )
+        _drain(q)
+        return read(root).localCheckpoint().orderBy(*order_by)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
 
 
 @_query(
@@ -1214,39 +1347,15 @@ def streaming_dup_rate_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     trigger counts grow).  Reference anchor: workers/worker_daemon.py
     poll loop + db/postgres_store.py:126-184 upsert cadence, re-expressed
     as foreachBatch over an event stream."""
-    import shutil
-    import tempfile
-
-    from data_integration_system_spark.catalog import table
-    from data_integration_system_spark.pipeline.snapshots import read_current
-
-    root = tempfile.mkdtemp(prefix="stream_duprate_")
-    try:
-        docs = table(spark, sf_dir, "documents").select("doc_id", "source", "text")
-        src = f"{root}/in"
-        # three deterministic single-file batches (append keeps one dir)
-        _stage_batches(
-            docs.withColumn("__b", (F.col("doc_id") % 3).cast("int")), src
-        )
-        stream = (
-            spark.readStream.schema(spark.read.parquet(src).schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-            .select("source", "text")
-        )
-        sink = dup_rate_sink(spark, f"{root}/ledger", f"{root}/report")
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{root}/ckpt")
-            .start()
-        )
-        _drain(q)
-        # materialize before the tempdir vanishes; order AFTER the barrier
-        out = read_current(spark, f"{root}/report").localCheckpoint()
-        return out.orderBy("source")
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    docs = table(spark, sf_dir, "documents").select("doc_id", "source", "text")
+    return _replay(
+        spark, "stream_duprate_",
+        docs.withColumn("__b", (F.col("doc_id") % 3).cast("int")),
+        sink=lambda root: dup_rate_sink(spark, f"{root}/ledger", f"{root}/report"),
+        plan=lambda stream: stream.select("source", "text"),
+        read=lambda root: read_current(spark, f"{root}/report"),
+        order_by=["source"],
+    )
 
 
 @_query(
@@ -1293,66 +1402,19 @@ def streaming_user_ewma_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch operator).  Reference anchor: workers/worker_daemon.py
     poll loop as the streaming host, db/schema.sql:56-61 job-state
     lifecycle as the per-key-state precedent."""
-    import os as _os
-    import shutil
-    import tempfile
-
-    from pyspark.sql import Window
-
-    from data_integration_system_spark.catalog import table
-
-    root = tempfile.mkdtemp(prefix="stream_ewma_")
-    try:
-        ev = table(spark, sf_dir, "events").select(
-            "event_id", "ts", "user_id", "value"
-        )
-        tercile = F.ntile(3).over(Window.orderBy("ts", "event_id"))
-        staged = ev.withColumn("b", tercile).localCheckpoint()
-        src = f"{root}/in"
-        _stage_batches(
-            staged.withColumn("__b", (F.col("b") - 1).cast("int")).drop("b"),
-            src,
-        )
-        stream = (
-            spark.readStream.schema(staged.drop("b").schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        ledger = f"{root}/ledger"
-
-        def land(batch: DataFrame, batch_id: int) -> None:
-            # repartition(1), NOT coalesce(1): the batch's plan still
-            # contains the stateful operator, and coalesce would narrow
-            # that stage to ONE task that walks all N state partitions
-            # serially (each paying its own state-store open + Python
-            # runner setup) — measured 47.2 s -> 5.4 s drain on the
-            # sf0.1 EWMA replay (r17).  The shuffle moves only the
-            # batch's tiny update rows.
-            batch.repartition(1).write.mode("overwrite").parquet(
-                f"{ledger}/batch_id={batch_id}"
-            )
-
-        q = (
-            ewma_state_stream(stream)
-            .writeStream.foreachBatch(land)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{root}/ckpt")
-            .start()
-        )
-        _drain(q)
-        out = (
-            spark.read.option("basePath", ledger).parquet(ledger)
-            .groupBy("user_id")
-            .agg(
-                F.max("n_events").alias("n_events"),
-                F.max_by("ewma_e2", "n_events").alias("ewma_e2"),
-            )
-            .localCheckpoint()  # materialize before the tempdir vanishes
-        )
-        return out.orderBy("user_id")
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    ev = table(spark, sf_dir, "events").select("event_id", "ts", "user_id", "value")
+    return _replay(
+        spark, "stream_ewma_",
+        _terciles(ev),
+        sink=_ledger_sink,
+        plan=ewma_state_stream,
+        output_mode="update",
+        read=lambda root: _read_ledger(spark, root).groupBy("user_id").agg(
+            F.max("n_events").alias("n_events"),
+            F.max_by("ewma_e2", "n_events").alias("ewma_e2"),
+        ),
+        order_by=["user_id"],
+    )
 
 
 @_query(
@@ -1401,44 +1463,16 @@ def streaming_user_ewma_jvm_snapshot(
     cardinality; broadcastable while small, sort-merge when not);
     everything whole-stage codegen.  Reference anchor:
     workers/worker_daemon.py:24-28 poll loop as the streaming host."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import Window
-
-    from data_integration_system_spark.catalog import table
-
-    root = tempfile.mkdtemp(prefix="stream_ewma_jvm_")
-    try:
-        ev = table(spark, sf_dir, "events").select(
-            "event_id", "ts", "user_id", "value"
-        )
-        tercile = F.ntile(3).over(Window.orderBy("ts", "event_id"))
-        staged = ev.withColumn("b", tercile).localCheckpoint()
-        src = f"{root}/in"
-        _stage_batches(
-            staged.withColumn("__b", (F.col("b") - 1).cast("int")).drop("b"),
-            src,
-        )
-        stream = (
-            spark.readStream.schema(staged.drop("b").schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        state_root = f"{root}/state"
-        q = (
-            stream.writeStream.foreachBatch(ewma_jvm_sink(spark, state_root))
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{root}/ckpt")
-            .start()
-        )
-        _drain(q)
-        out = read_ewma_jvm_state(
-            spark, state_root, checkpoint_dir=f"{root}/ckpt"
-        ).localCheckpoint()
-        return out.orderBy("user_id")
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    ev = table(spark, sf_dir, "events").select("event_id", "ts", "user_id", "value")
+    return _replay(
+        spark, "stream_ewma_jvm_",
+        _terciles(ev),
+        sink=lambda root: ewma_jvm_sink(spark, f"{root}/state"),
+        read=lambda root: read_ewma_jvm_state(
+            spark, f"{root}/state", checkpoint_dir=f"{root}/ckpt"
+        ),
+        order_by=["user_id"],
+    )
 
 
 @_query(
@@ -1491,56 +1525,26 @@ def streaming_quality_monitor_snapshot(spark: SparkSession, sf_dir: str) -> Data
     tiny ledger.  Reference anchor: db/postgres_store.py per-row
     try/except validation + api/main.py pydantic request models,
     re-expressed as a gateable table-level monitor on a stream."""
-    import shutil
-    import tempfile
-
-    from data_integration_system_spark.catalog import table
-    from data_integration_system_spark.pipeline.checks import (
-        in_range,
-        in_set,
-        matches,
-        not_null,
-    )
-    from data_integration_system_spark.pipeline.snapshots import read_current
+    from data_integration_system_spark.pipeline import checks as dq
 
     checks = [
-        not_null("o_custkey"),
-        in_range("o_totalprice", 0, 1000000),
-        in_set("o_orderstatus", ("O", "F", "P")),
-        matches("o_orderpriority", "^[1-5]-"),
+        dq.not_null("o_custkey"),
+        dq.in_range("o_totalprice", 0, 1000000),
+        dq.in_set("o_orderstatus", ("O", "F", "P")),
+        dq.matches("o_orderpriority", "^[1-5]-"),
     ]
-    root = tempfile.mkdtemp(prefix="stream_dq_")
-    try:
-        orders = table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus",
-            "o_orderpriority",
-        )
-        src = f"{root}/in"
-        # three deterministic single-file batches (append keeps one dir)
-        _stage_batches(
-            orders.withColumn(
-                "__b", (F.col("o_orderkey") % 3).cast("int")
-            ).drop("o_orderkey"),
-            src,
-        )
-        stream = (
-            spark.readStream.schema(spark.read.parquet(src).schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        sink = dq_sink(spark, f"{root}/ledger", f"{root}/report", checks)
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{root}/ckpt")
-            .start()
-        )
-        _drain(q)
-        # materialize before the tempdir vanishes; order AFTER the barrier
-        out = read_current(spark, f"{root}/report").localCheckpoint()
-        return out.orderBy("check_name")
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    orders = table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus", "o_orderpriority"
+    )
+    return _replay(
+        spark, "stream_dq_",
+        orders.withColumn("__b", (F.col("o_orderkey") % 3).cast("int")).drop(
+            "o_orderkey"
+        ),
+        sink=lambda root: dq_sink(spark, f"{root}/ledger", f"{root}/report", checks),
+        read=lambda root: read_current(spark, f"{root}/report"),
+        order_by=["check_name"],
+    )
 
 
 @_query(
@@ -1575,39 +1579,17 @@ def streaming_length_profile_snapshot(spark: SparkSession, sf_dir: str) -> DataF
     ledger stays bins x batches tiny regardless of stream volume.
     Reference anchor: workers/worker_daemon.py poll cadence, as a
     corpus-profile monitor."""
-    import shutil
-    import tempfile
-
-    from data_integration_system_spark.catalog import table
-    from data_integration_system_spark.pipeline.snapshots import read_current
-
-    root = tempfile.mkdtemp(prefix="stream_lenprof_")
-    try:
-        docs = table(spark, sf_dir, "documents").select("doc_id", "n_chars")
-        src = f"{root}/in"
-        # three deterministic single-file batches (append keeps one dir)
-        _stage_batches(
-            docs.withColumn("__b", (F.col("doc_id") % 3).cast("int")), src
-        )
-        stream = (
-            spark.readStream.schema(spark.read.parquet(src).schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-            .select("n_chars")
-        )
-        sink = length_histogram_sink(spark, f"{root}/ledger", f"{root}/report")
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{root}/ckpt")
-            .start()
-        )
-        _drain(q)
-        # materialize before the tempdir vanishes; order AFTER the barrier
-        out = read_current(spark, f"{root}/report").localCheckpoint()
-        return out.orderBy("bin")
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    docs = table(spark, sf_dir, "documents").select("doc_id", "n_chars")
+    return _replay(
+        spark, "stream_lenprof_",
+        docs.withColumn("__b", (F.col("doc_id") % 3).cast("int")),
+        sink=lambda root: length_histogram_sink(
+            spark, f"{root}/ledger", f"{root}/report"
+        ),
+        plan=lambda stream: stream.select("n_chars"),
+        read=lambda root: read_current(spark, f"{root}/report"),
+        order_by=["bin"],
+    )
 
 
 @_query(
@@ -1649,41 +1631,14 @@ def streaming_retention_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     of event volume; the report's self-join runs co-keyed on user_id
     over that reduced relation.  Reference anchor:
     workers/worker_daemon.py poll cadence as a cohort monitor."""
-    import shutil
-    import tempfile
-
-    from data_integration_system_spark.catalog import table
-    from data_integration_system_spark.pipeline.snapshots import read_current
-
-    root = tempfile.mkdtemp(prefix="stream_reten_")
-    try:
-        ev = table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-        src = f"{root}/in"
-        # three deterministic single-file batches (append keeps one dir)
-        _stage_batches(
-            ev.withColumn("__b", (F.col("event_id") % 3).cast("int")).drop(
-                "event_id"
-            ),
-            src,
-        )
-        stream = (
-            spark.readStream.schema(spark.read.parquet(src).schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        sink = retention_sink(spark, f"{root}/ledger", f"{root}/report")
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{root}/ckpt")
-            .start()
-        )
-        _drain(q)
-        # materialize before the tempdir vanishes; order AFTER the barrier
-        out = read_current(spark, f"{root}/report").localCheckpoint()
-        return out.orderBy("week")
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    ev = table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
+    return _replay(
+        spark, "stream_reten_",
+        ev.withColumn("__b", (F.col("event_id") % 3).cast("int")).drop("event_id"),
+        sink=lambda root: retention_sink(spark, f"{root}/ledger", f"{root}/report"),
+        read=lambda root: read_current(spark, f"{root}/report"),
+        order_by=["week"],
+    )
 
 
 @_query(
@@ -1718,80 +1673,34 @@ def streaming_tumbling_counts_snapshot(spark: SparkSession, sf_dir: str) -> Data
     per OPEN window — the watermark bounds it by the event-time spread,
     not stream length.  Reference anchor: worker_daemon.py:24-28 poll
     cadence as an event-time rollup."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import Window
-
-    from data_integration_system_spark.catalog import table
-    from data_integration_system_spark.operators._common import dec
-
-    root = tempfile.mkdtemp(prefix="stream_tumble_")
-    try:
-        ev = table(spark, sf_dir, "events").select("event_id", "ts", "value")
-        tercile = F.ntile(3).over(Window.orderBy("ts", "event_id"))
-        staged = ev.withColumn("b", tercile).localCheckpoint()
-        src = f"{root}/in"
-        _stage_batches(
-            staged.withColumn("__b", (F.col("b") - 1).cast("int")).drop(
-                "b", "event_id"
-            ),
-            src,
-        )
-        stream = (
-            spark.readStream.schema(spark.read.parquet(src).schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        windowed = (
+    def windowed(stream: DataFrame) -> DataFrame:
+        return (
             stream.withWatermark("ts", "10 minutes")
             .groupBy(F.window("ts", "10 minutes").alias("w"))
             .agg(
                 F.count("*").alias("n_events"),
                 F.round(F.sum(dec("value")), 2).cast("double").alias("sum_value"),
             )
-            .select(
-                F.col("w.start").alias("bucket_start"), "n_events", "sum_value"
-            )
+            .select(F.col("w.start").alias("bucket_start"), "n_events", "sum_value")
         )
-        ledger = f"{root}/ledger"
 
-        def land(batch: DataFrame, batch_id: int) -> None:
-            # repartition(1), NOT coalesce(1): the batch's plan still
-            # contains the stateful operator, and coalesce would narrow
-            # that stage to ONE task that walks all N state partitions
-            # serially (each paying its own state-store open + Python
-            # runner setup) — measured 47.2 s -> 5.4 s drain on the
-            # sf0.1 EWMA replay (r17).  The shuffle moves only the
-            # batch's tiny update rows.
-            batch.repartition(1).write.mode("overwrite").parquet(
-                f"{ledger}/batch_id={batch_id}"
-            )
-
-        q = (
-            windowed.writeStream.foreachBatch(land)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{root}/ckpt")
-            .start()
-        )
-        _drain(q)
-        out = (
-            spark.read.option("basePath", ledger).parquet(ledger)
-            .groupBy("bucket_start")
-            .agg(
-                F.max_by(F.struct("n_events", "sum_value"), "batch_id").alias("s")
-            )
-            .select(
-                "bucket_start",
-                F.col("s.n_events").alias("n_events"),
-                F.col("s.sum_value").alias("sum_value"),
-            )
-            .localCheckpoint()  # materialize before the tempdir vanishes
-        )
-        return out.orderBy("bucket_start")
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    ev = table(spark, sf_dir, "events").select("event_id", "ts", "value")
+    return _replay(
+        spark, "stream_tumble_",
+        _terciles(ev, "event_id"),
+        sink=_ledger_sink,
+        plan=windowed,
+        output_mode="update",
+        read=lambda root: _read_ledger(spark, root)
+        .groupBy("bucket_start")
+        .agg(F.max_by(F.struct("n_events", "sum_value"), "batch_id").alias("s"))
+        .select(
+            "bucket_start",
+            F.col("s.n_events").alias("n_events"),
+            F.col("s.sum_value").alias("sum_value"),
+        ),
+        order_by=["bucket_start"],
+    )
 
 
 @_query(
@@ -1840,34 +1749,9 @@ def streaming_session_windows_snapshot(spark: SparkSession, sf_dir: str) -> Data
     -only output.  Per trigger one shuffle of the batch onto user_id
     with session merge in the state store.  Reference anchor:
     db/postgres_store.py:58-68 stale-job timeout as session semantics."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import Window
-
-    from data_integration_system_spark.catalog import table
-
-    root = tempfile.mkdtemp(prefix="stream_sess_")
-    try:
-        ev = table(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-        tercile = F.ntile(3).over(Window.orderBy("ts", "event_id"))
-        staged = ev.withColumn("b", tercile).localCheckpoint()
-        src = f"{root}/in"
-        _stage_batches(
-            staged.withColumn("__b", (F.col("b") - 1).cast("int")).drop(
-                "b", "event_id"
-            ),
-            src,
-        )
-        stream = (
-            spark.readStream.schema(spark.read.parquet(src).schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        sess = (
-            stream.groupBy(
-                "user_id", F.session_window("ts", "30 minutes").alias("w")
-            )
+    def sessions(stream: DataFrame) -> DataFrame:
+        return (
+            stream.groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
             .agg(F.count("*").alias("n_events"))
             .select(
                 "user_id",
@@ -1876,38 +1760,22 @@ def streaming_session_windows_snapshot(spark: SparkSession, sf_dir: str) -> Data
                 "n_events",
             )
         )
-        ledger = f"{root}/ledger"
 
-        def land(batch: DataFrame, batch_id: int) -> None:
-            # repartition(1), NOT coalesce(1): the batch's plan still
-            # contains the stateful operator, and coalesce would narrow
-            # that stage to ONE task that walks all N state partitions
-            # serially (each paying its own state-store open + Python
-            # runner setup) — measured 47.2 s -> 5.4 s drain on the
-            # sf0.1 EWMA replay (r17).  The shuffle moves only the
-            # batch's tiny update rows.
-            batch.repartition(1).write.mode("overwrite").parquet(
-                f"{ledger}/batch_id={batch_id}"
-            )
-
-        q = (
-            sess.writeStream.foreachBatch(land)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{root}/ckpt")
-            .start()
-        )
-        _drain(q)
-        led = spark.read.option("basePath", ledger).parquet(ledger)
+    def last_emission(root: str) -> DataFrame:
+        led = _read_ledger(spark, root)
         last = led.agg(F.max("batch_id")).head()[0]
-        out = (
-            led.filter(F.col("batch_id") == last)
-            .drop("batch_id")
-            .localCheckpoint()  # materialize before the tempdir vanishes
-        )
-        return out.orderBy("user_id", "session_start")
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        return led.filter(F.col("batch_id") == last).drop("batch_id")
+
+    ev = table(spark, sf_dir, "events").select("event_id", "ts", "user_id")
+    return _replay(
+        spark, "stream_sess_",
+        _terciles(ev, "event_id"),
+        sink=_ledger_sink,
+        plan=sessions,
+        output_mode="complete",
+        read=last_emission,
+        order_by=["user_id", "session_start"],
+    )
 
 
 @_query(
@@ -1946,161 +1814,36 @@ def streaming_funnel_pairs_snapshot(spark: SparkSession, sf_dir: str) -> DataFra
     shuffle per side; state is the watermark-bounded tail of each
     stream, not its history.  Reference anchor: crawler_core.py's
     frontier↔visited interplay as two coordinated stateful streams."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import Window
-
-    from data_integration_system_spark.catalog import table
-
-    root = tempfile.mkdtemp(prefix="stream_ssjoin_")
-    try:
-        ev = table(spark, sf_dir, "events").select(
-            "event_id", "ts", "user_id", "event_type"
+    def side(stream: DataFrame, kind: str, alias: str) -> DataFrame:
+        return (
+            stream.filter(F.col("event_type") == kind)
+            .withWatermark("ts", "2 hours")
+            .selectExpr(f"user_id AS {alias}_user", f"ts AS {alias}_ts")
         )
-        tercile = F.ntile(3).over(Window.orderBy("ts", "event_id"))
-        staged = ev.withColumn("b", tercile).localCheckpoint()
-        src = f"{root}/in"
-        _stage_batches(
-            staged.withColumn("__b", (F.col("b") - 1).cast("int")).drop(
-                "b", "event_id"
-            ),
-            src,
-        )
-        schema = spark.read.parquet(src).schema
 
-        def side(kind: str, alias: str) -> DataFrame:
-            return (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", "1")
-                .parquet(src)
-                .filter(F.col("event_type") == kind)
-                .withWatermark("ts", "2 hours")
-                .select(
-                    F.col("user_id").alias(f"{alias}_user"),
-                    F.col("ts").alias(f"{alias}_ts"),
-                )
-            )
-
-        joined = side("signup", "s").join(
-            side("purchase", "p"),
+    def joined(signups: DataFrame, purchases: DataFrame) -> DataFrame:
+        return side(signups, "signup", "s").join(
+            side(purchases, "purchase", "p"),
             F.expr(
-                "p_user = s_user AND p_ts >= s_ts "
-                "AND p_ts < s_ts + INTERVAL 1 HOUR"
+                "p_user = s_user AND p_ts >= s_ts AND p_ts < s_ts + INTERVAL 1 HOUR"
             ),
         )
-        ledger = f"{root}/ledger"
 
-        def land(batch: DataFrame, batch_id: int) -> None:
-            # repartition(1), NOT coalesce(1): the batch's plan still
-            # contains the stateful operator, and coalesce would narrow
-            # that stage to ONE task that walks all N state partitions
-            # serially (each paying its own state-store open + Python
-            # runner setup) — measured 47.2 s -> 5.4 s drain on the
-            # sf0.1 EWMA replay (r17).  The shuffle moves only the
-            # batch's tiny update rows.
-            batch.repartition(1).write.mode("overwrite").parquet(
-                f"{ledger}/batch_id={batch_id}"
-            )
-
-        q = (
-            joined.writeStream.foreachBatch(land)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{root}/ckpt")
-            .start()
-        )
-        _drain(q)
-        out = (
-            spark.read.option("basePath", ledger).parquet(ledger)
-            .select(
-                F.col("s_user").alias("user_id"),
-                F.col("s_ts").alias("signup_ts"),
-                F.col("p_ts").alias("purchase_ts"),
-                (F.unix_micros("p_ts") - F.unix_micros("s_ts")).alias("lag_us"),
-            )
-            .localCheckpoint()  # materialize before the tempdir vanishes
-        )
-        return out.orderBy("user_id", "signup_ts", "purchase_ts")
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def _stage_batches(df: DataFrame, src: str, n: int = 3) -> None:
-    """Land ``df`` (carrying an int ``__b`` column in [0, n)) as ``n``
-    single-file micro-batches under ``src`` with pinned increasing
-    mtimes — in ONE partitioned write job instead of n filtered
-    scan+coalesce(1) writes (the serial form re-scanned the input n
-    times; measured ~2-3 s of each snapshot fixture at sf0.1, r17).
-    Batch CONTENT is identical — same rows per __b value; only
-    within-file row order can differ, and every replay sink is
-    order-insensitive within a batch (folds sort, aggregations
-    commute).  Local-filesystem fixture helper, like _pin_batch_mtimes."""
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-
-    staging = f"{src}__staging"
-    df.repartition(n, F.col("__b")).write.partitionBy("__b").parquet(staging)
-    _os.makedirs(src, exist_ok=True)
-    empty = None  # built lazily; an all-empty df still needs the schema
-    for b in range(n):
-        parts = _glob.glob(f"{staging}/__b={b}/part-*.parquet")
-        if len(parts) > 1:
-            raise RuntimeError(
-                f"_stage_batches: expected at most 1 file for batch {b}, "
-                f"found {parts}"
-            )
-        dst = f"{src}/batch-{b}.parquet"
-        if parts:
-            _os.replace(parts[0], dst)
-        else:
-            # a __b class with zero rows (ADVICE r17): the pre-r17
-            # per-batch coalesce(1) append wrote an EMPTY batch file and
-            # the replay consumed it — keep that contract by writing an
-            # empty single-row-group file with the staged schema instead
-            # of failing the fixture
-            if empty is None:
-                empty = local_rows_df(
-                    df.sparkSession, [], df.drop("__b").schema
-                )
-            empty.coalesce(1).write.mode("overwrite").parquet(f"{staging}/__empty")
-            (src_file,) = _glob.glob(f"{staging}/__empty/part-*.parquet")
-            _os.replace(src_file, dst)
-        _os.utime(dst, ((b + 1) * 1e6, (b + 1) * 1e6))
-    _shutil.rmtree(staging, ignore_errors=True)
-
-
-def _docs_trisected(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
-    """Shared fixture for the document-stream snapshots: the documents
-    corpus staged as three deterministic doc_id-keyed micro-batch files
-    under ``{root}/in`` with pinned mtimes (oldest-first pacing), and
-    the matching readStream returned.  Batch membership is hash-of-id,
-    not order — the dedup/overlap sinks are order-insensitive, so the
-    split only has to be deterministic, not time-ordered."""
-    from data_integration_system_spark.catalog import table
-
-    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    src = f"{root}/in"
-    _stage_batches(
-        docs.withColumn("__b", (F.col("doc_id") % 3).cast("int")), src
+    ev = table(spark, sf_dir, "events")
+    return _replay(
+        spark, "stream_ssjoin_",
+        _terciles(ev.select("event_id", "ts", "user_id", "event_type"), "event_id"),
+        sink=_ledger_sink,
+        plan=joined,
+        streams=2,
+        read=lambda root: _read_ledger(spark, root).select(
+            F.col("s_user").alias("user_id"),
+            F.col("s_ts").alias("signup_ts"),
+            F.col("p_ts").alias("purchase_ts"),
+            (F.unix_micros("p_ts") - F.unix_micros("s_ts")).alias("lag_us"),
+        ),
+        order_by=["user_id", "signup_ts", "purchase_ts"],
     )
-    return (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-
-
-def _drain(q) -> None:
-    """availableNow replay barrier shared by the snapshot queries."""
-    try:
-        if not q.awaitTermination(_drain_deadline_s()):
-            raise TimeoutError(
-                "availableNow replay did not drain within the deadline; "
-                "refusing to return a partial snapshot"
-            )
-    finally:
-        q.stop()
 
 
 @_query("streaming_near_dup_snapshot", oracle=None)
@@ -2127,31 +1870,19 @@ def streaming_near_dup_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     only.  Index grows linearly; no trigger ever rescans the corpus.
     Reference anchor: filesystem_store.py:108-127 visited-set dedup as
     the online-dedup precedent."""
-    import shutil
-    import tempfile
-
-    root = tempfile.mkdtemp(prefix="stream_neardup_")
-    try:
-        stream = _docs_trisected(spark, sf_dir, root)
-        sink = near_dup_sink(spark, f"{root}/mh_idx", f"{root}/pairs")
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{root}/ckpt")
-            .start()
-        )
-        _drain(q)
-        out = (
-            spark.read.parquet(f"{root}/pairs")
-            # at-least-once consumers dedup on the pair key (docstring
-            # contract of the sink); a clean replay has no dups, but the
-            # snapshot honors the consumer protocol
-            .dropDuplicates(["doc_a", "doc_b"])
-            .localCheckpoint()  # materialize before the tempdir vanishes
-        )
-        return out.orderBy("doc_a", "doc_b")
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
+    return _replay(
+        spark, "stream_neardup_",
+        docs.withColumn("__b", (F.col("doc_id") % 3).cast("int")),
+        sink=lambda root: near_dup_sink(spark, f"{root}/mh_idx", f"{root}/pairs"),
+        # at-least-once consumers dedup on the pair key (docstring
+        # contract of the sink); a clean replay has no dups, but the
+        # snapshot honors the consumer protocol
+        read=lambda root: spark.read.parquet(f"{root}/pairs").dropDuplicates(
+            ["doc_a", "doc_b"]
+        ),
+        order_by=["doc_a", "doc_b"],
+    )
 
 
 @_query("streaming_fingerprint_overlap_snapshot", oracle=None)
@@ -2174,30 +1905,18 @@ def streaming_fingerprint_overlap_snapshot(
     Scale shape: per trigger one index append + one stop-hash-pruned
     probe of the posting lists the batch actually touches; boilerplate
     fingerprints are dropped by the periodic rebuild's stop-hash cap."""
-    import shutil
-    import tempfile
-
-    root = tempfile.mkdtemp(prefix="stream_fpov_")
-    try:
-        stream = _docs_trisected(spark, sf_dir, root)
-        sink = fingerprint_overlap_sink(
+    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
+    return _replay(
+        spark, "stream_fpov_",
+        docs.withColumn("__b", (F.col("doc_id") % 3).cast("int")),
+        sink=lambda root: fingerprint_overlap_sink(
             spark, f"{root}/fp_idx", f"{root}/pairs", min_shared=5
-        )
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{root}/ckpt")
-            .start()
-        )
-        _drain(q)
-        out = (
-            spark.read.parquet(f"{root}/pairs")
-            .dropDuplicates(["doc_a", "doc_b"])
-            .localCheckpoint()  # materialize before the tempdir vanishes
-        )
-        return out.orderBy("doc_a", "doc_b")
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        ),
+        read=lambda root: spark.read.parquet(f"{root}/pairs").dropDuplicates(
+            ["doc_a", "doc_b"]
+        ),
+        order_by=["doc_a", "doc_b"],
+    )
 
 
 @_query("streaming_ann_ingest_snapshot", oracle=None)
@@ -2223,49 +1942,31 @@ def streaming_ann_ingest_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame
     partition); the probe reads nprobe/k of the index via literal
     PartitionFilters.  This is the standard 100 TB ANN serving cadence:
     cheap online appends, scheduled offline refits."""
-    import shutil
-    import tempfile
-
-    from data_integration_system_spark.catalog import table
     from data_integration_system_spark.operators.similarity import (
         _N_QUERIES,
         fit_ivf_centroids,
         query_ivf_index,
     )
 
-    root = tempfile.mkdtemp(prefix="stream_annin_")
-    try:
+    def sink(root: str):
         idx = f"{root}/ivf"
         fit_ivf_centroids(spark, sf_dir).write.mode("overwrite").parquet(
             f"{idx}/centroids"
         )
-        emb = table(spark, sf_dir, "embeddings")
-        corpus = emb.filter(F.col("vec_id") >= _N_QUERIES).select(
-            "vec_id", "embedding"
-        )
-        src = f"{root}/in"
-        _stage_batches(
-            corpus.withColumn("__b", (F.col("vec_id") % 3).cast("int")), src
-        )
-        stream = (
-            spark.readStream.schema(spark.read.parquet(src).schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        q = (
-            stream.writeStream.foreachBatch(ann_ingest_sink(spark, idx))
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{root}/ckpt")
-            .start()
-        )
-        _drain(q)
-        queries = emb.filter(F.col("vec_id") < _N_QUERIES).select(
-            F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe")
-        )
-        out = query_ivf_index(spark, idx, queries).localCheckpoint()
-        return out.orderBy("q_id", "rnk")
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        return ann_ingest_sink(spark, idx)
+
+    emb = table(spark, sf_dir, "embeddings")
+    corpus = emb.filter(F.col("vec_id") >= _N_QUERIES).select("vec_id", "embedding")
+    queries = emb.filter(F.col("vec_id") < _N_QUERIES).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe")
+    )
+    return _replay(
+        spark, "stream_annin_",
+        corpus.withColumn("__b", (F.col("vec_id") % 3).cast("int")),
+        sink=sink,
+        read=lambda root: query_ivf_index(spark, f"{root}/ivf", queries),
+        order_by=["q_id", "rnk"],
+    )
 
 
 @_query(
@@ -2334,65 +2035,26 @@ def streaming_sessionized_eviction_snapshot(
     the entire point of the production config.  Reference anchor:
     db/postgres_store.py:58-68 stale-job timeout reaper as watermark
     eviction."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import Window
-
-    from data_integration_system_spark.catalog import table
-
-    root = tempfile.mkdtemp(prefix="stream_sessev_")
-    try:
-        ev = table(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-        tercile = F.ntile(3).over(Window.orderBy("ts", "event_id"))
-        staged = ev.withColumn("b", tercile).localCheckpoint()
-        src = f"{root}/in"
-        _stage_batches(
-            staged.withColumn("__b", (F.col("b") - 1).cast("int")).drop(
-                "b", "event_id"
-            ),
-            src,
-        )
-        stream = (
-            spark.readStream.schema(spark.read.parquet(src).schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        sess = sessionized(stream, gap="30 minutes", watermark="1 hour")
-        ledger = f"{root}/ledger"
-
-        def land(batch: DataFrame, batch_id: int) -> None:
-            # repartition(1), NOT coalesce(1): the batch's plan still
-            # contains the stateful operator, and coalesce would narrow
-            # that stage to ONE task that walks all N state partitions
-            # serially (each paying its own state-store open + Python
-            # runner setup) — measured 47.2 s -> 5.4 s drain on the
-            # sf0.1 EWMA replay (r17).  The shuffle moves only the
-            # batch's tiny update rows.
-            batch.repartition(1).write.mode("overwrite").parquet(
-                f"{ledger}/batch_id={batch_id}"
-            )
-
-        q = (
-            sess.writeStream.foreachBatch(land)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{root}/ckpt")
-            .start()
-        )
-        _drain(q)
-        cutoff = spark.read.parquet(src).agg(
+    def closed_sessions(root: str) -> DataFrame:
+        cutoff = spark.read.parquet(f"{root}/in").agg(
             (F.max("ts") - F.expr("INTERVAL 65 MINUTES")).alias("c")
         ).head()["c"]
-        out = (
-            spark.read.option("basePath", ledger).parquet(ledger)
+        return (
+            _read_ledger(spark, root)
             .filter(F.col("session_end") <= F.lit(cutoff))
             .drop("batch_id")
-            .localCheckpoint()  # materialize before the tempdir vanishes
         )
-        return out.orderBy("user_id", "session_start")
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+
+    ev = table(spark, sf_dir, "events").select("event_id", "ts", "user_id")
+    return _replay(
+        spark, "stream_sessev_",
+        _terciles(ev, "event_id"),
+        sink=_ledger_sink,
+        plan=lambda stream: sessionized(stream, gap="30 minutes", watermark="1 hour"),
+        output_mode="append",
+        read=closed_sessions,
+        order_by=["user_id", "session_start"],
+    )
 
 
 def _demo_site_fetch():
@@ -2473,44 +2135,27 @@ def streaming_jobs_fold_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds + snapshot writes each, SF-independent — the fixture is
     LIMIT 8 at every scale); it prices the daemon's per-job overhead,
     not a data-scaling surface."""
-    import shutil
-    import tempfile
-
-    from data_integration_system_spark.catalog import table
     from data_integration_system_spark.pipeline.jobs import current_jobs
 
-    root = tempfile.mkdtemp(prefix="stream_jobsfold_")
-    try:
-        jobs_path = f"{root}/jobs_log"
-        o = table(spark, sf_dir, "orders").orderBy("o_orderkey").limit(8)
-        subs = o.select(
-            F.col("o_orderkey").cast("string").alias("job_id"),
-            F.concat(
-                F.lit("https://ex.com/p"),
-                (F.col("o_orderkey") % 4).cast("string"),
-            ).alias("start_url"),
-            F.lit("ex.com").alias("root_domain"),
-            F.lit(_JOBS_FOLD_CONFIG).alias("config"),
-            F.lit("PENDING").alias("status"),
-            F.lit("").alias("error"),
-            F.col("o_orderdate").alias("created_at"),
-        ).localCheckpoint()
-        _stage_batches(
-            subs.withColumn(
-                "__b", F.pmod(F.col("job_id").cast("long"), F.lit(3)).cast("int")
-            ),
-            jobs_path,
-        )
-        q = job_worker_stream(
-            spark,
-            jobs_path,
-            f"{root}/out",
-            fetch_fn=_demo_site_fetch(),
-            trigger={"availableNow": True},
-            stream_options={"maxFilesPerTrigger": "1"},
-        )
-        _drain(q)
-        out = current_jobs(spark, jobs_path).localCheckpoint()
-        return out.orderBy("job_id")
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    o = table(spark, sf_dir, "orders").orderBy("o_orderkey").limit(8)
+    key = F.col("o_orderkey")
+    subs = o.select(
+        key.cast("string").alias("job_id"),
+        F.format_string("https://ex.com/p%d", key % 4).alias("start_url"),
+        F.lit("ex.com").alias("root_domain"),
+        F.lit(_JOBS_FOLD_CONFIG).alias("config"),
+        F.lit("PENDING").alias("status"),
+        F.lit("").alias("error"),
+        F.col("o_orderdate").alias("created_at"),
+        F.pmod(key, F.lit(3)).cast("int").alias("__b"),
+    )
+    return _replay(
+        spark, "stream_jobsfold_",
+        subs,
+        start=lambda root: job_worker_stream(
+            spark, f"{root}/in", f"{root}/out", fetch_fn=_demo_site_fetch(),
+            trigger={"availableNow": True}, stream_options={"maxFilesPerTrigger": "1"},
+        ),
+        read=lambda root: current_jobs(spark, f"{root}/in"),
+        order_by=["job_id"],
+    )
