@@ -1186,7 +1186,7 @@ def similarity_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         pq_encode(corpus, books), q_rows, books, _PQ_SHORTLIST_X * _TOP_K
     )
     return _finish_topk(
-        short, qdf, corpus.select("vec_id", "embedding"), _TOP_K
+        short, qdf, corpus.select("vec_id", "embedding"), _TOP_K, unique_ids=True
     ).orderBy("q_id", "rnk")
 
 
@@ -1324,12 +1324,15 @@ def _finish_topk(
     queries: DataFrame,
     vectors: DataFrame | None,
     top_k: int,
+    unique_ids: bool = False,
 ) -> DataFrame:
     """Shared tail of the PQ-family query paths: exact cosine re-rank of
     the shortlist against the original ``vectors`` (the production
     cadence — PQ prunes, the lake's originals verify), or pure-ADC
     ranking when no vectors relation is supplied.  The joins ship
-    |q|·shortlist rows; the query side broadcasts."""
+    |q|·shortlist rows; the query side broadcasts.  ``unique_ids``
+    says ``vectors`` has one row per vec_id (the catalog relation), so
+    the candidates need no dedup."""
     if vectors is None:
         w = Window.partitionBy("q_id").orderBy("adc", "vec_id")
         return (
@@ -1343,18 +1346,16 @@ def _finish_topk(
             )
         )
     qdf = queries.toDF("q_id", "qe")
-    cand = (
-        short.join(
-            vectors.select("vec_id", F.col("embedding").alias("ce")), "vec_id"
-        )
-        .join(F.broadcast(qdf), "q_id")
-        # a redelivered/re-appended id has DUPLICATE vectors rows; the
-        # join multiplies them into duplicate (q_id, vec_id) candidates
-        # that would each take a rank — dedup on the candidate set
-        # (|q|·shortlist rows, identical embeddings per id, so any
-        # surviving row is the right one)
-        .dropDuplicates(["q_id", "vec_id"])
-    )
+    cand = short.join(
+        vectors.select("vec_id", F.col("embedding").alias("ce")), "vec_id"
+    ).join(F.broadcast(qdf), "q_id")
+    if not unique_ids:
+        # a redelivered/re-appended id in an index vectors relation has
+        # DUPLICATE rows; the join multiplies them into duplicate
+        # (q_id, vec_id) candidates that would each take a rank — dedup
+        # on the candidate set (|q|·shortlist rows, identical embeddings
+        # per id, so any surviving row is the right one)
+        cand = cand.dropDuplicates(["q_id", "vec_id"])
     return _rank_topk(
         cand.select(
             "q_id", F.col("vec_id").alias("c_id"), cosine("qe", "ce").alias("sim")
@@ -2019,7 +2020,7 @@ def similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         codes, q_rows, books, _PQ_SHORTLIST_X * _TOP_K, probe_sets=sets
     )
     return _finish_topk(
-        short, qdf, corpus.select("vec_id", "embedding"), _TOP_K
+        short, qdf, corpus.select("vec_id", "embedding"), _TOP_K, unique_ids=True
     ).orderBy("q_id", "rnk")
 
 

@@ -681,57 +681,117 @@ def trending_tokens(
     )
 
 
+def _state_chain(
+    spark: SparkSession,
+    root: str,
+    schema,
+    batch_id: int | None = None,
+    step=None,
+    upto: int | None = None,
+) -> DataFrame | None:
+    """The batch-versioned chain behind every lake-resident streaming
+    state: ``{root}/batch_id=N`` holds state N, written once and
+    committed when its ``_SUCCESS`` marker lands.
+
+    With ``step``, a batch newer than the newest committed state
+    advances the chain: ``step(prior)`` (that state, or None on an empty
+    chain) is written to ``batch_id=N`` and every version but the prior
+    and N is deleted (a retry of N needs N-1 intact).  A batch at or
+    below the newest committed id is a redelivery and writes nothing.
+
+    Returns the newest committed state (the newest with id <= ``upto``
+    when given), read with its known ``schema``, or None."""
+    from data_integration_system_spark.pipeline.fsutil import (
+        child_names,
+        delete_tree,
+        exists,
+    )
+
+    def read(b: int) -> DataFrame:
+        return spark.read.schema(schema).parquet(f"{root}/batch_id={b}")
+
+    versions = sorted(
+        int(n.split("=", 1)[1])
+        for n in child_names(spark, root)
+        if n.startswith("batch_id=")
+    )
+    ids = [b for b in versions if exists(spark, f"{root}/batch_id={b}/_SUCCESS")]
+    if step is not None and (not ids or batch_id > ids[-1]):
+        keep = ids[-1:] + [batch_id]
+        step(read(ids[-1]) if ids else None).write.mode("overwrite").parquet(
+            f"{root}/batch_id={batch_id}"
+        )
+        for b in versions:
+            if b not in keep:
+                delete_tree(spark, f"{root}/batch_id={b}")
+        ids = keep
+    if upto is not None:
+        ids = [b for b in ids if b <= upto]
+    return read(ids[-1]) if ids else None
+
+
 def incremental_report_sink(
     spark: SparkSession,
     ledger_path: str,
     report_root: str,
     grain_fn,
     report_fn,
+    key_cols: list[str],
 ):
     """Generic incremental-report pattern: per micro-batch, reduce the
-    batch to a REDUCIBLE GRAIN (``grain_fn(batch) -> DataFrame``), land
-    it in a ledger, recompute the report from the whole ledger
-    (``report_fn(ledger) -> DataFrame``), and commit it as the next
+    batch to a REDUCIBLE GRAIN (``grain_fn(batch) -> DataFrame``), fold
+    it into the running grain, recompute the report from that
+    (``report_fn(grain) -> DataFrame``), and commit it as the next
     snapshot of ``report_root`` — readers see an atomically-swapped
     consistent report after every trigger (pipeline/snapshots pointer
     swap) and the raw stream is never rescanned.
 
-    Exactly-once ledger under at-least-once foreachBatch: each batch
-    writes its grain to a DETERMINISTIC ``batch_id=N`` directory with
-    overwrite, so a redelivered batch replaces its own rows instead of
-    double-counting (append-tolerant sinks like near_dup_sink don't need
-    this; COUNT ledgers do).  The grain must be re-aggregable —
-    ``report_fn`` must treat duplicate grain keys as their sum — which
-    also makes compaction trivial: rewrite the ledger as its summed
-    grain whenever batch-dirs accumulate.
+    The running grain is a ``_state_chain`` under ``{ledger_path}/state``:
+    state N is state N-1 plus batch N's grain, summed per ``key_cols``
+    (made distinct when no other column is left, as in retention's).  A
+    redelivered batch folds nothing in, so counts stay exactly-once; the
+    report is still rewritten from the newest state, which publishes it
+    after a crash between the two commits.  An empty batch folds to its
+    prior state.  A ledger in the earlier layout (one grain dir per
+    trigger under ``ledger_path``) is folded once into the first state.
 
-    Scale: the ledger is grain-sized (≪ stream volume for counting
-    grains), and per-trigger report cost is one aggregation over it.
-    Report snapshots are pruned to the newest ``keep_reports`` per
-    trigger (time-travel is the upsert sink's job, not a monitor's),
-    and ``compact_ledger`` folds accumulated batch-dirs back to one
-    summed grain when a long-lived stream's trigger count grows.
-    Returns a foreachBatch callable."""
+    Scale: per-trigger work is one fold and one report aggregation over
+    the grain-sized state, whatever the trigger count; report snapshots
+    are pruned to the newest ``_REPORT_KEEP`` (time-travel is the upsert
+    sink's job, not a monitor's).  Returns a foreachBatch callable."""
+    from data_integration_system_spark.pipeline.fsutil import child_names
     from data_integration_system_spark.pipeline.snapshots import (
         prune_snapshots,
         write_snapshot,
     )
 
     def apply(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
         grain = grain_fn(batch)
-        cols = grain.columns
-        grain.write.mode("overwrite").parquet(
-            f"{ledger_path}/batch_id={batch_id}"
+        vals = [c for c in grain.columns if c not in key_cols]
+
+        def fold(prior: DataFrame | None) -> DataFrame:
+            if prior is None:  # first state: fold in an earlier-layout ledger
+                # (its dir for this batch id holds this batch's own grain)
+                dirs = [
+                    f"{ledger_path}/{n}"
+                    for n in child_names(spark, ledger_path)
+                    if n.startswith("batch_id=")
+                    and int(n.split("=", 1)[1]) < batch_id
+                ]
+                if not dirs:
+                    return grain
+                prior = spark.read.schema(grain.schema).parquet(*dirs)
+            both = prior.unionByName(grain)
+            if not vals:
+                return both.distinct()
+            return both.groupBy(*key_cols).agg(
+                *[F.sum(c).cast(grain.schema[c].dataType).alias(c) for c in vals]
+            )
+
+        state = _state_chain(
+            spark, f"{ledger_path}/state", grain.schema, batch_id, fold
         )
-        ledger = (
-            spark.read.schema(grain.schema)  # known schema: no inference job
-            .option("basePath", ledger_path)
-            .parquet(ledger_path)
-            .select(*cols)  # drop the batch_id partition-discovery column
-        )
-        write_snapshot(report_fn(ledger), report_root)
+        write_snapshot(report_fn(state), report_root)
         prune_snapshots(spark, report_root, keep=_REPORT_KEEP)
 
     return apply
@@ -740,41 +800,6 @@ def incremental_report_sink(
 #: report snapshots kept per monitor root (current + one for readers
 #: mid-swap); monitors are dashboards, not time-travel stores
 _REPORT_KEEP = 2
-
-
-def compact_ledger(
-    spark: SparkSession, ledger_path: str, key_cols: list[str]
-) -> None:
-    """Fold an incremental_report_sink ledger's accumulated batch-dirs
-    into ONE summed-grain dir, preserving report results exactly (the
-    grain contract: duplicate keys behave as their sum, so summing them
-    eagerly is a no-op for every report_fn).
-
-    The compacted grain lands under a reserved ``batch_id=-1`` dir and
-    the per-batch dirs are deleted — a redelivered pre-compaction batch
-    would double-count, so run this only at a stream checkpoint
-    boundary (stopped stream, or a trigger known committed).  Numeric
-    columns other than ``key_cols`` are summed."""
-    ledger = spark.read.option("basePath", ledger_path).parquet(ledger_path)
-    val_cols = [
-        c for c in ledger.columns if c not in key_cols and c != "batch_id"
-    ]
-    old_ids = [
-        r.batch_id
-        for r in ledger.select("batch_id").distinct().collect()
-        if r.batch_id != -1
-    ]
-    summed = (
-        ledger.select(*key_cols, *val_cols)
-        .groupBy(*key_cols)
-        .agg(*[F.sum(c).cast("long").alias(c) for c in val_cols])
-        .localCheckpoint()  # materialize BEFORE deleting its input dirs
-    )
-    summed.write.mode("overwrite").parquet(f"{ledger_path}/batch_id=-1")
-    from data_integration_system_spark.pipeline.fsutil import delete_tree
-
-    for b in old_ids:
-        delete_tree(spark, f"{ledger_path}/batch_id={b}")
 
 
 def dup_rate_sink(
@@ -799,7 +824,7 @@ def dup_rate_sink(
         )
 
     return incremental_report_sink(
-        spark, ledger_path, report_root, grain, dup_rate_report
+        spark, ledger_path, report_root, grain, dup_rate_report, ["ch", "source"]
     )
 
 
@@ -821,11 +846,8 @@ def length_histogram_sink(
     )
 
     return incremental_report_sink(
-        spark,
-        ledger_path,
-        report_root,
-        length_histogram_grain,
-        length_histogram_report,
+        spark, ledger_path, report_root,
+        length_histogram_grain, length_histogram_report, ["bin"],
     )
 
 
@@ -856,7 +878,8 @@ def retention_sink(
     )
 
     return incremental_report_sink(
-        spark, ledger_path, report_root, retention_grain, retention_report
+        spark, ledger_path, report_root, retention_grain, retention_report,
+        ["user_id", "week"],
     )
 
 
@@ -872,21 +895,21 @@ def dq_sink(
     grain; the report re-sums the ledger per check and derives an
     integer violation rate — the live "is the ingest getting dirtier"
     dashboard, and the streaming twin of the batch `dq_orders_report`.
-    An incremental_report_sink instance — the count grain makes both
-    the exactly-once ledger and compact_ledger apply unchanged."""
+    An incremental_report_sink instance — the count grain makes the
+    exactly-once running-grain fold apply unchanged."""
     from data_integration_system_spark.pipeline.checks import run_checks
 
     def grain(batch: DataFrame) -> DataFrame:
         return run_checks(batch, checks)
 
     return incremental_report_sink(
-        spark, ledger_path, report_root, grain, dq_report
+        spark, ledger_path, report_root, grain, dq_report, ["check_name"]
     )
 
 
 def dq_report(ledger: DataFrame) -> DataFrame:
     """The rollup from a (possibly multi-batch) check-count grain:
-    per-check totals + integer violation rate."""
+    per-check totals + integer violation rate (NULL over zero rows)."""
     return (
         ledger.groupBy("check_name")
         .agg(
@@ -895,7 +918,7 @@ def dq_report(ledger: DataFrame) -> DataFrame:
         )
         .withColumn(
             "violation_rate_e6",
-            F.expr("n_violations * 1000000 div n_rows").cast("long"),
+            F.expr("n_violations * 1000000 div nullif(n_rows, 0)").cast("long"),
         )
         .orderBy("check_name")
     )
@@ -904,16 +927,16 @@ def dq_report(ledger: DataFrame) -> DataFrame:
 def migrate_ledger_column(
     spark: SparkSession, ledger_path: str, col: str, to_type: str
 ) -> int:
-    """Rewrite every batch dir of an incremental_report_sink ledger with
-    ``col`` cast to ``to_type``; returns the number of dirs rewritten.
+    """Rewrite every batch dir of an earlier-layout incremental_report_sink
+    ledger (one ``batch_id=N`` grain dir per trigger) with ``col`` cast
+    to ``to_type``; returns the number of dirs rewritten.
 
     The upgrade path for grain-schema type changes (concretely: the
     retention grain's ``week`` DATE→TIMESTAMP move in round 5): a mixed
-    ledger fails parquet schema merge on the next trigger, and
-    compact_ledger can't run because IT reads the mixed ledger too.
-    Per-dir rewrite sidesteps the merge: each batch dir is
+    ledger fails the read that folds it into the first running-grain
+    state.  Per-dir rewrite sidesteps the merge: each batch dir is
     self-consistent, so read→cast→overwrite works dir by dir.  Run at a
-    stream checkpoint boundary (stopped stream), like compact_ledger."""
+    stream checkpoint boundary (stopped stream)."""
     from data_integration_system_spark.pipeline.fsutil import hadoop_path
 
     p, fs = hadoop_path(spark, ledger_path)
@@ -1038,59 +1061,32 @@ def ewma_jvm_step(batch: DataFrame, prior: DataFrame | None) -> DataFrame:
 
 def ewma_jvm_sink(spark: SparkSession, state_root: str):
     """foreachBatch sink maintaining the per-user EWMA state as a
-    batch_id-versioned parquet supersede chain: batch N reads the state
-    at the largest batch_id < N, folds itself in via ewma_jvm_step, and
-    overwrites ``{state_root}/batch_id=N`` — so a redelivered batch
-    recomputes from the SAME prior and replaces its own output
-    (deterministic, the exactly-once discipline incremental_report_sink
-    established for COUNT ledgers, applied to a supersede state).  The
-    newest batch_id IS the current state; `read_ewma_jvm_state` resolves
-    it.  State size is one row per user — bounded by key cardinality,
-    never stream length — and old versions are pruned to the prior one
-    (retry needs N-1 intact while N rewrites).
+    ``_state_chain`` under ``state_root``: batch N folds itself into the
+    newest committed state via ewma_jvm_step and commits
+    ``{state_root}/batch_id=N``; a redelivered batch at or below the
+    committed id writes nothing (the exactly-once discipline the report
+    sinks share, applied to a supersede state).  The newest batch_id IS
+    the current state; `read_ewma_jvm_state` resolves it.  State size
+    is one row per user — bounded by key cardinality, never stream
+    length — and old versions are pruned to the prior one.  An empty
+    batch carries the prior state forward.
 
     Contrast with ewma_state_stream: same recurrence, same ordering
     contract (per-key in-order delivery across batches), but state
     lives in the lake instead of the HDFS state store and the fold
     never leaves the JVM.  Reference anchor: workers/worker_daemon.py
     poll loop + db/postgres_store.py:126-184 upsert cadence."""
-    from data_integration_system_spark.operators.groupops import ewma_v_e2_col
-    from data_integration_system_spark.pipeline.fsutil import (
-        child_names,
-        delete_tree,
+    from data_integration_system_spark.operators.groupops import (
+        _EWMA_SCHEMA,
+        ewma_v_e2_col,
     )
 
-    def _state_ids() -> list[int]:
-        out = []
-        for name in child_names(spark, state_root):
-            if name.startswith("batch_id="):
-                out.append(int(name.split("=", 1)[1]))
-        return sorted(out)
-
     def apply(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        rows = batch.select(
-            "user_id",
-            "ts",
-            "event_id",
-            ewma_v_e2_col(),
+        rows = batch.select("user_id", "ts", "event_id", ewma_v_e2_col())
+        _state_chain(
+            spark, state_root, _EWMA_SCHEMA, batch_id,
+            lambda prior: ewma_jvm_step(rows, prior).localCheckpoint(),
         )
-        prior_ids = [b for b in _state_ids() if b < batch_id]
-        prior = (
-            spark.read.parquet(f"{state_root}/batch_id={prior_ids[-1]}")
-            if prior_ids
-            else None
-        )
-        new = ewma_jvm_step(rows, prior)
-        # materialize before overwriting a dir the plan may be reading
-        # (a retry of batch N reads nothing from its own dir, but the
-        # checkpoint barrier doesn't guarantee that for exotic retries)
-        new.localCheckpoint().write.mode("overwrite").parquet(
-            f"{state_root}/batch_id={batch_id}"
-        )
-        for b in prior_ids[:-1]:  # keep the direct prior for retry of N
-            delete_tree(spark, f"{state_root}/batch_id={b}")
 
     return apply
 
@@ -1098,8 +1094,8 @@ def ewma_jvm_sink(spark: SparkSession, state_root: str):
 def read_ewma_jvm_state(
     spark: SparkSession, state_root: str, checkpoint_dir: str | None = None
 ) -> DataFrame:
-    """Current state = the newest batch_id version (the supersede
-    grain's resolution rule).
+    """Current state = the newest committed batch_id version (the
+    supersede grain's resolution rule, via ``_state_chain``).
 
     Pass ``checkpoint_dir`` (the stream's checkpointLocation) to read
     COMMITTED state: ewma_jvm_sink writes state N before the streaming
@@ -1107,33 +1103,25 @@ def read_ewma_jvm_state(
     a window that persists from a crash there until the retry — the
     newest directory is ahead of the committed stream position.  With
     the checkpoint, the reader resolves the largest state id <= the
-    last batch id in ``{checkpoint_dir}/commits`` (the retry rewrites
-    state N deterministically from prior N-1, so a committed-id read is
-    stable across the crash).  Without it, the newest-directory read is
-    read-uncommitted: self-healing on retry, but a reader in the crash
-    window observes a state version the stream has not committed."""
+    last batch id in ``{checkpoint_dir}/commits`` (the chain keeps state
+    N-1 while N is newest, so a committed-id read is stable across the
+    crash).  Without it, the newest-state read is read-uncommitted:
+    a reader in the crash window observes a state version the stream
+    has not committed."""
+    from data_integration_system_spark.operators.groupops import _EWMA_SCHEMA
     from data_integration_system_spark.pipeline.fsutil import child_names
 
-    ids = sorted(
-        int(n.split("=", 1)[1])
-        for n in child_names(spark, state_root)
-        if n.startswith("batch_id=")
-    )
-    if not ids:
-        raise FileNotFoundError(f"no state versions under {state_root}")
+    upto = None
     if checkpoint_dir is not None:
-        committed = [
-            int(n)
-            for n in child_names(spark, f"{checkpoint_dir}/commits")
-            if n.isdigit()
-        ]
-        ids = [b for b in ids if committed and b <= max(committed)]
-        if not ids:
-            raise FileNotFoundError(
-                f"no state version under {state_root} is committed by "
-                f"{checkpoint_dir}/commits"
-            )
-    return spark.read.parquet(f"{state_root}/batch_id={ids[-1]}")
+        commits = child_names(spark, f"{checkpoint_dir}/commits")
+        upto = max((int(n) for n in commits if n.isdigit()), default=-1)
+    state = _state_chain(spark, state_root, _EWMA_SCHEMA, upto=upto)
+    if state is None:
+        raise FileNotFoundError(
+            f"no state version under {state_root}"
+            + ("" if upto is None else f" is committed by {checkpoint_dir}/commits")
+        )
+    return state
 
 
 # --- driver-facing streaming queries --------------------------------------
@@ -1247,18 +1235,13 @@ def _ledger_sink(root: str):
     return land
 
 
-def _read_ledger(spark: SparkSession, root: str) -> DataFrame:
-    """Every row ``_ledger_sink`` landed, with its ``batch_id``."""
-    ledger = f"{root}/ledger"
-    return spark.read.option("basePath", ledger).parquet(ledger)
-
-
 def _replay(
     spark: SparkSession,
     prefix: str,
     staged: DataFrame,
-    read,
     order_by: list[str],
+    read=None,
+    ledger=None,
     sink=None,
     plan=None,
     streams: int = 1,
@@ -1274,11 +1257,16 @@ def _replay(
 
     ``plan(*reads)`` maps ``streams`` reads of the batches (two for a
     stream-stream self join) to the streamed plan.  The stream schema is
-    the staged frame's own, so no job infers it from the files.  A query
-    started by a package entry point passes ``start(root)`` instead of
+    the staged frame's own, so no job infers it from the files.  With
+    ``ledger`` instead of ``sink``/``read``, each batch's rows land in
+    ``{root}/ledger/batch_id=N`` and the snapshot is ``ledger(rows)``
+    over every landed row and its ``batch_id``.  A query started by a
+    package entry point passes ``start(root)`` instead of
     ``sink``/``plan``; it must drain ``{root}/in`` with availableNow."""
     import shutil
     import tempfile
+
+    from pyspark.sql.types import IntegerType, StructField, StructType
 
     root = tempfile.mkdtemp(prefix=prefix)
     try:
@@ -1294,7 +1282,22 @@ def _replay(
                 .parquet(src)
                 for _ in range(streams)
             ]
-            writer = (plan(*reads) if plan else reads[0]).writeStream
+            streamed = plan(*reads) if plan else reads[0]
+            if ledger is not None:
+                sink = _ledger_sink
+                landed = StructType(
+                    [*streamed.schema.fields, StructField("batch_id", IntegerType())]
+                )
+
+                def read(root: str) -> DataFrame:
+                    # the landed schema is known: no inference job
+                    return ledger(
+                        spark.read.schema(landed)
+                        .option("basePath", f"{root}/ledger")
+                        .parquet(f"{root}/ledger")
+                    )
+
+            writer = streamed.writeStream
             if output_mode:
                 writer = writer.outputMode(output_mode)
             q = (
@@ -1334,8 +1337,8 @@ def streaming_dup_rate_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     file source in three deterministic micro-batches (maxFilesPerTrigger
     =1, availableNow), each trigger lands its (ch, source, n_src) grain
     in the exactly-once ledger and snapshot-swaps the report, and the
-    FINAL snapshot is returned.  Because the report re-aggregates the
-    whole ledger every trigger, batch boundaries cannot change the
+    FINAL snapshot is returned.  Because each trigger sums its grain
+    into the running grain, batch boundaries cannot change the
     final answer — the Kappa parity that makes the batch
     dup_rate_by_source SQL the exact oracle for a streaming execution.
 
@@ -1343,10 +1346,10 @@ def streaming_dup_rate_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream reduces each micro-batch to the (ch, source) grain map-side,
     the ledger stays grain-sized (≪ stream volume), and per-trigger
     report cost is one aggregation over the ledger, independent of
-    total stream history length (compact_ledger folds batch-dirs when
-    trigger counts grow).  Reference anchor: workers/worker_daemon.py
-    poll loop + db/postgres_store.py:126-184 upsert cadence, re-expressed
-    as foreachBatch over an event stream."""
+    total stream history length (the ledger is one running grain).
+    Reference anchor: workers/worker_daemon.py poll loop +
+    db/postgres_store.py:126-184 upsert cadence, re-expressed as
+    foreachBatch over an event stream."""
     docs = table(spark, sf_dir, "documents").select("doc_id", "source", "text")
     return _replay(
         spark, "stream_duprate_",
@@ -1406,10 +1409,9 @@ def streaming_user_ewma_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _replay(
         spark, "stream_ewma_",
         _terciles(ev),
-        sink=_ledger_sink,
         plan=ewma_state_stream,
         output_mode="update",
-        read=lambda root: _read_ledger(spark, root).groupBy("user_id").agg(
+        ledger=lambda led: led.groupBy("user_id").agg(
             F.max("n_events").alias("n_events"),
             F.max_by("ewma_e2", "n_events").alias("ewma_e2"),
         ),
@@ -1520,9 +1522,9 @@ def streaming_quality_monitor_snapshot(spark: SparkSession, sf_dir: str) -> Data
 
     Scale shape: per trigger, one scan of the batch + a single-row
     aggregate (N checks = N conditional sums in one pass); the ledger
-    stays check-count-sized (4 rows per batch) regardless of stream
-    volume, and the per-trigger report cost is an aggregation over that
-    tiny ledger.  Reference anchor: db/postgres_store.py per-row
+    stays check-count-sized (4 rows) regardless of stream volume, and
+    the per-trigger report cost is an aggregation over that tiny
+    ledger.  Reference anchor: db/postgres_store.py per-row
     try/except validation + api/main.py pydantic request models,
     re-expressed as a gateable table-level monitor on a stream."""
     from data_integration_system_spark.pipeline import checks as dq
@@ -1576,7 +1578,7 @@ def streaming_length_profile_snapshot(spark: SparkSession, sf_dir: str) -> DataF
 
     Scale shape: per trigger one scan of the batch into a <=13-row
     grain (bin computed in-scan: integer div + least, no UDF); the
-    ledger stays bins x batches tiny regardless of stream volume.
+    ledger stays one <=13-row grain regardless of stream volume.
     Reference anchor: workers/worker_daemon.py poll cadence, as a
     corpus-profile monitor."""
     docs = table(spark, sf_dir, "documents").select("doc_id", "n_chars")
@@ -1688,11 +1690,9 @@ def streaming_tumbling_counts_snapshot(spark: SparkSession, sf_dir: str) -> Data
     return _replay(
         spark, "stream_tumble_",
         _terciles(ev, "event_id"),
-        sink=_ledger_sink,
         plan=windowed,
         output_mode="update",
-        read=lambda root: _read_ledger(spark, root)
-        .groupBy("bucket_start")
+        ledger=lambda led: led.groupBy("bucket_start")
         .agg(F.max_by(F.struct("n_events", "sum_value"), "batch_id").alias("s"))
         .select(
             "bucket_start",
@@ -1761,8 +1761,7 @@ def streaming_session_windows_snapshot(spark: SparkSession, sf_dir: str) -> Data
             )
         )
 
-    def last_emission(root: str) -> DataFrame:
-        led = _read_ledger(spark, root)
+    def last_emission(led: DataFrame) -> DataFrame:
         last = led.agg(F.max("batch_id")).head()[0]
         return led.filter(F.col("batch_id") == last).drop("batch_id")
 
@@ -1770,10 +1769,9 @@ def streaming_session_windows_snapshot(spark: SparkSession, sf_dir: str) -> Data
     return _replay(
         spark, "stream_sess_",
         _terciles(ev, "event_id"),
-        sink=_ledger_sink,
         plan=sessions,
         output_mode="complete",
-        read=last_emission,
+        ledger=last_emission,
         order_by=["user_id", "session_start"],
     )
 
@@ -1833,10 +1831,9 @@ def streaming_funnel_pairs_snapshot(spark: SparkSession, sf_dir: str) -> DataFra
     return _replay(
         spark, "stream_ssjoin_",
         _terciles(ev.select("event_id", "ts", "user_id", "event_type"), "event_id"),
-        sink=_ledger_sink,
         plan=joined,
         streams=2,
-        read=lambda root: _read_ledger(spark, root).select(
+        ledger=lambda led: led.select(
             F.col("s_user").alias("user_id"),
             F.col("s_ts").alias("signup_ts"),
             F.col("p_ts").alias("purchase_ts"),
@@ -1878,9 +1875,11 @@ def streaming_near_dup_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         # at-least-once consumers dedup on the pair key (docstring
         # contract of the sink); a clean replay has no dups, but the
         # snapshot honors the consumer protocol
-        read=lambda root: spark.read.parquet(f"{root}/pairs").dropDuplicates(
-            ["doc_a", "doc_b"]
-        ),
+        read=lambda root: spark.read.schema(
+            "doc_a bigint, doc_b bigint, jaccard double"
+        )
+        .parquet(f"{root}/pairs")
+        .dropDuplicates(["doc_a", "doc_b"]),
         order_by=["doc_a", "doc_b"],
     )
 
@@ -1912,9 +1911,11 @@ def streaming_fingerprint_overlap_snapshot(
         sink=lambda root: fingerprint_overlap_sink(
             spark, f"{root}/fp_idx", f"{root}/pairs", min_shared=5
         ),
-        read=lambda root: spark.read.parquet(f"{root}/pairs").dropDuplicates(
-            ["doc_a", "doc_b"]
-        ),
+        read=lambda root: spark.read.schema(
+            "doc_a bigint, doc_b bigint, shared_fps bigint"
+        )
+        .parquet(f"{root}/pairs")
+        .dropDuplicates(["doc_a", "doc_b"]),
         order_by=["doc_a", "doc_b"],
     )
 
@@ -2035,24 +2036,20 @@ def streaming_sessionized_eviction_snapshot(
     the entire point of the production config.  Reference anchor:
     db/postgres_store.py:58-68 stale-job timeout reaper as watermark
     eviction."""
-    def closed_sessions(root: str) -> DataFrame:
-        cutoff = spark.read.parquet(f"{root}/in").agg(
+    ev = table(spark, sf_dir, "events").select("event_id", "ts", "user_id")
+
+    def closed_sessions(led: DataFrame) -> DataFrame:
+        cutoff = ev.agg(
             (F.max("ts") - F.expr("INTERVAL 65 MINUTES")).alias("c")
         ).head()["c"]
-        return (
-            _read_ledger(spark, root)
-            .filter(F.col("session_end") <= F.lit(cutoff))
-            .drop("batch_id")
-        )
+        return led.filter(F.col("session_end") <= F.lit(cutoff)).drop("batch_id")
 
-    ev = table(spark, sf_dir, "events").select("event_id", "ts", "user_id")
     return _replay(
         spark, "stream_sessev_",
         _terciles(ev, "event_id"),
-        sink=_ledger_sink,
         plan=lambda stream: sessionized(stream, gap="30 minutes", watermark="1 hour"),
         output_mode="append",
-        read=closed_sessions,
+        ledger=closed_sessions,
         order_by=["user_id", "session_start"],
     )
 

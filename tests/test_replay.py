@@ -78,3 +78,19 @@ def test_snapshot_replay_warm_job_count(spark, name, bound):
     query(spark, SF).collect()
     after = _probe_job_id(spark, f"replay-jobs-after-{name}")
     assert after - before - 1 <= bound
+
+
+@pytest.mark.parametrize(
+    "name,bound",
+    [
+        # the ledger is read with the streamed plan's schema
+        ("streaming_funnel_pairs_snapshot", 12),
+        # ... and the eviction cutoff is taken from the fixture frame,
+        # not from a second inferred read of the staged batches
+        ("streaming_sessionized_eviction_snapshot", 14),
+    ],
+)
+def test_ledger_replay_warm_job_count(spark, name, bound):
+    """The ledger harnesses read back what their sink landed with no
+    schema-inference job (counted as in the test above)."""
+    test_snapshot_replay_warm_job_count(spark, name, bound)

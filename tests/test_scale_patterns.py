@@ -2028,6 +2028,29 @@ def test_ivf_tier_driver_probes_match_crossjoin_ranking_and_job_budget(
         assert n_jobs <= 9, (n_q, n_jobs)
 
 
+def test_similarity_pq_topk_catalog_rerank_job_budget(spark):
+    """similarity_pq_topk re-ranks against the catalog embeddings, which
+    hold one row per vec_id, so its candidates take no dedup shuffle: a
+    warm run stays within 13 Spark jobs (14 with the dedup) and still
+    ranks each query's top-k over distinct ids."""
+    from data_integration_system_spark.operators.similarity import (
+        _N_QUERIES,
+        _TOP_K,
+        similarity_pq_topk,
+    )
+
+    sc = spark.sparkContext
+    similarity_pq_topk(spark, SF).collect()  # warm plan caches
+    sc.setJobGroup("pq-topk", "pq-topk")
+    try:
+        rows = similarity_pq_topk(spark, SF).collect()
+    finally:
+        sc.setJobGroup("", "")
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("pq-topk"))
+    assert len({(r.q_id, r.c_id) for r in rows}) == len(rows) == _N_QUERIES * _TOP_K
+    assert n_jobs <= 13, n_jobs
+
+
 def test_build_ivfpq_index_names_the_four_modes(spark, tmp_path):
     """One code-mode knob with four values: the removed composition
     (and any other value) is refused before any fit runs."""

@@ -692,15 +692,12 @@ def test_length_histogram_sink_matches_batch(spark, tmp_path):
 
 def test_report_sink_prunes_and_compacts(spark, tmp_path):
     """Monitor housekeeping: report snapshots stay bounded at 2 per
-    root however many triggers ran, and compact_ledger folds the
-    batch-dirs to one summed grain WITHOUT changing the next report."""
+    root however many triggers ran, the running grain keeps only its
+    prior and newest states, and the next report keeps every count."""
     import os
 
     from data_integration_system_spark.pipeline.snapshots import read_current
-    from data_integration_system_spark.streaming.jobs import (
-        compact_ledger,
-        dup_rate_sink,
-    )
+    from data_integration_system_spark.streaming.jobs import dup_rate_sink
 
     ledger = str(tmp_path / "ledger")
     report_root = str(tmp_path / "report")
@@ -718,12 +715,11 @@ def test_report_sink_prunes_and_compacts(spark, tmp_path):
     assert len(versions) == 2  # pruned every trigger, 3 triggers ran
 
     before = sorted(tuple(r) for r in read_current(spark, report_root).collect())
-    compact_ledger(spark, ledger, ["ch", "source"])
-    dirs = [d for d in os.listdir(ledger) if d.startswith("batch_id=")]
-    assert dirs == ["batch_id=-1"]
+    dirs = sorted(d for d in os.listdir(f"{ledger}/state") if d.startswith("batch_id="))
+    assert dirs == ["batch_id=1", "batch_id=2"]
 
-    # the next trigger's report over the compacted ledger is unchanged
-    # in the already-seen keys and counts
+    # the next trigger's report over the running grain is unchanged in
+    # the already-seen keys and counts
     sink(spark.createDataFrame([("s3", "new src")], "source string, text string"), 99)
     after = {r.source: tuple(r) for r in read_current(spark, report_root).collect()}
     for row in before:
